@@ -78,15 +78,6 @@ FUZZY_MAP: dict[str, list[str]] = {
     "size": ["尺", "size", "规", "規"],
 }
 
-# SmartFieldMapping.php:67-73 — anchored currency prefixes
-CURRENCY_PATTERNS: dict[str, re.Pattern] = {
-    "CNY": compile_php(r"^(¥|￥|rmb|cny|人民币|人民幣)", "iu"),
-    "HKD": compile_php(r"^(hk\$|hkd|港币|港幣)", "iu"),
-    "USD": compile_php(r"^(\$|usd|us\$|美元|美金)", "iu"),
-    "EUR": compile_php(r"^(€|eur|欧元|歐元)", "iu"),
-    "GBP": compile_php(r"^(£|gbp|英镑|英鎊)", "iu"),
-}
-
 _BRACKET_RE = re.compile(r"^[\(\[\{]|[\)\]\}]$")
 
 
@@ -194,19 +185,3 @@ def infer_column_type(rows: list[list], col_index: int) -> str | None:
     if avg_chars > 10 and numeric_ratio < 0.2:
         return "name"
     return None
-
-
-_AMOUNT_RE = compile_php(r"([0-9][0-9,]*\.?\d*)", "")
-
-
-def extract_currency(text: str) -> dict:
-    """SmartFieldMapping::extractCurrency (:249-265)."""
-    result = {"currency": None, "amount": None}
-    for currency, pattern in CURRENCY_PATTERNS.items():
-        if pattern.search(text):
-            result["currency"] = currency
-            break
-    m = _AMOUNT_RE.search(text)
-    if m:
-        result["amount"] = php_float(m.group(1).replace(",", ""))
-    return result

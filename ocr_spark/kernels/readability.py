@@ -29,7 +29,8 @@ import re
 from html.parser import HTMLParser
 
 from .php import PHP_TRIM_CHARS, collapse_ws, php_trim
-from .tables import _FAST_TAG, _FAST_UNSAFE, _clean_attrs
+from .tables import (_FAST_TAG, _FAST_UNSAFE, _clean_attrs,
+                     _tag_needs_slow_path)
 
 _POSITIVE_RE = re.compile(
     r"article|body|content|entry|main|page|post|story|text|blog", re.I)
@@ -269,7 +270,8 @@ def _fast_tree_feed(b: _TreeBuilder, html: str) -> bool:
     html.parser (the tables.py fast-path pattern, tables.py:133-177),
     with direct raw offsets for text runs instead of getpos() line/col
     arithmetic. Returns False — before touching the builder — when any
-    '<' is not a clean tag, so the caller falls back to html.parser;
+    '<' is not a clean tag or any tag fails tables._tag_needs_slow_path,
+    so the caller falls back to html.parser;
     admitted inputs produce identical trees (differential-fuzzed in
     tests/test_properties.py). `<x/>` start-end tags are skipped to
     mirror the builder's no-op handle_startendtag."""
@@ -286,6 +288,8 @@ def _fast_tree_feed(b: _TreeBuilder, html: str) -> bool:
     parsed = []
     for m in matches:
         closing, _name, attrs_s, selfclose = m.groups()
+        if attrs_s and _tag_needs_slow_path(closing, attrs_s, selfclose):
+            return False
         attrs = []
         if not closing and not selfclose and attrs_s:
             attrs = _clean_attrs(attrs_s)

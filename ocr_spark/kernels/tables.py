@@ -171,10 +171,33 @@ def _clean_attrs(attrs_s: str):
     return attrs
 
 
+# a self-closing tag is one only when its attrs END in a bare name or a
+# quoted value: html.parser glues the '/' into a trailing unquoted value
+# or dangling '=' (`<td colspan=2/>` is a START tag with colspan='2/')
+_SELFCLOSE_TAIL = re.compile(
+    r"""(?:^|\s)[^\s"'=/>]+(?:\s*=\s*(?:"[^"]*"|'[^']*'))?$""")
+
+
+def _tag_needs_slow_path(closing: str, attrs_s: str, selfclose: str) -> bool:
+    """True when html.parser could tokenize a _FAST_TAG match differently
+    from the fast path, so the whole document must take the slow path
+    (both fast feeds — tables and readability — ask this one predicate):
+    - an end tag with attrs: html.parser's tolerant end-tag branch cuts
+      at the FIRST '>', even inside quotes (`</p a="x>y">` re-emits
+      'y">' as data) where _FAST_TAG consumes the quoted '>' whole;
+    - a self-closing tag whose attrs end in an unquoted value or a
+      dangling '=' (the '/' becomes part of the value)."""
+    if closing:
+        return bool(attrs_s.strip())
+    return bool(selfclose and attrs_s.strip()
+                and not _SELFCLOSE_TAIL.search(attrs_s))
+
+
 def _fast_feed(p: _TableHTMLParser, html: str) -> bool:
     """Tokenize with regex and replay through p's handlers. Returns False
-    (caller falls back to html.parser) if any '<' is not a clean tag or
-    any cell tag's attrs are not cleanly tokenizable (_clean_attrs)."""
+    (caller falls back to html.parser) if any '<' is not a clean tag,
+    any tag fails _tag_needs_slow_path, or any cell tag's attrs are not
+    cleanly tokenizable (_clean_attrs)."""
     pos = 0
     matches = list(_FAST_TAG.finditer(html))
     # every match consumes exactly one leading '<' (interior '<' can only
@@ -188,6 +211,8 @@ def _fast_feed(p: _TableHTMLParser, html: str) -> bool:
             p.handle_data(html[pos:m.start()])
         pos = m.end()
         closing, name, attrs_s, selfclose = m.groups()
+        if attrs_s and _tag_needs_slow_path(closing, attrs_s, selfclose):
+            return False
         name = name.lower()
         if closing:
             p.handle_endtag(name)

@@ -2608,37 +2608,12 @@ def _det_plane_coeffs(tag: str, n_planes: int, dim: int):
             for p in range(n_planes)]
 
 
-def _plane_dot(vec, coeffs):
-    """Strictly left-to-right dot-product chain vec[0]*c0 + vec[1]*c1 + …
-    — same fp association as the SQL `+` chain the oracle generator
-    emits, so sign bits agree bit-for-bit between engines."""
-    d = None
-    for j, c in enumerate(coeffs):
-        term = vec[j] * F.lit(c)
-        d = term if d is None else d + term
-    return d
-
-
 def _plane_dot_sql(expr: str, coeffs) -> str:
     return " + ".join(f"{expr}[{j + 1}] * {c!r}"
                       for j, c in enumerate(coeffs))
 
 
 _SIM_BUCKET_PLANES = _det_plane_coeffs("simlsh", N_HYPERPLANES, EMB_DIM)
-
-
-def _hyperplane_bucket(vec, planes):
-    """Random-hyperplane LSH bucket id: sign bit of the dot product
-    against each plane, packed little-endian. Same-direction vectors (any
-    positive scaling) land in the same bucket, which is what cosine
-    blocking needs."""
-    bits = [F.when(_plane_dot(vec, coeffs) >= 0, 1).otherwise(0)
-            for coeffs in planes]
-    bucket = None
-    for i, b in enumerate(bits):
-        term = b * (2 ** i)
-        bucket = term if bucket is None else bucket + term
-    return bucket
 
 
 def _lsh_bucket_stage(planes):

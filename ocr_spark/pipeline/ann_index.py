@@ -9,15 +9,10 @@ materializes it: this module writes the coded frame partitioned BY THE
 BUCKET CODE, which turns every multiprobe query into a partition-pruned
 scan — a query probing 22 of 64 codes reads 22/64 of the files and the
 planner proves it (PartitionFilters, pinned in tests/test_ann_index.py).
-
-Atomicity contract (same as extract.py's manifest-after-data): the
-manifest JSON is written only after the parquet commit succeeds, and
-readers treat a missing manifest as "no index" — a crashed build leaves
-orphan files, never a readable-but-partial index.
+Commits follow pipeline/artifact.py's atomicity contract.
 """
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -26,6 +21,7 @@ from pyspark.sql.window import Window
 
 from ..operators.corpus import (N_LSH_MULTIPROBE, N_LSH_TOPK_PLANES, _dot,
                                 lsh_code_frame)
+from . import artifact
 
 INDEX_VERSION = 1
 MAX_QUERY_BATCH = 10_000  # driver-side probe-code union stays bounded
@@ -40,12 +36,7 @@ def build_lsh_index(spark: SparkSession, emb: DataFrame,
     index partitioned by bucket code. Returns the manifest."""
     t0 = time.time()
     data_dir = os.path.join(output_dir, _DATA)
-    # invalidate any PRIOR index before the overwrite starts writing: a
-    # crash mid-rebuild must not leave the old manifest pointing at
-    # half-rewritten buckets (same contract as dedup_index/tokenizer)
-    stale = os.path.join(output_dir, _MANIFEST)
-    if os.path.exists(stale):
-        os.remove(stale)
+    artifact.invalidate(output_dir, _MANIFEST)
     coded = lsh_code_frame(emb)
     (coded.write.mode("overwrite").partitionBy("code").parquet(data_dir))
     n = spark.read.parquet(data_dir).count()
@@ -57,23 +48,14 @@ def build_lsh_index(spark: SparkSession, emb: DataFrame,
         "built_unix": int(time.time()),
         "build_wall_ms": int((time.time() - t0) * 1000),
     }
-    # manifest AFTER data: a crashed build is invisible to readers
-    with open(os.path.join(output_dir, _MANIFEST), "w") as f:
-        json.dump(manifest, f, sort_keys=True)
+    artifact.commit(output_dir, manifest, _MANIFEST)
     return manifest
 
 
 def read_manifest(index_dir: str) -> dict:
-    path = os.path.join(index_dir, _MANIFEST)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"no committed index at {index_dir} (missing {_MANIFEST})")
-    with open(path) as f:
-        m = json.load(f)
-    if m.get("version") != INDEX_VERSION or \
-            m.get("n_planes") != N_LSH_TOPK_PLANES:
-        raise ValueError(f"incompatible index manifest: {m}")
-    return m
+    return artifact.require(index_dir, _MANIFEST, "index",
+                            version=INDEX_VERSION,
+                            n_planes=N_LSH_TOPK_PLANES)
 
 
 def query_lsh_index(spark: SparkSession, index_dir: str,

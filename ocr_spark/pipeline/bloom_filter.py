@@ -30,24 +30,18 @@ dedup, tokenizer, classifier, compaction, corpus-stats):
   even without its idempotence tag; the tag still skips the rewrite and
   keeps the append count honest). Rewrite-into-tmp + two-rename swap.
 
-Atomicity contract (uniform with ann_index / dedup_index / tokenizer /
-classifier / corpus_stats): stale manifest invalidated BEFORE an
-overwrite rebuild, manifest written only AFTER the data commit/swap, and
-a crash inside the swap window self-heals on the next read
-(_recover_swap). A crashed build or append leaves orphan files, never a
-readable-but-partial filter.
+Commits follow pipeline/artifact.py's atomicity contract.
 """
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.corpus import (BLOOM_EXTRA_BITS, BLOOM_K,
                                 bloom_bits_build, bloom_probe_frame)
+from . import artifact
 
 BLOOM_VERSION = 1
 
@@ -55,32 +49,10 @@ _MANIFEST = "_bloom_manifest.json"
 _DATA = "bloom_bits"
 
 
-def _write_manifest(bloom_dir: str, manifest: dict) -> None:
-    with open(os.path.join(bloom_dir, _MANIFEST), "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-
-
-def _recover_swap(bloom_dir: str) -> None:
-    """Roll back a crash INSIDE append_batch's two-rename swap window
-    (data renamed to .append-old, tmp not yet promoted): restore the old
-    bits so the committed manifest points at readable data again."""
-    data_dir = os.path.join(bloom_dir, _DATA)
-    old = data_dir + ".append-old"
-    if not os.path.exists(data_dir) and os.path.exists(old):
-        os.rename(old, data_dir)
-
-
 def read_manifest(bloom_dir: str) -> dict:
-    _recover_swap(bloom_dir)
-    path = os.path.join(bloom_dir, _MANIFEST)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"no committed bloom filter at {bloom_dir} (missing {_MANIFEST})")
-    with open(path) as f:
-        m = json.load(f)
-    if m.get("version") != BLOOM_VERSION or m.get("k") != BLOOM_K:
-        raise ValueError(f"incompatible bloom manifest: {m}")
-    return m
+    artifact.recover_swap(os.path.join(bloom_dir, _DATA), "append")
+    return artifact.require(bloom_dir, _MANIFEST, "bloom filter",
+                            version=BLOOM_VERSION, k=BLOOM_K)
 
 
 def _bits_set(spark: SparkSession, data_dir: str) -> int:
@@ -100,9 +72,7 @@ def build_bloom_filter(spark: SparkSession, docs: DataFrame,
     semantics a membership filter wants)."""
     t0 = time.time()
     data_dir = os.path.join(output_dir, _DATA)
-    stale = os.path.join(output_dir, _MANIFEST)
-    if os.path.exists(stale):
-        os.remove(stale)  # invalidate BEFORE the overwrite starts
+    artifact.invalidate(output_dir, _MANIFEST)
     bits, m, n_keys = bloom_bits_build(docs, extra_bits=extra_bits)
     bits.write.mode("overwrite").parquet(data_dir)
     n_bits_set = _bits_set(spark, data_dir)
@@ -118,7 +88,7 @@ def build_bloom_filter(spark: SparkSession, docs: DataFrame,
         "built_unix": int(time.time()),
         "build_wall_ms": int((time.time() - t0) * 1000),
     }
-    _write_manifest(output_dir, manifest)  # manifest AFTER data
+    artifact.commit(output_dir, manifest, _MANIFEST)
     return manifest
 
 
@@ -174,17 +144,11 @@ def append_batch(spark: SparkSession, bloom_dir: str,
               .unionByName(bloom_probe_frame(batch, manifest["m"])
                            .select("pos"))
               .distinct())
-    tmp = data_dir + ".append-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = artifact.tmp_dir(data_dir, "append")
     merged.write.parquet(tmp)
     n_bits_set = _bits_set(spark, tmp)
     n_new_keys = batch.count()
-    old = data_dir + ".append-old"
-    shutil.rmtree(old, ignore_errors=True)
-    # a crash between these two renames is rolled back by _recover_swap
-    os.rename(data_dir, old)
-    os.rename(tmp, data_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    artifact.swap_in(data_dir, "append")
     manifest.update({
         "n_keys": manifest["n_keys"] + int(n_new_keys),
         "n_bits_set": int(n_bits_set),
@@ -196,5 +160,5 @@ def append_batch(spark: SparkSession, bloom_dir: str,
     if batch_tag is not None:
         manifest["batch_tags"] = (manifest.get("batch_tags", [])
                                   + [batch_tag])
-    _write_manifest(bloom_dir, manifest)  # manifest AFTER the swap
+    artifact.commit(bloom_dir, manifest, _MANIFEST)
     return manifest

@@ -14,16 +14,11 @@ artifact score is engine-exact by the same argument).
 Scoring is the 100 TB side: the weights ride into one foldable literal
 array (a few KB), the corpus never shuffles, and the identical
 expression runs on a stream (streaming/quality.classifier_gate_stream
-is the shipped-constants instance of the same plan).
-
-Atomicity contract (same as ann_index / dedup_index / tokenizer):
-manifest JSON written only after the weight parquet commits; a missing
-manifest reads as "no classifier"; retraining invalidates the stale
-manifest BEFORE the overwrite starts.
+is the shipped-constants instance of the same plan). Commits follow
+pipeline/artifact.py's atomicity contract.
 """
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -31,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.classifier import (CLS_DIM, CLS_EPOCHS, CLS_THRESHOLD,
                                     featurize, train_quality_classifier)
+from . import artifact
 
 CLASSIFIER_VERSION = 1
 
@@ -56,9 +52,7 @@ def train_classifier(spark: SparkSession, labeled: DataFrame,
     partitioning."""
     t0 = time.time()
     data_dir = os.path.join(output_dir, _DATA)
-    stale = os.path.join(output_dir, _MANIFEST)
-    if os.path.exists(stale):
-        os.remove(stale)
+    artifact.invalidate(output_dir, _MANIFEST)
 
     rows = (labeled
             .select(F.substring(F.coalesce(F.col("text"), F.lit("")), 1,
@@ -94,22 +88,13 @@ def train_classifier(spark: SparkSession, labeled: DataFrame,
         "built_unix": int(time.time()),
         "build_wall_ms": int((time.time() - t0) * 1000),
     }
-    # manifest AFTER data: a crashed train is invisible to readers
-    with open(os.path.join(output_dir, _MANIFEST), "w") as f:
-        json.dump(manifest, f, sort_keys=True)
+    artifact.commit(output_dir, manifest, _MANIFEST)
     return manifest
 
 
 def read_manifest(model_dir: str) -> dict:
-    path = os.path.join(model_dir, _MANIFEST)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"no committed classifier at {model_dir} (missing {_MANIFEST})")
-    with open(path) as f:
-        m = json.load(f)
-    if m.get("version") != CLASSIFIER_VERSION:
-        raise ValueError(f"incompatible classifier manifest: {m}")
-    return m
+    return artifact.require(model_dir, _MANIFEST, "classifier",
+                            version=CLASSIFIER_VERSION)
 
 
 def load_model(spark: SparkSession, model_dir: str

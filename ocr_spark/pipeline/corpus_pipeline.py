@@ -35,9 +35,9 @@ from pyspark.sql import DataFrame, functions as F
 from ..operators.corpus import (_md5_long, lang_argmax_column,
                                 lang_hit_columns)
 from ..operators.quality import PACK_SEQ_LEN, SMP_RATES, pack_placement_from
+from . import artifact
 from .curate import run_curation
 from .extract import run_extract_job
-from .util import write_manifest
 
 CORPUS_PIPELINE_VERSION = "corpus-v1"
 
@@ -85,6 +85,7 @@ def run_corpus_pipeline(spark, transcripts: DataFrame, workdir: str,
     exports the kept docs as deterministic ordered training shards
     (pipeline/shards.py) under workdir/shards."""
     t0 = time.time()
+    artifact.invalidate(workdir)
     extract_metrics = run_extract_job(
         spark, transcripts, os.path.join(workdir, "extracted"),
         run_id=run_id, resume=resume, salt_partitions=salt_partitions)
@@ -143,5 +144,5 @@ def run_corpus_pipeline(spark, transcripts: DataFrame, workdir: str,
     if shard_manifest is not None:
         manifest["shards"] = {"n_shards": shard_manifest["n_shards"],
                               "rows_out": shard_manifest["rows_out"]}
-    write_manifest(workdir, manifest)
+    artifact.commit(workdir, manifest)
     return manifest

@@ -18,22 +18,17 @@ the COMMITTED snapshot before any of it enters curation:
   (new / vanished sources). All integer arithmetic — the same portable
   math as the registry read.
 
-Atomicity contract (uniform with ann_index.py / dedup_index.py /
-classifier.py / maintenance.py): the manifest is written only after the
-data commit succeeds; a rebuild invalidates the stale manifest BEFORE
-overwriting; readers treat a missing manifest as "no snapshot". A
-crashed build leaves orphan files, never a readable-but-partial
-snapshot.
+Commits follow pipeline/artifact.py's atomicity contract.
 """
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.quality import len_bucket_frame
+from . import artifact
 
 STATS_VERSION = 1
 
@@ -49,29 +44,27 @@ def profile_of(docs: DataFrame) -> DataFrame:
                  F.sum("n_tok").cast("long").alias("n_tokens")))
 
 
-def _write_manifest(stats_dir: str, manifest: dict) -> None:
-    with open(os.path.join(stats_dir, _MANIFEST), "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-
-
+# Applied batch tags are recorded INSIDE the data directory — they travel
+# with the swap rename, so 'which batches are in this profile' commits
+# atomically with the profile itself (the manifest's copy can lag by one
+# crash window; this file cannot).
 _TAGS_FILE = "_applied_tags.json"
 
 
-def _write_tags(data_dir: str, tags: list[str]) -> None:
-    with open(os.path.join(data_dir, _TAGS_FILE), "w") as f:
-        json.dump(tags, f)
-
-
 def _applied_tags(data_dir: str) -> list[str]:
-    """Tags recorded INSIDE the data directory — they travel with the
-    swap rename, so 'which batches are in this profile' commits
-    atomically with the profile itself (the manifest's copy can lag by
-    one crash window; this file cannot)."""
-    path = os.path.join(data_dir, _TAGS_FILE)
-    if not os.path.exists(path):
-        return []
-    with open(path) as f:
-        return json.load(f)
+    return artifact.read(data_dir, _TAGS_FILE) or []
+
+
+def _profile_stats(spark: SparkSession, data_dir: str) -> dict:
+    """Manifest counts from the committed profile itself — no second
+    corpus scan."""
+    row = (spark.read.parquet(data_dir)
+           .agg(F.count("*").alias("cells"),
+                F.countDistinct("source").alias("sources"),
+                F.sum("n_docs").alias("docs"),
+                F.sum("n_tokens").alias("tokens")).collect()[0])
+    return {"n_cells": int(row.cells), "n_sources": int(row.sources),
+            "n_docs": int(row.docs or 0), "n_tokens": int(row.tokens or 0)}
 
 
 def build_stats(spark: SparkSession, docs: DataFrame, output_dir: str,
@@ -79,54 +72,25 @@ def build_stats(spark: SparkSession, docs: DataFrame, output_dir: str,
     """Profile the corpus and commit the snapshot (manifest AFTER data)."""
     t0 = time.time()
     data_dir = os.path.join(output_dir, _DATA)
-    os.makedirs(output_dir, exist_ok=True)
-    # invalidate any PRIOR snapshot before the overwrite starts writing:
-    # a crash mid-rebuild must not leave the old manifest pointing at
-    # half-rewritten data
-    stale = os.path.join(output_dir, _MANIFEST)
-    if os.path.exists(stale):
-        os.remove(stale)
+    artifact.invalidate(output_dir, _MANIFEST)
     profile_of(docs).write.mode("overwrite").parquet(data_dir)
     tags = [batch_tag] if batch_tag else []
-    _write_tags(data_dir, tags)
-    # stats from the committed artifact itself — no second corpus scan
-    row = (spark.read.parquet(data_dir)
-           .agg(F.count("*").alias("cells"),
-                F.countDistinct("source").alias("sources"),
-                F.sum("n_docs").alias("docs"),
-                F.sum("n_tokens").alias("tokens")).collect()[0])
+    artifact.commit(data_dir, tags, _TAGS_FILE)
     manifest = {
         "version": STATS_VERSION,
         "batch_tag": batch_tag,
         "batch_tags": tags,
-        "n_cells": int(row.cells),
-        "n_sources": int(row.sources),
-        "n_docs": int(row.docs or 0),
-        "n_tokens": int(row.tokens or 0),
+        **_profile_stats(spark, data_dir),
         "built_unix": int(time.time()),
         "build_wall_ms": int((time.time() - t0) * 1000),
     }
-    _write_manifest(output_dir, manifest)
+    artifact.commit(output_dir, manifest, _MANIFEST)
     return manifest
 
 
-def _recover_swap(stats_dir: str) -> None:
-    """Roll back a crash INSIDE append_stats' two-rename swap window
-    (data renamed to .append-old, tmp not yet promoted): restore the old
-    profile so the committed manifest points at readable data again."""
-    data_dir = os.path.join(stats_dir, _DATA)
-    old = data_dir + ".append-old"
-    if not os.path.exists(data_dir) and os.path.exists(old):
-        os.rename(old, data_dir)
-
-
 def read_manifest(stats_dir: str) -> dict | None:
-    _recover_swap(stats_dir)
-    path = os.path.join(stats_dir, _MANIFEST)
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
+    artifact.recover_swap(os.path.join(stats_dir, _DATA), "append")
+    return artifact.read(stats_dir, _MANIFEST)
 
 
 def append_stats(spark: SparkSession, stats_dir: str,
@@ -146,7 +110,6 @@ def append_stats(spark: SparkSession, stats_dir: str,
     the profile counts ARE the drift baseline, so unlike the dedup
     index's benign n_members inflation, a double-count here would skew
     drift_bp for those sources permanently."""
-    import shutil
     manifest = read_manifest(stats_dir)
     if manifest is None:
         raise FileNotFoundError(
@@ -158,52 +121,28 @@ def append_stats(spark: SparkSession, stats_dir: str,
         if batch_tag not in manifest.get("batch_tags", []):
             # swap committed, manifest write crashed: heal the manifest —
             # tags AND counts both describe the already-swapped data
-            row = (spark.read.parquet(data_dir)
-                   .agg(F.count("*").alias("cells"),
-                        F.countDistinct("source").alias("sources"),
-                        F.sum("n_docs").alias("docs"),
-                        F.sum("n_tokens").alias("tokens")).collect()[0])
-            manifest.update({
-                "batch_tags": applied,
-                "n_cells": int(row.cells),
-                "n_sources": int(row.sources),
-                "n_docs": int(row.docs or 0),
-                "n_tokens": int(row.tokens or 0),
-            })
-            _write_manifest(stats_dir, manifest)
+            manifest.update(batch_tags=applied,
+                            **_profile_stats(spark, data_dir))
+            artifact.commit(stats_dir, manifest, _MANIFEST)
         return manifest
     merged = (spark.read.parquet(data_dir)
               .unionByName(profile_of(new_docs))
               .groupBy("source", "bucket")
               .agg(F.sum("n_docs").cast("long").alias("n_docs"),
                    F.sum("n_tokens").cast("long").alias("n_tokens")))
-    tmp = data_dir + ".append-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = artifact.tmp_dir(data_dir, "append")
     merged.write.parquet(tmp)
     new_tags = applied + ([batch_tag] if batch_tag is not None else [])
-    _write_tags(tmp, new_tags)  # tags ride the swap rename
-    row = (spark.read.parquet(tmp)
-           .agg(F.count("*").alias("cells"),
-                F.countDistinct("source").alias("sources"),
-                F.sum("n_docs").alias("docs"),
-                F.sum("n_tokens").alias("tokens")).collect()[0])
-    old = data_dir + ".append-old"
-    shutil.rmtree(old, ignore_errors=True)
-    # a crash between these two renames is rolled back by _recover_swap
-    # on the next read (manifest still describes the old data)
-    os.rename(data_dir, old)
-    os.rename(tmp, data_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    artifact.commit(tmp, new_tags, _TAGS_FILE)  # tags ride the swap rename
+    stats = _profile_stats(spark, tmp)
+    artifact.swap_in(data_dir, "append")
     manifest.update({
-        "n_cells": int(row.cells),
-        "n_sources": int(row.sources),
-        "n_docs": int(row.docs or 0),
-        "n_tokens": int(row.tokens or 0),
+        **stats,
         "built_unix": int(time.time()),
         "build_wall_ms": int((time.time() - t0) * 1000),
         "batch_tags": new_tags,
     })
-    _write_manifest(stats_dir, manifest)  # manifest AFTER the swap
+    artifact.commit(stats_dir, manifest, _MANIFEST)
     return manifest
 
 

@@ -37,7 +37,7 @@ from ..operators.quality import (BENCH_MOD, CHUNK_TOKENS, CONTAM_NGRAM,
                                  MIN_TOKENS, SMP_RATES, _smp_threshold_u64,
                                  _TOKENS, token_shingle_expr,
                                  with_repetition_signals)
-from .util import write_manifest
+from . import artifact
 
 # gate thresholds (documented defaults; callers override per corpus)
 # MIN_TOKENS / MAX_TOP_TOKEN_BP / MAX_DUP_BIGRAM_BP now live in
@@ -290,6 +290,7 @@ def run_curation(spark, docs: DataFrame, out_dir: str,
     from the written-side aggregation, so input docs are scanned by the
     one shared plan."""
     t0 = time.time()
+    artifact.invalidate(out_dir)
     flags = curation_flags(docs, sample_rates=sample_rates).persist()
     try:
         funnel = {r["stage"]: r["n"] for r in
@@ -316,7 +317,7 @@ def run_curation(spark, docs: DataFrame, out_dir: str,
             "n_kept": funnel.get("kept", 0),
             "wall_sec": round(time.time() - t0, 3),
         }
-        write_manifest(out_dir, manifest)
+        artifact.commit(out_dir, manifest)
         return manifest
     finally:
         flags.unpersist()

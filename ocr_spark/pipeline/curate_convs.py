@@ -46,7 +46,7 @@ from ..operators.extraction import (_agent_transcripts,
                                     DEGEN_MIN_TOKENS, degen_turns_ctes)
 from ..operators.quality import (CONTAM_NGRAM, _smp_threshold_u64,
                                  token_shingle_expr, with_repetition_signals)
-from .util import write_manifest
+from . import artifact
 
 MIN_CONV_CHARS = 100     # assembled-conversation char floor
 CONV_KEEP_RATE = 0.8     # deterministic sampling keep rate
@@ -319,6 +319,7 @@ def run_conv_curation(spark, t: DataFrame, out_dir: str) -> dict:
     kept-set join is a broadcast-friendly semi join on conv_id (the flag
     frame is one row per conversation)."""
     t0 = time.time()
+    artifact.invalidate(out_dir)
     intermediates: list[DataFrame] = []
     flags = conv_curation_flags(t, _track=intermediates).persist()
     try:
@@ -342,7 +343,7 @@ def run_conv_curation(spark, t: DataFrame, out_dir: str) -> dict:
             "n_kept": funnel.get("kept", 0),
             "wall_sec": round(time.time() - t0, 3),
         }
-        write_manifest(out_dir, manifest)
+        artifact.commit(out_dir, manifest)
         return manifest
     finally:
         flags.unpersist()

@@ -19,22 +19,18 @@ bands so the NEXT crawl sees it. This module is that artifact:
   maintenance.compact_parquet pattern); on Iceberg this becomes one
   MERGE INTO keyed on (band, band_hash).
 
-Atomicity contract (same as ann_index.py / extract.py): the manifest is
-written only after the data commit/swap succeeds; readers treat a
-missing manifest as "no index". A crashed build or append leaves orphan
-files, never a readable-but-partial index.
+Commits follow pipeline/artifact.py's atomicity contract.
 """
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.corpus import (N_BANDS, N_MINHASH, _minhash_bands,
                                 _minhash_sig_stage, _spread)
+from . import artifact
 
 INDEX_VERSION = 1
 
@@ -59,11 +55,6 @@ def _bucketize(bands: DataFrame) -> DataFrame:
                  F.count("*").cast("long").alias("n_members")))
 
 
-def _write_manifest(index_dir: str, manifest: dict) -> None:
-    with open(os.path.join(index_dir, _MANIFEST), "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-
-
 def _index_stats(spark: SparkSession, data_dir: str) -> tuple[int, int]:
     """(n_buckets, n_docs) from the committed index itself: every signed
     doc contributes exactly N_BANDS member rows, so the doc count is
@@ -81,12 +72,7 @@ def build_dedup_index(spark: SparkSession, docs: DataFrame,
     signature and are invisible to fuzzy dedup by construction)."""
     t0 = time.time()
     data_dir = os.path.join(output_dir, _DATA)
-    # invalidate any PRIOR build before the overwrite starts writing: a
-    # crash mid-rebuild must not leave the old manifest pointing at
-    # half-rewritten data (readable-but-partial is the banned state)
-    stale = os.path.join(output_dir, _MANIFEST)
-    if os.path.exists(stale):
-        os.remove(stale)
+    artifact.invalidate(output_dir, _MANIFEST)
     (_bucketize(_bands_of(docs))
      .write.mode("overwrite").partitionBy("band").parquet(data_dir))
     n_buckets, n_docs = _index_stats(spark, data_dir)
@@ -100,34 +86,15 @@ def build_dedup_index(spark: SparkSession, docs: DataFrame,
         "built_unix": int(time.time()),
         "build_wall_ms": int((time.time() - t0) * 1000),
     }
-    _write_manifest(output_dir, manifest)  # manifest AFTER data
+    artifact.commit(output_dir, manifest, _MANIFEST)
     return manifest
 
 
-def _recover_swap(index_dir: str) -> None:
-    """Roll back a crash INSIDE append_batch's two-rename swap window
-    (data renamed to .append-old, tmp not yet promoted): restore the old
-    data so the committed manifest points at readable data again. The
-    manifest was not yet rewritten at that point, so rolling back
-    restores exactly the state it describes."""
-    data_dir = os.path.join(index_dir, _DATA)
-    old = data_dir + ".append-old"
-    if not os.path.exists(data_dir) and os.path.exists(old):
-        os.rename(old, data_dir)
-
-
 def read_manifest(index_dir: str) -> dict:
-    _recover_swap(index_dir)
-    path = os.path.join(index_dir, _MANIFEST)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"no committed index at {index_dir} (missing {_MANIFEST})")
-    with open(path) as f:
-        m = json.load(f)
-    if m.get("version") != INDEX_VERSION or m.get("n_bands") != N_BANDS \
-            or m.get("n_minhash") != N_MINHASH:
-        raise ValueError(f"incompatible dedup-index manifest: {m}")
-    return m
+    artifact.recover_swap(os.path.join(index_dir, _DATA), "append")
+    return artifact.require(index_dir, _MANIFEST, "dedup index",
+                            version=INDEX_VERSION, n_bands=N_BANDS,
+                            n_minhash=N_MINHASH)
 
 
 def check_batch(spark: SparkSession, index_dir: str,
@@ -201,17 +168,10 @@ def append_batch(spark: SparkSession, index_dir: str,
               .groupBy("band", "band_hash")
               .agg(F.min("canonical_id").alias("canonical_id"),
                    F.sum("n_members").cast("long").alias("n_members")))
-    tmp = data_dir + ".append-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = artifact.tmp_dir(data_dir, "append")
     merged.write.partitionBy("band").parquet(tmp)
     n_buckets, n_docs = _index_stats(spark, tmp)
-    old = data_dir + ".append-old"
-    shutil.rmtree(old, ignore_errors=True)
-    # a crash between these two renames is rolled back by _recover_swap
-    # on the next read (manifest still describes the old data)
-    os.rename(data_dir, old)
-    os.rename(tmp, data_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    artifact.swap_in(data_dir, "append")
     manifest.update({
         "n_docs": n_docs,
         "n_buckets": n_buckets,
@@ -222,5 +182,5 @@ def append_batch(spark: SparkSession, index_dir: str,
     if batch_tag is not None:
         manifest["batch_tags"] = (manifest.get("batch_tags", [])
                                   + [batch_tag])
-    _write_manifest(index_dir, manifest)  # manifest AFTER the swap
+    artifact.commit(index_dir, manifest, _MANIFEST)
     return manifest

@@ -12,9 +12,10 @@ parquet + manifest degradation (SURVEY §7.1 step 7 — swap for the
 Iceberg action when the runtime jar exists).
 
 Atomicity on a rename-capable filesystem: compact into `<dir>.compact-
-tmp`, then one directory swap. A crash before the swap leaves the
-original untouched; the tmp dir is re-created on retry. (On object
-stores the swap becomes a manifest flip — the bucket-manifest pattern
+tmp`, then the two-rename swap of pipeline/artifact.py (its atomicity
+contract, `kind="compact"`). A crash before the swap leaves the original
+untouched; the tmp dir is re-created on retry. (On object stores the
+swap becomes a manifest flip — the bucket-manifest pattern
 pipeline/extract.py already uses.)
 """
 
@@ -24,6 +25,8 @@ import os
 import shutil
 
 from pyspark.sql import SparkSession
+
+from . import artifact
 
 DEFAULT_TARGET_MB = 128
 
@@ -58,8 +61,7 @@ def compact_parquet(spark: SparkSession, path: str,
     files_before, total_bytes = _dir_stats(path)
     target_files = max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".compact-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = artifact.tmp_dir(path, "compact")
     if partition_by:
         (df.repartition(target_files, *partition_by)
          .write.mode("overwrite").partitionBy(*partition_by).parquet(tmp))
@@ -72,11 +74,7 @@ def compact_parquet(spark: SparkSession, path: str,
         shutil.rmtree(tmp, ignore_errors=True)
         raise RuntimeError(
             f"compaction row mismatch ({n_in} -> {n_out}); original kept")
-    old = path.rstrip("/") + ".compact-old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(path, old)
-    os.replace(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    artifact.swap_in(path, "compact")
     files_after, _ = _dir_stats(path)
     return {"files_before": files_before, "files_after": files_after,
             "bytes": total_bytes, "target_files": target_files,
@@ -84,13 +82,8 @@ def compact_parquet(spark: SparkSession, path: str,
 
 
 def recover_compaction(path: str) -> bool:
-    """Roll back a crash INSIDE compact_parquet's two-rename swap window
-    (data renamed to .compact-old, tmp not yet promoted): restore the
-    original directory. Called automatically by compact_parquet, so a
-    retried compaction self-heals; readers hitting a missing dir next to
-    a .compact-old can call it directly. Returns True if it recovered."""
-    old = path.rstrip("/") + ".compact-old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.replace(old, path)
-        return True
-    return False
+    """Roll back a crash inside compact_parquet's swap window. Called
+    automatically by compact_parquet, so a retried compaction self-heals;
+    readers hitting a missing dir next to a .compact-old can call it
+    directly. Returns True if it recovered."""
+    return artifact.recover_swap(path, "compact")

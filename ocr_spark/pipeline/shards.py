@@ -30,7 +30,7 @@ import time
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.quality import N_TRAIN_SHARDS, shard_key_column
-from .util import write_manifest
+from . import artifact
 
 SHARDS_VERSION = "shards-v1"
 DEFAULT_N_SHARDS = N_TRAIN_SHARDS
@@ -60,10 +60,10 @@ def write_training_shards(spark, docs: DataFrame, out_dir: str,
     task), per-task sort on (shard, order_key), `partitionBy("shard")`
     write — each shard directory holds ONE file whose row order IS the
     training order. Deterministic end to end, so re-running after a
-    crash reproduces byte-identical shards (the tmp+rename manifest
-    commits after the data write, the same atomicity contract as the
-    extract job's bucket manifest)."""
+    crash reproduces byte-identical shards (committed under
+    pipeline/artifact.py's atomicity contract)."""
     t0 = time.time()
+    artifact.invalidate(out_dir)
     assigned = shard_assignment(docs, n_shards)
     data_dir = os.path.join(out_dir, "shards")
     (assigned
@@ -86,7 +86,7 @@ def write_training_shards(spark, docs: DataFrame, out_dir: str,
         "output": data_dir,
         "wall_ms": int((time.time() - t0) * 1000),
     }
-    write_manifest(out_dir, manifest)
+    artifact.commit(out_dir, manifest)
     return manifest
 
 
@@ -118,6 +118,7 @@ def write_packed_chat_shards(spark, turns: DataFrame, out_dir: str,
     from ..operators.quality import (PACK_SEQ_LEN, chat_pack_exploded,
                                      chat_pack_placement)
     t0 = time.time()
+    artifact.invalidate(out_dir)
     L = PACK_SEQ_LEN
     p = chat_pack_placement(turns)
     exploded = chat_pack_exploded(p, extra_cols=("turn_idx", "role"))
@@ -158,5 +159,5 @@ def write_packed_chat_shards(spark, turns: DataFrame, out_dir: str,
         "output": data_dir,
         "wall_ms": int((time.time() - t0) * 1000),
     }
-    write_manifest(out_dir, manifest)
+    artifact.commit(out_dir, manifest)
     return manifest

@@ -12,21 +12,18 @@ repeat, so each distinct word is segmented once per batch).
 Application rule = training rule: merges apply in LEARNED RANK order,
 each rewriting left-to-right — byte-identical to the trainer's
 per-iteration vocab rewrite (shared provenance pinned by
-tests/test_tokenizer.py's reference segmentation).
-
-Atomicity contract (same as ann_index.py / dedup_index.py): manifest
-JSON written only after the merge parquet commits; a missing manifest
-reads as "no tokenizer".
+tests/test_tokenizer.py's reference segmentation). Commits follow
+pipeline/artifact.py's atomicity contract.
 """
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.corpus import _spread, train_bpe_merge_list
+from . import artifact
 
 TOKENIZER_VERSION = 1
 
@@ -40,12 +37,7 @@ def train_tokenizer(spark: SparkSession, docs: DataFrame, output_dir: str,
     ordered merge table + manifest."""
     t0 = time.time()
     data_dir = os.path.join(output_dir, _DATA)
-    # invalidate any PRIOR tokenizer before rewriting its data: a crash
-    # mid-retrain must not leave the old manifest pointing at a partial
-    # merge table (readable-but-partial is the banned state)
-    stale = os.path.join(output_dir, _MANIFEST)
-    if os.path.exists(stale):
-        os.remove(stale)
+    artifact.invalidate(output_dir, _MANIFEST)
     merges = train_bpe_merge_list(docs, n_merges)
     (spark.createDataFrame(
         merges, "merge_rank INT, left STRING, right STRING, pair_count BIGINT")
@@ -56,22 +48,13 @@ def train_tokenizer(spark: SparkSession, docs: DataFrame, output_dir: str,
         "built_unix": int(time.time()),
         "build_wall_ms": int((time.time() - t0) * 1000),
     }
-    # manifest AFTER data: a crashed train is invisible to readers
-    with open(os.path.join(output_dir, _MANIFEST), "w") as f:
-        json.dump(manifest, f, sort_keys=True)
+    artifact.commit(output_dir, manifest, _MANIFEST)
     return manifest
 
 
 def read_manifest(tok_dir: str) -> dict:
-    path = os.path.join(tok_dir, _MANIFEST)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"no committed tokenizer at {tok_dir} (missing {_MANIFEST})")
-    with open(path) as f:
-        m = json.load(f)
-    if m.get("version") != TOKENIZER_VERSION:
-        raise ValueError(f"incompatible tokenizer manifest: {m}")
-    return m
+    return artifact.require(tok_dir, _MANIFEST, "tokenizer",
+                            version=TOKENIZER_VERSION)
 
 
 def load_merges(spark: SparkSession, tok_dir: str) -> list[tuple[str, str]]:

@@ -48,22 +48,6 @@ def read_transcript_stream(spark: SparkSession, input_dir: str,
     return reader.parquet(input_dir)
 
 
-def extract_stream(transcripts: DataFrame) -> DataFrame:
-    """The batch extraction stage applied to a streaming DataFrame.
-
-    Stateless mapInPandas — identical kernels, schema, and bucket ids to
-    the batch path (pipeline/extract.py), so batch and streaming outputs
-    are row-for-row comparable. No repartition here: in streaming the
-    micro-batch file split is the parallelism unit and the stage is
-    map-only."""
-    from ..pipeline.extract import (EXTRACT_SCHEMA, bucket_expr,
-                                    make_extract_fn)
-    df = (transcripts
-          .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-          .withColumn("bucket", bucket_expr(64)))
-    return df.mapInPandas(make_extract_fn(), schema=EXTRACT_SCHEMA)
-
-
 def run_stream_extract(spark: SparkSession, input_dir: str,
                        output_dir: str, checkpoint_dir: str,
                        max_files_per_trigger: int | None = None,
@@ -72,9 +56,15 @@ def run_stream_extract(spark: SparkSession, input_dir: str,
     checkpoint, extract, append parquet output. Returns progress metrics.
 
     Calling this again after new files land in input_dir processes only
-    the new files (exactly-once per file via the streaming checkpoint)."""
+    the new files (exactly-once per file via the streaming checkpoint).
+
+    The stage is the batch job's own (pipeline/extract.extract_turns,
+    null-key quarantine included) with salt_partitions=0: map-only, the
+    micro-batch file split is the parallelism unit, so batch and stream
+    outputs are row-for-row comparable."""
+    from ..pipeline.extract import extract_turns
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    extracted = extract_stream(stream)
+    extracted = extract_turns(stream, salt_partitions=0)
     q = (extracted.writeStream
          .format("parquet")
          .option("path", output_dir)

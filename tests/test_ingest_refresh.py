@@ -150,17 +150,19 @@ def test_append_stats_swap_manifest_crash_heals(spark, artifacts,
     stats, _index = artifacts
     extra = _df(spark, [(9000, _long_text(9000), "en", "stable", 300)])
 
-    real_write = cs._write_manifest
+    real_write = cs.artifact.commit
     calls = {"n": 0}
 
-    def crash_on_manifest(stats_dir, manifest):
+    def crash_on_manifest(out_dir, manifest, name):
+        if name != cs._MANIFEST:  # the tags file rides the swap
+            return real_write(out_dir, manifest, name)
         calls["n"] += 1
         raise RuntimeError("simulated crash before manifest rewrite")
 
-    monkeypatch.setattr(cs, "_write_manifest", crash_on_manifest)
+    monkeypatch.setattr(cs.artifact, "commit", crash_on_manifest)
     with pytest.raises(RuntimeError):
         cs.append_stats(spark, stats, extra, batch_tag="tag-x")
-    monkeypatch.setattr(cs, "_write_manifest", real_write)
+    monkeypatch.setattr(cs.artifact, "commit", real_write)
     # data already contains the batch; manifest is stale
     assert "tag-x" not in (cs.read_manifest(stats).get("batch_tags") or [])
     m = cs.append_stats(spark, stats, extra, batch_tag="tag-x")

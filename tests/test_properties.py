@@ -148,6 +148,12 @@ _tag_bits = st.sampled_from([
 
 @settings(max_examples=300, deadline=None)
 @given(st.lists(_tag_bits, max_size=30))
+# html.parser glues a self-closing '/' into a trailing unquoted value and
+# cuts an end tag at its first '>' even inside quotes: both bail via
+# tables._tag_needs_slow_path
+@example(bits=["<table><tr>", "<td colspan=2/>x</td>", "</tr></table>"])
+@example(bits=["<table><tr><td>", "<div a=b/>x</div>", "</td></tr></table>"])
+@example(bits=["<table><tr><td>", '</p a="x>y">', "</td></tr></table>"])
 def test_fast_html_tokenizer_matches_htmlparser(bits):
     """The regex fast path must produce byte-identical tables to the
     html.parser path — on EVERY input: when the gate rejects, fallback is
@@ -200,6 +206,10 @@ def test_readability_never_crashes_and_spans_valid(bits):
 @example(bits=["<a == 'x'>"])
 @example(bits=["<a =x>"])
 @example(bits=["<div a/ b=1>x</div>"])
+# self-closing '/' glued into an unquoted value; quoted '>' in an end tag
+@example(bits=["<td colspan=2/>x</td>"])
+@example(bits=["<div a=b/>x</div>"])
+@example(bits=['<p>a</p a="x>y">b'])
 def test_fast_tree_feed_matches_htmlparser(bits):
     """The regex fast path for the readability tree builder must produce
     an IDENTICAL tree (tags, attrs, text runs with raw offsets) to a

@@ -68,6 +68,31 @@ def test_stream_resume_processes_only_new_files(spark, tmp_path):
     assert metrics["rows_in"] <= n2 + 1  # only the delta entered pass 2
 
 
+def test_stream_malformed_rows_survive_extraction(spark, tmp_path):
+    """The stream path shares the batch stage's JVM-side null-key
+    quarantine (test_pipeline's malformed-rows case): a null conv_id or
+    turn_idx must not kill the Python task — such rows land at conv ''
+    / turn -1 and rows in == rows out holds."""
+    from ocr_spark.streaming import TRANSCRIPT_SCHEMA, run_stream_extract
+
+    rows = [
+        ("c1", 1, "tool", None, "markdown", None),   # null text
+        (None, 3, "tool", "plain words", "", None),  # null conv_id
+        ("c2", None, "tool", "x", "", None),         # null turn_idx
+        (None, None, None, None, None, None),        # everything null
+    ]
+    inp = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1) \
+        .write.parquet(inp)
+    run_stream_extract(spark, inp, out, str(tmp_path / "ckpt"))
+    got = spark.read.parquet(out).collect()
+    assert len(got) == len(rows)
+    quarantined = [r for r in got if r.conv_id == "" or r.turn_idx == -1]
+    assert len(quarantined) == 3
+    assert all(r.bucket is not None for r in got)
+
+
 def test_session_window_stream_equals_batch(spark, tmp_path):
     import shutil
 
