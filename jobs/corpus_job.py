@@ -30,7 +30,9 @@ def main() -> None:
     ap.add_argument("--run-id", default="corpus")
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--salt", type=int, default=None,
-                    help="salt partitions for the extract stage")
+                    help="partitions of the extract stage's "
+                         "bucket-aligned range shuffle (default 2x "
+                         "parallelism; 0 = map-only, no shuffle)")
     ap.add_argument("--shards", type=int, default=None,
                     help="also export the kept docs as this many "
                          "deterministic ordered training shards")

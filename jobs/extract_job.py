@@ -8,9 +8,9 @@
 Reads nothing external: the transcripts input is synthesized
 deterministically (seed-fixed) at the requested size, materialized
 (cached + counted) BEFORE the timed window, then pushed through the
-salted repartition + mapInPandas extraction stage. Prints ONE JSON line
-on stdout: {"n_turns": ..., "wall_sec": ..., "turns_per_sec": ...,
-"parallelism": ...}.
+bucket-aligned range shuffle + mapInPandas extraction stage. Prints ONE
+JSON line on stdout: {"n_turns": ..., "wall_sec": ..., "turns_per_sec":
+..., "parallelism": ...}.
 
 With --output, instead runs the full checkpointed job (write parquet +
 manifest) via run_extract_job and reports its metrics too.
@@ -29,7 +29,9 @@ def main() -> None:
     ap.add_argument("--n-convs", type=int, default=2500)
     ap.add_argument("--warmup-convs", type=int, default=250)
     ap.add_argument("--salt", type=int, default=None,
-                    help="salt partitions (default 2x parallelism)")
+                    help="partitions of the bucket-aligned range "
+                         "shuffle before the Python stage (default 2x "
+                         "parallelism; 0 = map-only, no shuffle)")
     ap.add_argument("--output", default=None,
                     help="run the full checkpointed job into this dir")
     ap.add_argument("--resume", action="store_true",

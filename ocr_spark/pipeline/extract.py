@@ -3,7 +3,8 @@
 Spark plan (SURVEY.md §3.1 restatement, §4 custom work):
 
   read transcripts
-    → [optional] skew-salted repartition on (conv_id, turn_idx bucket)
+    → [optional] bucket-aligned range shuffle on
+      (bucket, conv_id, turn_idx block)
     → mapInPandas extraction stage (Arrow batches; kernels from
       ocr_spark.kernels — all per-row logic lives here, nothing per-row in
       the driver)
@@ -12,17 +13,26 @@ Spark plan (SURVEY.md §3.1 restatement, §4 custom work):
     → manifest rows per bucket (rows_in/out/rejected, wall_ms, version)
 
 Scale notes:
-- The extraction map is embarrassingly parallel; the repartition exists to
+- The extraction map is embarrassingly parallel; the shuffle exists to
   split *hot conversations* (1% of convs carry 100× turns in the synthetic
-  skew model) and length-skewed payload runs across tasks. It shuffles only
-  (conv_id, turn_idx, text…) rows once, before the expensive Python stage,
-  so the Python stage is balanced. For inputs already well-bucketed (e.g.
-  an Iceberg table bucketed by conv_id), pass salt_partitions=0 to skip the
-  shuffle entirely and run map-only over the scan partitions.
-- resume bucket = pmod(xxhash64(conv_id), n_buckets): stable across runs
-  and cluster sizes (task partition ids are not), so a restarted job can
-  anti-join completed buckets from the manifest and process only the rest
-  (RunStore.php:20-31 atomic-draft analog, set-oriented).
+  skew model) across tasks, and to line the tasks up with the output
+  buckets. It is a range partitioning whose key starts with the resume
+  bucket: Spark samples the input and cuts it into row-balanced,
+  contiguous ranges, so each task holds a run of whole buckets (plus the
+  edge of its neighbours') and its fused partitionBy("bucket") write opens
+  a few parquet writers — about n_buckets + n files per job, not up to
+  n × n_buckets as with a hash salt. A conversation larger than one task's
+  share is cut at turn_idx block boundaries (consecutive turns stay
+  together for Arrow-batch locality). It shuffles only the input rows,
+  once, before the expensive Python stage. For inputs already well
+  bucketed (e.g. an Iceberg table bucketed by conv_id), and for the stream
+  path, pass salt_partitions=0 to skip the shuffle entirely and run
+  map-only over the scan partitions.
+- resume bucket = first 8 hex chars of md5(conv_id) mod n_buckets (see
+  bucket_expr): stable across runs, cluster sizes and engines (task
+  partition ids are not), so a restarted job can anti-join completed
+  buckets from the manifest and process only the rest (RunStore.php:20-31
+  atomic-draft analog, set-oriented).
 """
 
 from __future__ import annotations
@@ -241,35 +251,6 @@ def stable_bucket_py(conv_id: str, n_buckets: int) -> int:
     return int(hashlib.md5(conv_id.encode()).hexdigest()[:8], 16) % n_buckets
 
 
-def suggest_salt_partitions(transcripts: DataFrame,
-                            target_rows_per_task: int = 20_000,
-                            sample_fraction: float | None = None) -> int:
-    """Pick the salt fan-out from a cheap skew sketch (SURVEY §4 item 1):
-    approx distinct convs + total rows + the hottest conv's share decide
-    how many partitions the salted repartition needs so no task exceeds
-    ~target_rows_per_task even if the hottest conversations collide.
-
-    One lightweight aggregation job (optionally over a sample); returns
-    a partition count >= 2x the current parallelism."""
-    df = transcripts
-    if sample_fraction:
-        df = df.sample(fraction=sample_fraction, seed=7)
-    sketch = df.groupBy("conv_id").count().agg(
-        F.count("*").alias("n_convs"),
-        F.sum("count").alias("n_rows"),
-        F.max("count").alias("hottest"),
-    ).first()
-    n_rows = (sketch.n_rows or 0) / (sample_fraction or 1.0)
-    hottest = (sketch.hottest or 0) / (sample_fraction or 1.0)
-    spark = transcripts.sparkSession
-    base = spark.sparkContext.defaultParallelism * 2
-    by_volume = int(n_rows / max(1, target_rows_per_task)) + 1
-    # the hottest conv splits into ceil(hottest / turn_bucket) cells of
-    # ~turn_bucket rows; enough partitions to spread those cells
-    by_heat = int(hottest / 64) + 1
-    return max(base, by_volume, by_heat)
-
-
 def extract_turns(transcripts: DataFrame,
                   salt_partitions: int | None = None,
                   n_buckets: int = 64,
@@ -277,12 +258,16 @@ def extract_turns(transcripts: DataFrame,
     """Transcripts → extracted turns DataFrame (no write).
 
     salt_partitions:
-      None  → default: 2× cluster parallelism shuffle on the salted key
-      0     → skip the repartition (map-only over scan partitions)
+      None  → default: 2× cluster parallelism, bucket-aligned range shuffle
+      0     → skip the shuffle (map-only over scan partitions; the stream
+              path uses this, so no micro-batch pays a sampling job)
       n > 0 → explicit partition count
-    The salt key is (conv_id, floor(turn_idx / turn_bucket_size)): turns of
-    a hot conversation spread over many tasks while consecutive turns stay
-    together for Arrow-batch locality.
+    The shuffle key is (bucket, conv_id, floor(turn_idx / turn_bucket_size))
+    under range partitioning. Leading with the output bucket keeps each
+    task's rows in a contiguous run of buckets, so a partitioned write
+    opens a few files per task instead of one per bucket; the sampled range
+    bounds balance rows across tasks and split a hot conversation at
+    turn-block granularity.
     """
     spark = transcripts.sparkSession
     # null-key quarantine, JVM-side, BEFORE the Arrow stage: a malformed
@@ -299,8 +284,9 @@ def extract_turns(transcripts: DataFrame,
     if salt_partitions is None:
         salt_partitions = spark.sparkContext.defaultParallelism * 2
     if salt_partitions:
-        df = df.repartition(
+        df = df.repartitionByRange(
             salt_partitions,
+            F.col("bucket"),
             F.col("conv_id"),
             F.floor(F.col("turn_idx") / turn_bucket_size))
     return df.mapInPandas(make_extract_fn(), schema=EXTRACT_SCHEMA)

@@ -12,10 +12,13 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.timeout(560)
-def test_bench_emits_single_json_line():
+def test_bench_emits_single_json_line(tmp_path):
+    # the full record goes to tmp: a smoke run must not replace the
+    # tracked BENCH/last_run.json
+    record = str(tmp_path / "last_run.json")
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-               SPARK_GRAFT_CPUS="8")
+               SPARK_GRAFT_CPUS="8", OCR_BENCH_RECORD=record)
     out = subprocess.run([sys.executable, os.path.join(ROOT, "bench.py")],
                          capture_output=True, text=True, cwd=ROOT,
                          timeout=540, env=env)
@@ -32,9 +35,9 @@ def test_bench_emits_single_json_line():
     # stay comfortably inside that window (r04's 3,057-char line was
     # silently truncated and recorded parsed=null)
     assert len(lines[0]) <= 1500, f"stdout line too long: {len(lines[0])}"
-    # the FULL per-query record must land in BENCH/last_run.json and
+    # the FULL per-query record must land in the record file and
     # superset the stdout line's stable subset
-    full = json.load(open(os.path.join(ROOT, "BENCH", "last_run.json")))
+    full = json.load(open(record))
     assert set(payload["queries"]) <= set(full["queries"])
     assert len(full["queries"]) >= len(payload["queries"])
     assert full["value"] == payload["value"]

@@ -42,16 +42,22 @@ def test_sim_cosine_broadcasts_query_side(spark):
 
 
 def test_extraction_shuffles_at_most_once(spark, tmp_path):
+    import re
+
     from ocr_spark.pipeline.extract import extract_turns
-    from ocr_spark.plans import exchange_count
+    from ocr_spark.plans import exchange_count, formatted_plan
     from ocr_spark.sources.synthetic import synthesize_transcripts
     # parquet input so the plan under audit is scan → [salt] → extract,
     # without the synthetic generator's own repartition
     path = str(tmp_path / "t")
     synthesize_transcripts(spark, n_convs=10).write.parquet(path)
     t = spark.read.parquet(path)
-    assert exchange_count(extract_turns(t, salt_partitions=32)) == 1, \
+    salted = extract_turns(t, salt_partitions=32)
+    assert exchange_count(salted) == 1, \
         "salted path: exactly the one explicit repartition"
+    keys = set(re.findall(r"rangepartitioning\((\w+)", formatted_plan(salted)))
+    assert keys == {"bucket"}, \
+        f"the one exchange must range-partition on bucket first: {keys}"
     assert exchange_count(extract_turns(t, salt_partitions=0)) == 0, \
         "map-only path: no shuffle at all"
 
