@@ -46,8 +46,8 @@ def main() -> None:
             if args.transcripts_parquet:
                 t = spark.read.parquet(args.transcripts_parquet)
             else:
-                from ocr_spark.operators.extraction import _agent_transcripts
-                t = _agent_transcripts(spark, args.input)
+                from ocr_spark.sources.synthetic import agent_transcripts
+                t = agent_transcripts(spark, args.input)
             manifest = run_conv_curation(spark, t, args.output)
         else:
             from ocr_spark.pipeline.curate import run_curation

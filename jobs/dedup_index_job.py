@@ -54,7 +54,7 @@ def main() -> None:
             print(json.dumps(build_dedup_index(spark, corpus, args.index),
                              sort_keys=True))
         elif args.mode == "check":
-            from ocr_spark.operators.corpus import N_BANDS
+            from ocr_spark.functions.minhash import N_BANDS
             from ocr_spark.pipeline.dedup_index import check_batch
             t0 = time.time()
             rows = check_batch(spark, args.index, batch).collect()

@@ -77,7 +77,7 @@ def main() -> None:
             (t.repartition(args.input_files, "conv_id",
                            (t.turn_idx / 64).cast("int"))
              .write.mode("overwrite").parquet(args.input_parquet))
-        if args.salt == 0 and os.environ.get("OCR_SPLIT_TUNE", "1") != "0":
+        if args.salt == 0:
             # Map-only: scan partitions ARE the task granularity. Spark's
             # default split sizing (bytesPerCore + 4 MB openCost) aims for
             # ONE wave of tasks per core — stragglers in the payload mix

@@ -9,10 +9,19 @@ stable turn ordering, and per-partition checkpoint lineage.
 
 Layout:
   kernels/   pure-Python extraction kernels (no Spark import) — unit-testable
-  pipeline/  the Spark extraction job (mapInPandas stages, salting, checkpoints)
-  sources/   deterministic transcripts synthesis + readers
-  operators/ Spark DataFrame operator layer (driver queries()/oracle_sql() contract)
+  functions/ shared Spark primitives: column twins, md5 bridge, MinHash,
+             token expressions
+  sources/   transcript schema, deterministic synthesis, readers
+  operators/ Spark DataFrame operator layer (driver queries()/oracle_sql()
+             contract); ALL_QUERIES is assembled in operators/__init__ only
+  pipeline/  the Spark extraction job (mapInPandas stages, salting,
+             checkpoints) and the artifact pipelines built on operators
   streaming/ Structured Streaming variant of the extraction job
+
+Imports are one-way (tests/test_layering.py): kernels/, functions/ and
+sources/ import nothing from operators/, pipeline/ or streaming/;
+pipeline/, streaming/ and jobs/ use only public operator names; and the
+query layer reaches pipeline/ only inside a query's body, never at load.
 """
 
 __version__ = "0.1.0"

@@ -1,10 +1,20 @@
-"""Spark-native column functions (JVM-side, codegen-friendly).
+"""Shared Spark primitives: the layer both operators/ and pipeline/ build on.
 
-Column-expression twins of the pure-Python kernels in ocr_spark.kernels:
-where the reference's scalar semantics are expressible with built-in
-pyspark.sql.functions they belong here (whole-stage codegen, no Python
-worker); the Python kernels remain the source of truth for the quirky
-PHP-exact paths (DOM parsing, permissive dates, offset-capture regex).
+- columns:  column-expression twins of the pure-Python kernels in
+            ocr_spark.kernels. Where the reference's scalar semantics are
+            expressible with built-in pyspark.sql.functions they belong
+            here (whole-stage codegen, no Python worker); the Python
+            kernels remain the source of truth for the quirky PHP-exact
+            paths (DOM parsing, permissive dates, offset-capture regex).
+- hashing:  md5_long, the engine-agnostic 64-bit hash, and the sampling
+            thresholds over it.
+- minhash:  the MinHash signature stage, banding, bounded LSH candidate
+            pairs and their DuckDB CTE chain.
+- frames:   spread_partitions before an Arrow stage, array_dot.
+- text:     the Java-\\s token expression and the shared marker lists.
+- grouped:  grouped_map_stream, applyInPandas as one mapInPandas pass.
+
+This package imports nothing from operators/, pipeline/ or streaming/.
 """
 
 from .columns import (clean_cell, clean_string, detect_currency, gen_code,

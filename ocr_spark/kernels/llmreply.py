@@ -20,11 +20,10 @@ floor to 1, fill the missing one of unit_price/total).
 
 from __future__ import annotations
 
-import json
 import re
 from typing import Any
 
-from .php import php_floatval, php_round, php_str, php_trim
+from .php import json_decode, php_floatval, php_round, php_str, php_trim
 
 _floatval = php_floatval  # (float) cast for every numeric reply field
 
@@ -53,21 +52,11 @@ _BRACE_RE = re.compile(r"\{[\s\S]*\}")
 _MISSING = object()
 
 
-def _reject_constant(name: str):
-    # PHP json_decode rejects bare Infinity/NaN/-Infinity outright;
-    # Python's json accepts them by default — that would let values PHP
-    # never produces into the parity surface
-    raise ValueError(f"non-JSON constant {name}")
-
-
 def _decode(text: str) -> Any:
     """json_decode semantics: parse failure AND a literal ``null`` both
     come back as _MISSING (PHP cannot tell them apart either — both
-    continue the cascade). Bare Infinity/NaN fail the parse like PHP."""
-    try:
-        v = json.loads(text, parse_constant=_reject_constant)
-    except (ValueError, RecursionError):
-        return _MISSING
+    continue the cascade)."""
+    v = json_decode(text)
     return _MISSING if v is None else v
 
 

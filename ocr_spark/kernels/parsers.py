@@ -20,7 +20,6 @@ renditions, txt otherwise (FIXTURES.md §1).
 
 from __future__ import annotations
 
-import json
 import re
 from typing import Any
 
@@ -28,8 +27,8 @@ from . import items as K_items
 from . import tables as K_tables
 from . import textitems as K_text
 from .dates import normalize_date
-from .php import (clean_string, collapse_ws, compile_php, php_floatval,
-                  php_round, php_str, php_strip_tags, php_strlen, php_trim)
+from .php import (clean_string, collapse_ws, compile_php, json_decode,
+                  php_floatval, php_round, php_str, php_strip_tags, php_trim)
 
 MIN_CONFIDENCE = 0.3  # ParserRegistry.php:18
 
@@ -41,20 +40,10 @@ _TEXTBLOCK_LABELS = ("text", "paragraph", "title", "list", "")
 # shared helpers
 # ---------------------------------------------------------------------------
 
-def _reject_constant(name: str):
-    # PHP json_decode rejects bare Infinity/NaN; Python's json accepts
-    # them by default, which would admit values PHP never produces
-    raise ValueError(f"non-JSON constant {name}")
-
-
 def decode_json(text: str) -> Any | None:
     """json_decode(assoc) → dict/list or None (Util.php:21-27 tolerance:
-    the engine counts nulls instead of throwing). Bare Infinity/NaN fail
-    the parse like PHP."""
-    try:
-        v = json.loads(text, parse_constant=_reject_constant)
-    except (ValueError, RecursionError):
-        return None
+    the engine counts nulls instead of throwing)."""
+    v = json_decode(text)
     return v if isinstance(v, (dict, list)) else None
 
 

@@ -13,11 +13,13 @@ Reference citations (paths under /root/reference):
 - is_numeric():   PHP 8 numeric-string rules (AbstractParser.php:187)
 - (float)$s:      leading-numeric-prefix cast (TableExtraction.php:433)
 - strip_tags():   tag removal without inserting spaces (DocParserJsonParser.php:241)
+- json_decode():  null on any parse failure; bare Infinity/NaN rejected
 - preg \\s,\\d:   ASCII-only without /u, Unicode with /u
 """
 
 from __future__ import annotations
 
+import json
 import math
 import re
 from decimal import ROUND_HALF_UP, Decimal
@@ -217,3 +219,20 @@ def compile_php(pattern: str, flags: str = "") -> re.Pattern:
         f |= re.MULTILINE
     f |= re.UNICODE if "u" in flags else re.ASCII
     return re.compile(pattern, f)
+
+
+def _reject_constant(name: str):
+    # PHP json_decode rejects bare Infinity/NaN/-Infinity outright;
+    # Python's json accepts them by default, which would admit values
+    # PHP never produces
+    raise ValueError(f"non-JSON constant {name}")
+
+
+def json_decode(text: str):
+    """PHP json_decode: the decoded value, or None when the parse fails
+    (PHP's null — a literal ``null`` reads the same). Bare Infinity/NaN
+    fail the parse like PHP; so does nesting past the recursion limit."""
+    try:
+        return json.loads(text, parse_constant=_reject_constant)
+    except (ValueError, RecursionError):
+        return None

@@ -11,6 +11,7 @@ sorts columns by name before hashing values.
 
 from .classifier import QUERIES as CLASSIFIER_QUERIES
 from .corpus import QUERIES as CORPUS_QUERIES
+from .curation import QUERIES as CURATION_QUERIES
 from .extraction import QUERIES as EXTRACTION_QUERIES
 from .multimodal import QUERIES as MM_QUERIES
 from .quality import QUERIES as QUALITY_QUERIES
@@ -21,34 +22,10 @@ from .temporal import QUERIES as TEMPORAL_QUERIES
 # merge order = driver check order (it walks the registry in order with a
 # bounded budget): cheap oracle-paired relational/scalar/temporal first,
 # then extraction + multimodal + corpus-quality, the heavy corpus dedup
-# queries last
+# queries and the two curation funnels last. This package is the only
+# writer of ALL_QUERIES.
 ALL_QUERIES = {}
 for _q in (REL_QUERIES, SCALAR_QUERIES, TEMPORAL_QUERIES,
            EXTRACTION_QUERIES, MM_QUERIES, QUALITY_QUERIES,
-           CLASSIFIER_QUERIES, CORPUS_QUERIES):
+           CLASSIFIER_QUERIES, CORPUS_QUERIES, CURATION_QUERIES):
     ALL_QUERIES.update(_q)
-
-
-def _register_curate():
-    # pipeline.curate composes the quality-gate operators, so the import
-    # is circular whenever curate itself is the entry module; in that
-    # order curate.py registers itself at its own module bottom instead
-    try:
-        from ..pipeline.curate import CURATE_FUNNEL_SQL, curate_funnel
-    except ImportError:
-        return
-    ALL_QUERIES["curate_funnel"] = (curate_funnel, CURATE_FUNNEL_SQL)
-
-
-def _register_curate_convs():
-    # same pattern for the conversation-grain funnel
-    try:
-        from ..pipeline.curate_convs import (CONV_CURATE_SQL,
-                                             conv_curate_funnel)
-    except ImportError:
-        return
-    ALL_QUERIES["conv_curate_funnel"] = (conv_curate_funnel, CONV_CURATE_SQL)
-
-
-_register_curate()
-_register_curate_convs()

@@ -14,7 +14,7 @@ perceptron's unnormalized average Σ c·Δ is integer by construction), so
 the score is an exact int64 sum on Spark, DuckDB, and the Python twin —
 no float association, no transcendental, no rounding edge. Both the
 Spark expression and the oracle SQL are GENERATED from the same weight
-constants (the langid `_LANG_MARKERS` single-source pattern), and the
+constants (the langid `LANG_MARKERS` single-source pattern), and the
 bucket index relies on the dimension being a power of two: u64 % 2^k
 equals pmod(signed64, 2^k), so Spark's signed md5 fold, DuckDB's
 UBIGINT and Python's int all agree on the low bits.
@@ -47,7 +47,7 @@ CLS_DIM = 256          # power of two (signed/unsigned low-bit identity)
 CLS_EPOCHS = 200       # converges to 160/160 on the shipped corpus
 CLS_THRESHOLD = 0      # score_sum > 0 -> keep
 
-# the same whitespace class as quality._TOKENS (explicit Java-\s), in
+# the same whitespace class as functions.text.TOKENS_EXPR (explicit Java-\s), in
 # each engine's established escaping convention
 _WS_SPARK = "[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+"
 _WS_SQL = "[ \\t\\n\\x0b\\f\\r]+"
@@ -67,7 +67,7 @@ def featurize(text: str, dim: int = CLS_DIM) -> dict[int, int]:
     which is exactly what separates junk from text). Distinctness is on
     the feature STRING (two distinct strings sharing a bucket count
     twice), so Spark's array_distinct, DuckDB's list_distinct and this
-    twin agree exactly. Tokenization mirrors _TOKENS: lowercase, split
+    twin agree exactly. Tokenization mirrors TOKENS_EXPR: lowercase, split
     on the explicit whitespace class, leading/trailing empties KEPT."""
     import re
     toks = re.split(r"[ \t\n\x0b\f\r]+", (text or "").lower())

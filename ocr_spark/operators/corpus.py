@@ -27,6 +27,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
+from ..functions.frames import array_dot, spread_partitions
+from ..functions.hashing import md5_long
+from ..functions.minhash import (MAX_LSH_BUCKET, MINHASH_CTES, N_MINHASH,
+                                 lsh_candidate_pairs, minhash_bands,
+                                 minhash_sig_stage)
+from ..functions.text import LANG_MARKERS
+
 
 def _docs(spark, sf_dir):
     # null-key guard: a null doc_id would NaN-crash the int64 output of
@@ -50,23 +57,6 @@ def len_bucket(n_tok):
     bucket exactly like a profile computed today."""
     return (F.when(n_tok > 0, F.length(F.bin(n_tok)))
             .otherwise(F.lit(0)).cast("int"))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Redistribute a narrow input across the session's parallelism
-    before an Arrow stage. A small corpus arrives as ONE parquet file =
-    one row group = one scan task (row groups are the split unit, so
-    file-split tuning can't help), and the Python stage downstream then
-    runs single-core — measured 3.4 s single-task vs sub-second spread
-    for the sf0.1 shingle stage. At real scale the scan already plans at
-    least as many splits as cores and this is a NO-OP: no shuffle is
-    added at 100 TB; the small-input repartition moves only the rows the
-    Python stage was about to eat anyway."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 # ---------------------------------------------------------------------------
@@ -336,7 +326,7 @@ def dd_url_dup(spark, sf_dir):
     URL key. The documents table carries no URL, so one is synthesized
     deterministically from doc_id with the same expression on BOTH
     engines (the txt_pii_scrub pattern; see _synth_url). Normalization
-    = _norm_url → md5-fold to a 64-bit url_key (corpus._md5_long).
+    = _norm_url → md5-fold to a 64-bit url_key (functions.hashing.md5_long).
     Dedup is first-wins by min(doc_id) per key.
 
     Scale shape: the normalization is ONE codegen'd map-only projection
@@ -347,7 +337,7 @@ def dd_url_dup(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     norm = _norm_url(_synth_url())
     per_doc = docs.select("doc_id", norm.alias("url_norm"),
-                          _md5_long(norm).alias("url_key"))
+                          md5_long(norm).alias("url_key"))
     groups = (per_doc.groupBy("url_key")
               .agg(F.min("doc_id").alias("canonical_id"),
                    F.count("*").alias("n_variants")))
@@ -361,7 +351,7 @@ def dd_url_dup(spark, sf_dir):
 
 
 # shared oracle CTE chain: synthesized URL → normalized → 64-bit key;
-# mirrors _synth_url + _norm_url + _md5_long exactly
+# mirrors _synth_url + _norm_url + md5_long exactly
 _URL_KEYED_CTES = """u AS (
   SELECT doc_id,
          (CASE WHEN doc_id % 3 = 0 THEN 'https://' ELSE 'http://' END)
@@ -442,7 +432,7 @@ def dd_domain_stats(spark, sf_dir):
     norm = _norm_url(_synth_url())
     per_doc = docs.select(
         F.regexp_extract(norm, "^[^/?]*", 0).alias("host"),
-        _md5_long(norm).alias("url_key"),
+        md5_long(norm).alias("url_key"),
         F.size(F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                        r"[ \t\n\x0b\f\r]+")).cast("long").alias("n_tokens_b"))
     return (per_doc.groupBy("host")
@@ -719,7 +709,7 @@ def dd_prefix_dup(spark, sf_dir):
     prefix = F.array_join(F.slice(tf, 1, PREFIX_DUP_K), " ")
     per_doc = docs.select(
         "doc_id",
-        _md5_long(prefix).alias("prefix_key"),
+        md5_long(prefix).alias("prefix_key"),
         F.md5(F.regexp_replace(F.lower(text), r"[ \t\n\x0b\f\r]+", " "))
         .alias("full_hash"))
     return (per_doc.groupBy("prefix_key")
@@ -860,13 +850,13 @@ def content_md5(c):
 def bloom_pos_explode():
     """Explode column yielding the BLOOM_K probe positions of one
     content hash; expects columns `text_hash` (md5 hex) and `m`
-    (BIGINT) in scope. Positions are pmod(_md5_long(hash||':'||j), m) —
+    (BIGINT) in scope. Positions are pmod(md5_long(hash||':'||j), m) —
     the repo's ONE md5-to-int64 bridge composed with the sign-safe mod,
     identical on DuckDB via the UBIGINT bridge and `((x % m) + m) % m`.
     j rides as a literal suffix so the Spark concat and the SQL
     `|| ':' || CAST(j AS VARCHAR)` render the same preimage bytes."""
     return F.explode(F.array(*[
-        F.pmod(_md5_long(F.concat(F.col("text_hash"), F.lit(f":{j}"))),
+        F.pmod(md5_long(F.concat(F.col("text_hash"), F.lit(f":{j}"))),
                F.col("m"))
         for j in range(BLOOM_K)]))
 
@@ -1210,9 +1200,9 @@ def dd_incremental_neardup(spark, sf_dir):
     batch = incr_batch_frame(docs, replay_suffix=" near dup probe")
     src = (docs.where(~is_batch).select("doc_id", "text")
            .unionByName(batch))
-    sigs = _spread(src).mapInPandas(_minhash_sig_stage(),
-                           "doc_id long, sig array<long>")
-    bands = _minhash_bands(sigs)
+    sigs = spread_partitions(src).mapInPandas(
+        minhash_sig_stage(), "doc_id long, sig array<long>")
+    bands = minhash_bands(sigs)
     corpus_idx = (bands.where(F.col("doc_id") % 10 != INCR_BATCH_RESIDUE)
                   .groupBy("band", "band_hash")
                   .agg(F.min("doc_id").alias("m")))
@@ -1280,7 +1270,7 @@ def _ngram_shingle_stage(batches):
     (The oracle SQL spells the SAME explicit class — RE2's \\s shorthand
     excludes \\x0b, so a \\v-bearing doc tokenizes identically on both
     engines; pinned by the \\x0b differential tests.) The hash is
-    corpus._md5_long's fold — first 8 md5 bytes as
+    md5_long's fold — first 8 md5 bytes as
     a signed int64 — so DuckDB reproduces every value. Doing this in
     Python beats the zip_with/array_distinct HOF chain: higher-order
     array expressions don't enter whole-stage codegen (interpreted
@@ -1324,7 +1314,7 @@ def _ngram_pair_frames(spark, sf_dir):
     tokenizer stage would run twice; `filtered` because the sizes branch
     and both self-join sides read it."""
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    exploded = (_spread(docs)
+    exploded = (spread_partitions(docs)
                 .mapInPandas(_ngram_shingle_stage, "doc_id long, s long")
                 .persist(StorageLevel.MEMORY_AND_DISK))
     stats = (exploded.groupBy("s").agg(F.count("*").alias("df"))
@@ -1541,111 +1531,6 @@ ORDER BY t.thr_bp
 """
 
 
-N_MINHASH = 16
-N_BANDS = 4  # 4 rows per band
-MAX_LSH_BUCKET = 64  # all-pairs above this degrades to the star pattern
-
-
-MINHASH_P = (1 << 61) - 1
-# fixed universal-hash coefficients, shared verbatim by the numpy stage
-# and the generated oracle SQL (VALUES literals)
-MINHASH_A = [(2 * k + 1) * 0x9E3779B97F4A7C15 % MINHASH_P
-             for k in range(N_MINHASH)]
-MINHASH_B = [(k * 0xC2B2AE3D27D4EB4F + 1) % MINHASH_P
-             for k in range(N_MINHASH)]
-
-
-def _minhash_sig_stage(emit_shingles: bool = False):
-    """MinHash signatures in one Arrow batch stage: md5-first-8-bytes per
-    shingle (engine-agnostic — DuckDB reproduces it as
-    ('0x'||substr(md5(s),1,16))::UBIGINT, which makes the whole operator
-    oracle-checkable), then K universal-hash permutations
-    h_k(x) = ((a_k·x + b_k) mod 2^64) mod p vectorized over the whole
-    shingle array with numpy (the expression-tree version — nested
-    transform per (shingle, k) — is interpreted, not codegen'd, and ~6x
-    slower). The mod-2^64 is numpy's native uint64 wraparound, mirrored
-    explicitly in HUGEINT on the oracle side. Deterministic: fixed
-    (a_k, b_k) derived from k.
-
-    emit_shingles=True additionally yields each doc's distinct shingle
-    hashes as a sorted array (the dd_minhash_verified input) — ONE
-    parameterized body, because the verified-dedup oracle assumes the
-    candidate and verify stages share the exact shingle universe; two
-    copies of the tokenize/permutation arithmetic could drift apart."""
-    import numpy as np
-    import pandas as pd
-
-    P = MINHASH_P
-    A = np.array(MINHASH_A, dtype=np.uint64)
-    B = np.array(MINHASH_B, dtype=np.uint64)
-
-    def _sigs(batches):
-        import hashlib
-        for pdf in batches:
-            out_ids, out_sigs, out_sets = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = " ".join((text or "").lower().split()).split(" ")
-                if len(words) < 3:
-                    continue
-                shingles = {" ".join(words[i:i + 3])
-                            for i in range(len(words) - 2)}
-                h = np.fromiter(
-                    (int.from_bytes(hashlib.md5(s.encode()).digest()[:8],
-                                    "big") for s in shingles),
-                    dtype=np.uint64, count=len(shingles))
-                # (K, n) permuted values via broadcasting (uint64 wraps
-                # mod 2^64 before the mod-p); min per row
-                sig = ((A[:, None] * h[None, :] + B[:, None]) % P).min(axis=1)
-                out_ids.append(int(doc_id))
-                out_sigs.append(sig.astype(np.int64).tolist())
-                if emit_shingles:
-                    out_sets.append(np.sort(h.astype(np.int64)).tolist())
-            # a batch whose docs are ALL sub-3-words yields no rows; an
-            # empty DataFrame's columns default to float64 and Arrow
-            # refuses float64 -> array<long> (real at scale: a partition
-            # of short docs), so yield nothing instead
-            if not out_ids:
-                continue
-            cols = {"doc_id": out_ids, "sig": out_sigs}
-            if emit_shingles:
-                cols["shingles"] = out_sets
-            yield pd.DataFrame(cols)
-
-    return _sigs
-
-
-def _md5_long(col):
-    """First 8 bytes of md5(col) as a signed int64 — the engine-agnostic
-    64-bit hash: DuckDB writes the identical value as
-    CAST(('0x'||substr(md5(x),1,16))::UBIGINT AS HUGEINT) - 2^63."""
-    # 2^63 exceeds a Java long, so it rides over py4j as a string literal
-    return (F.conv(F.substring(F.md5(col), 1, 16), 16, 10)
-            .cast("decimal(20,0)")
-            - F.lit("9223372036854775808").cast("decimal(20,0)")
-            ).cast("long")
-
-
-def _minhash_bands(sigs: DataFrame) -> DataFrame:
-    """Explode K-value signatures into (doc_id, band, band_hash) rows —
-    shared by the batch candidate generator and the streaming near-dedup
-    operator (streaming/stateful.py). The band hash is md5 over the
-    comma-joined band values folded to a signed long (compact 8-byte
-    shuffle key at 100 TB, vs a 32-char hex string), engine-agnostic so
-    the DuckDB oracle reproduces the buckets exactly."""
-    rows_per_band = N_MINHASH // N_BANDS
-    return sigs.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                _md5_long(F.concat_ws(",", *[
-                    F.col("sig")[b * rows_per_band + r].cast("string")
-                    for r in range(rows_per_band)])).alias("band_hash"))
-            for b in range(N_BANDS)
-        ])).alias("bh")
-    ).select("doc_id", "bh.band", "bh.band_hash")
-
-
 def dd_minhash_lsh(spark, sf_dir):
     """MinHash + LSH banding near-dup candidates, fully oracle-checked:
     every hash in the pipeline (md5 shingle hash, universal-hash
@@ -1657,25 +1542,15 @@ def dd_minhash_lsh(spark, sf_dir):
     band-hash buckets → within-bucket pair explode. The only shuffle is
     the band-bucket groupBy, keyed by (band_idx, hash)."""
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    sigs = _spread(docs).mapInPandas(_minhash_sig_stage(),
-                                     "doc_id long, sig array<long>")
+    sigs = spread_partitions(docs).mapInPandas(
+        minhash_sig_stage(), "doc_id long, sig array<long>")
     # pipeline break: signatures are tiny (K longs/doc); caching prevents
     # the band explode from re-deriving shingles+hashes per band reference
     sigs = sigs.cache()
-    return _lsh_candidate_pairs(_minhash_bands(sigs))
+    return lsh_candidate_pairs(minhash_bands(sigs))
 
 
 VERIFY_JACCARD_BP = 7000  # exact-jaccard floor (basis points) for verified dedup
-
-
-def _minhash_sig_shingle_stage():
-    """_minhash_sig_stage with per-doc sorted shingle-hash arrays — one
-    tokenize+md5 pass feeds BOTH the LSH candidate generator and the
-    exact-jaccard verifier (two separate stages would run the most
-    expensive per-doc work twice, and two copies of the arithmetic could
-    drift apart under the verified-dedup oracle's shared-universe
-    assumption)."""
-    return _minhash_sig_stage(emit_shingles=True)
 
 
 def dd_minhash_verified(spark, sf_dir):
@@ -1698,11 +1573,12 @@ def dd_minhash_verified(spark, sf_dir):
     frame by doc_id — linear, co-partitioned, AQE-broadcastable when the
     candidate side is tiny. No unkeyed join anywhere."""
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    both = (_spread(docs).mapInPandas(_minhash_sig_shingle_stage(),
-                             "doc_id long, sig array<long>, "
-                             "shingles array<long>")
+    both = (spread_partitions(docs)
+            .mapInPandas(minhash_sig_stage(emit_shingles=True),
+                         "doc_id long, sig array<long>, "
+                         "shingles array<long>")
             .persist())
-    cand = _lsh_candidate_pairs(_minhash_bands(both.select("doc_id", "sig")))
+    cand = lsh_candidate_pairs(minhash_bands(both.select("doc_id", "sig")))
     sets = both.select("doc_id", "shingles")
     sa = sets.select(F.col("doc_id").alias("doc_a"),
                      F.col("shingles").alias("sh_a"))
@@ -1738,12 +1614,13 @@ def dd_minhash_est_error(spark, sf_dir):
     oracle replays the whole pipeline (permutations, banding, star cap,
     estimator) exactly."""
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    both = (_spread(docs).mapInPandas(_minhash_sig_shingle_stage(),
-                                      "doc_id long, sig array<long>, "
-                                      "shingles array<long>")
+    both = (spread_partitions(docs)
+            .mapInPandas(minhash_sig_stage(emit_shingles=True),
+                         "doc_id long, sig array<long>, "
+                         "shingles array<long>")
             .persist())
-    cand = (_lsh_candidate_pairs(
-        _minhash_bands(both.select("doc_id", "sig")))
+    cand = (lsh_candidate_pairs(
+        minhash_bands(both.select("doc_id", "sig")))
         .select("doc_a", "doc_b"))
     pa = both.select(F.col("doc_id").alias("doc_a"),
                      F.col("sig").alias("sig_a"),
@@ -1778,118 +1655,14 @@ def dd_minhash_est_error(spark, sf_dir):
             .orderBy("bin"))
 
 
-def _lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
-    """(doc_id, band, band_hash) → candidate pairs; every row, list, and
-    task bounded.
-
-    Two passes over the compact (24-byte) band rows instead of one
-    unbounded collect: a count/min aggregation per bucket first (pure
-    map-side-combinable scalars), then a join back on the bucket key.
-    Buckets up to MAX_LSH_BUCKET members collect their (pre-bounded)
-    member list and explode all pairs (O(k²), k capped); a DEGENERATE
-    bucket — empty/boilerplate docs collapsing to one signature,
-    unbounded at 100 TB — emits the star pattern (min_doc, other) as a
-    MAP-ONLY projection of the joined rows: no collect_list row ever
-    holds more than MAX_LSH_BUCKET ids (the previous shape collected the
-    full bucket before deciding — a 10⁸-doc boilerplate cluster was one
-    multi-GB array in one aggregation task). O(n) star pairs preserve the
-    cluster's connectivity (a connected-components pass groups it
-    identically). The stats side is one row per non-singleton bucket;
-    AQE broadcasts it when small and skew-splits the join when a
-    degenerate key dominates."""
-    stats = (bands.groupBy("band", "band_hash")
-             .agg(F.count("*").alias("n"), F.min("doc_id").alias("mind"))
-             .where(F.col("n") >= 2))
-    joined = bands.join(stats, ["band", "band_hash"])
-    star = (joined.where((F.col("n") > MAX_LSH_BUCKET)
-                         & (F.col("doc_id") != F.col("mind")))
-            .select(F.col("mind").alias("doc_a"),
-                    F.col("doc_id").alias("doc_b")))
-    small = (joined.where(F.col("n") <= MAX_LSH_BUCKET)
-             .groupBy("band", "band_hash")
-             .agg(F.sort_array(F.collect_list("doc_id")).alias("docs")))
-    all_pairs = F.flatten(F.transform(
-        F.col("docs"),
-        lambda a, i: F.transform(
-            F.slice(F.col("docs"), i + 2, F.size("docs")),
-            lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b")))
-    ))
-    pairs = (small.select(F.explode(all_pairs).alias("p"))
-             .select("p.doc_a", "p.doc_b")
-             .unionByName(star))
-    return (
-        pairs.groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_band_collisions"))
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-# ---- generated oracle SQL for the MinHash/LSH family -----------------------
-# The (k, a, b) coefficients are embedded as VALUES literals from the same
-# Python constants the numpy stage uses; every hash step is reproduced
-# exactly (md5-first-8-bytes shingle hash, HUGEINT mod-2^64 wraparound for
-# the universal-hash permutations, md5 band hash, star cap on degenerate
-# buckets).
-
-_MINHASH_ROWS_PER_BAND = N_MINHASH // N_BANDS
-_MINHASH_KS_VALUES = ", ".join(
-    f"({k}, {MINHASH_A[k]}::HUGEINT, {MINHASH_B[k]}::HUGEINT)"
-    for k in range(N_MINHASH))
-
-# CTE chain from a (doc_id, text) source named {src} to cand_pairs
-_MINHASH_CTES = f"""
-shingled AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS shingle
-    FROM (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')), ' ') AS words
-      FROM {{src}}
-    ), UNNEST(range(1, len(words) - 1)) AS t(i)
-    WHERE len(words) >= 3
-  )
-),
-hashed AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(shingle), 1, 16))::UBIGINT::HUGEINT AS h
-  FROM shingled
-),
-ks(k, a, b) AS (VALUES {_MINHASH_KS_VALUES}),
-sigs AS (
-  SELECT doc_id, k,
-         MIN(CAST(((a * h + b) % 18446744073709551616) % {MINHASH_P} AS BIGINT)) AS sigv
-  FROM hashed CROSS JOIN ks
-  GROUP BY doc_id, k
-),
-bands AS (
-  SELECT doc_id, band,
-         CAST(('0x' || substr(md5(string_agg(CAST(sigv AS VARCHAR), ',' ORDER BY k)), 1, 16))::UBIGINT::HUGEINT
-              - 9223372036854775808 AS BIGINT) AS band_hash
-  FROM (SELECT doc_id, k, sigv, CAST(k // {_MINHASH_ROWS_PER_BAND} AS INT) AS band FROM sigs)
-  GROUP BY doc_id, band
-),
-bsz AS (
-  SELECT band, band_hash, COUNT(*) AS n, MIN(doc_id) AS mind
-  FROM bands GROUP BY 1, 2
-),
-cand_pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash
-              AND a.doc_id < b.doc_id
-  JOIN bsz s ON s.band = a.band AND s.band_hash = a.band_hash
-  WHERE s.n <= {MAX_LSH_BUCKET} OR a.doc_id = s.mind
-)"""
-
 DD_MINHASH_SQL = f"""
-WITH {_MINHASH_CTES.format(src="documents")}
+WITH {MINHASH_CTES.format(src="documents")}
 SELECT doc_a, doc_b, COUNT(*) AS n_band_collisions
 FROM cand_pairs GROUP BY 1, 2 ORDER BY doc_a, doc_b
 """
 
 DD_MINHASH_VERIFIED_SQL = f"""
-WITH {_MINHASH_CTES.format(src="documents")},
+WITH {MINHASH_CTES.format(src="documents")},
 sets AS (SELECT doc_id, COUNT(*) AS n_sh FROM hashed GROUP BY doc_id),
 uniq AS (SELECT DISTINCT doc_a, doc_b FROM cand_pairs),
 inter AS (
@@ -1918,7 +1691,7 @@ ORDER BY doc_a, doc_b
 # the intersection attaches with a LEFT JOIN + COALESCE 0 — the Spark side
 # gets the same for free from array_intersect.
 DD_MINHASH_EST_ERR_SQL = f"""
-WITH {_MINHASH_CTES.format(src="documents")},
+WITH {MINHASH_CTES.format(src="documents")},
 sets AS (SELECT doc_id, COUNT(*) AS n_sh FROM hashed GROUP BY doc_id),
 uniq AS (SELECT DISTINCT doc_a, doc_b FROM cand_pairs),
 eq AS (
@@ -1958,7 +1731,7 @@ FROM scored GROUP BY 1 ORDER BY bin
 """
 
 DD_CLUSTERS_SQL = f"""
-WITH RECURSIVE {_MINHASH_CTES.format(src="documents")},
+WITH RECURSIVE {MINHASH_CTES.format(src="documents")},
 lsh_pairs AS (SELECT DISTINCT doc_a, doc_b FROM cand_pairs),
 exact_pairs AS (
   SELECT keep AS doc_a, doc_id AS doc_b FROM (
@@ -2044,8 +1817,8 @@ def dd_simhash(spark, sf_dir):
     all replayed in DuckDB (DD_SIMHASH_SQL); planted-mutation recovery
     additionally pinned in pytest."""
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    sigs = _spread(docs).mapInPandas(_simhash_sig_stage(),
-                                     "doc_id long, simhash long")
+    sigs = spread_partitions(docs).mapInPandas(
+        _simhash_sig_stage(), "doc_id long, simhash long")
     # dedup to one row per distinct signature BEFORE banding: the member
     # list rides along, so banding/pairing cost scales with distinct
     # signatures, not documents
@@ -2243,11 +2016,6 @@ DD_SIMHASH_SQL = _dd_simhash_sql()
 # Similarity search over embeddings
 # ---------------------------------------------------------------------------
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
 N_COSINE_QUERIES = 5   # the dense family's query universe (vec_id cutoff)
 
 
@@ -2259,8 +2027,8 @@ def sim_cosine_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     emb_d = (emb.select("vec_id",
                         F.col("embedding").cast("array<double>").alias("embedding"))
-             .withColumn("norm", F.sqrt(_dot(F.col("embedding"),
-                                             F.col("embedding")))))
+             .withColumn("norm", F.sqrt(array_dot(F.col("embedding"),
+                                                  F.col("embedding")))))
     queries = emb_d.where(F.col("vec_id") < N_COSINE_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"),
         F.col("norm").alias("qnorm"))
@@ -2268,7 +2036,7 @@ def sim_cosine_topk(spark, sf_dir):
                           F.col("embedding").alias("cvec"),
                           F.col("norm").alias("cnorm"))
     sim = F.round(
-        _dot(F.col("qvec"), F.col("cvec"))
+        array_dot(F.col("qvec"), F.col("cvec"))
         / (F.col("qnorm") * F.col("cnorm")), 4)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
@@ -2659,8 +2427,8 @@ def sim_lsh_buckets(spark, sf_dir):
            .select("vec_id",
                    F.col("embedding").cast("array<double>").alias("vec")))
     return (
-        _spread(emb).mapInPandas(_lsh_bucket_stage(_SIM_BUCKET_PLANES),
-                        "vec_id long, bucket long")
+        spread_partitions(emb).mapInPandas(
+            _lsh_bucket_stage(_SIM_BUCKET_PLANES), "vec_id long, bucket long")
         .groupBy("bucket")
         .agg(F.count("*").alias("n_vectors"),
              F.min("vec_id").alias("min_vec_id"))
@@ -2733,49 +2501,41 @@ FROM documents ORDER BY doc_id
 """
 
 
-_LANG_MARKERS = {
-    "en": ["the", "and", "of"],
-    "de": ["der", "und", "die"],
-    "fr": ["le", "et", "les"],
-    "es": ["el", "y", "los"],
-}
-
-
 def lang_hit_columns(text_col):
     """Per-language stopword-marker hit counts for a text Column (the
     txt_langid heuristic's scoring half, reusable by pipelines)."""
     tokens = F.split(F.lower(text_col), r"[ \t\n\x0b\f\r]+")
     return [
         F.size(F.filter(tokens, lambda t: t.isin(*words))).alias(f"hits_{lang}")
-        for lang, words in _LANG_MARKERS.items()
+        for lang, words in LANG_MARKERS.items()
     ]
 
 
 def lang_argmax_column():
     """Argmax over the hits_<lang> columns with deterministic tie order
     (earlier markers win); 'unk' when nothing matched."""
-    best = F.greatest(*[F.col(f"hits_{lang}") for lang in _LANG_MARKERS])
+    best = F.greatest(*[F.col(f"hits_{lang}") for lang in LANG_MARKERS])
     pred = F.lit("unk")
-    for lang in reversed(list(_LANG_MARKERS)):  # earlier langs win ties
+    for lang in reversed(list(LANG_MARKERS)):  # earlier langs win ties
         pred = F.when((F.col(f"hits_{lang}") == best) & (best > 0),
                       F.lit(lang)).otherwise(pred)
     return pred
 
 
 # the DuckDB mirrors of lang_hit_columns / lang_argmax_column, GENERATED
-# from the same _LANG_MARKERS dict (three hand-maintained transcriptions
+# from the same LANG_MARKERS dict (three hand-maintained transcriptions
 # of the marker lists would drift silently); shared by TXT_LANGID_SQL and
 # extraction.py's CONV_LANG_MIX_SQL
 LANG_HITS_SQL = ",\n".join(
     "    len(list_filter(string_split_regex(lower(text), '[ \\t\\n\\x0b\\f\\r]+'), "
     f"t -> t IN ({', '.join(repr(w) for w in words)}))) AS hits_{lang}"
-    for lang, words in _LANG_MARKERS.items())
+    for lang, words in LANG_MARKERS.items())
 
 _LANG_GREATEST = "GREATEST(" + ", ".join(
-    f"hits_{lang}" for lang in _LANG_MARKERS) + ")"
+    f"hits_{lang}" for lang in LANG_MARKERS) + ")"
 LANG_PRED_SQL = ("CASE " + "\n         ".join(
     f"WHEN hits_{lang} = {_LANG_GREATEST} AND {_LANG_GREATEST} > 0"
-    f" THEN '{lang}'" for lang in _LANG_MARKERS)
+    f" THEN '{lang}'" for lang in LANG_MARKERS)
     + "\n         ELSE 'unk' END AS pred_lang")
 
 
@@ -3117,7 +2877,7 @@ def mm_winnow_fingerprint(spark, sf_dir):
             yield pd.DataFrame({"doc_id": pdf["doc_id"],
                                 "n_fingerprints": fps})
 
-    return (_spread(docs)
+    return (spread_partitions(docs)
             .mapInPandas(_winnow, "doc_id long, n_fingerprints int")
             .orderBy("doc_id"))
 
@@ -3178,7 +2938,7 @@ def mm_binary_features(spark, sf_dir):
                 "head_hex": heads, "n_bytes": sizes,
             })
 
-    return (_spread(docs).mapInPandas(
+    return (spread_partitions(docs).mapInPandas(
         _decode, "doc_id long, mime string, head_hex string, n_bytes int")
         .orderBy("doc_id"))
 
@@ -3375,7 +3135,7 @@ def dd_embedding_neardup(spark, sf_dir):
     # happens only downstream of the n>=2 broadcast filter in
     # _emb_blocked, so singleton-bucket vectors (the overwhelming
     # majority) never copy their payload 4x.
-    coded = (_spread(emb.unionByName(planted))
+    coded = (spread_partitions(emb.unionByName(planted))
              .mapInPandas(_neardup_band_stage(),
                           "vec_id long, codes array<long>, "
                           "vec array<double>")
@@ -3464,7 +3224,7 @@ def dd_semantic_dup(spark, sf_dir):
         "vec_id", F.col("embedding").cast("array<double>").alias("vec"))
     planted = emb.where(F.col("vec_id") % 10 == 0).select(
         (F.col("vec_id") + 1000000).alias("vec_id"), F.col("vec"))
-    full = _spread(emb.unionByName(planted))
+    full = spread_partitions(emb.unionByName(planted))
     C = _ivf_centroids(full.select("vec_id", "vec"),
                        SEMDEDUP_CELLS, N_IVF_ITERS)
     assigned = (full.mapInPandas(
@@ -3530,7 +3290,7 @@ def lsh_code_frame(emb):
 
     e = (emb.select("vec_id",
                     F.col("embedding").cast("array<double>").alias("vec"))
-         .withColumn("norm", F.sqrt(_dot(F.col("vec"), F.col("vec")))))
+         .withColumn("norm", F.sqrt(array_dot(F.col("vec"), F.col("vec")))))
     planes = _lsh_topk_planes()
     weights = (1 << np.arange(N_LSH_TOPK_PLANES)).astype(np.int64)
 
@@ -3547,7 +3307,7 @@ def lsh_code_frame(emb):
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "code": code,
                                 "vec": pdf["vec"], "norm": pdf["norm"]})
 
-    return _spread(e).mapInPandas(
+    return spread_partitions(e).mapInPandas(
         _code_stage, "vec_id long, code long, vec array<double>, norm double")
 
 
@@ -3591,7 +3351,7 @@ def sim_lsh_topk(spark, sf_dir):
                    *[F.col("qcode").bitwiseXOR(F.lit(m)) for m in masks])))
                .drop("qcode"))
 
-    cos = _dot(F.col("qvec"), F.col("vec")) / (F.col("qnorm") * F.col("norm"))
+    cos = array_dot(F.col("qvec"), F.col("vec")) / (F.col("qnorm") * F.col("norm"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                                F.asc("cand_id"))
     return (
@@ -3691,7 +3451,7 @@ def emb_cosine_hist(spark, sf_dir):
                      F.col("vec").alias("v1"), F.col("norm").alias("n1"))
     b = coded.select(F.col("vec_id").alias("id2"), F.col("code"),
                      F.col("vec").alias("v2"), F.col("norm").alias("n2"))
-    cos = _dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2"))
+    cos = array_dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2"))
     pairs = (a.join(b, "code")
              .where(F.col("id1") < F.col("id2"))
              .select(F.least(F.lit(EMB_HIST_BINS - 1),
@@ -3868,7 +3628,7 @@ def sim_ivf_topk(spark, sf_dir):
     vs the brute-force baseline is asserted ≥ 0.8 in tests."""
     emb = (_emb(spark, sf_dir)
            .select("vec_id", F.col("embedding").cast("array<double>").alias("vec"))
-           .withColumn("norm", F.sqrt(_dot(F.col("vec"), F.col("vec")))))
+           .withColumn("norm", F.sqrt(array_dot(F.col("vec"), F.col("vec")))))
     C = _ivf_centroids(emb.select("vec_id", "vec"),
                        N_IVF_CELLS, N_IVF_ITERS)
     centroids = spark.createDataFrame(
@@ -3877,7 +3637,7 @@ def sim_ivf_topk(spark, sf_dir):
 
     # corpus → nearest centroid: map-only Arrow stage, centroids in the
     # closure (the broadcast-variables pattern; no join, no shuffle)
-    assigned = _spread(emb).mapInPandas(
+    assigned = spread_partitions(emb).mapInPandas(
         _ivf_assign_stage(C),
         "vec_id long, cell_id int, vec array<double>, norm double")
 
@@ -3898,7 +3658,7 @@ def sim_ivf_topk(spark, sf_dir):
     )
 
     # probe join: candidates only from the probed cells; norms precomputed
-    cos = (_dot(F.col("qvec"), F.col("vec"))
+    cos = (array_dot(F.col("qvec"), F.col("vec"))
            / (F.col("qnorm") * F.col("norm")))
     wk = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
@@ -4066,7 +3826,7 @@ def sim_pq_topk(spark, sf_dir):
                       np.asarray(r["vec"], dtype=np.float64))
                      for r in qrows)
 
-    codes = _spread(emb).mapInPandas(
+    codes = spread_partitions(emb).mapInPandas(
         _pq_encode_stage(books),
         "vec_id long, codes array<int>, norm double")
 
@@ -4087,8 +3847,8 @@ def sim_pq_topk(spark, sf_dir):
          for qid, q in queries],
         "query_id long, qvec array<double>, qnorm double")
     cand = emb.join(broadcast(shortlist), "vec_id")
-    cos = (_dot(F.col("qvec"), F.col("vec"))
-           / (F.col("qnorm") * F.sqrt(_dot(F.col("vec"), F.col("vec")))))
+    cos = (array_dot(F.col("qvec"), F.col("vec"))
+           / (F.col("qnorm") * F.sqrt(array_dot(F.col("vec"), F.col("vec")))))
     wk = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("cand_id"))
     return (cand.join(broadcast(qdf), "query_id")
@@ -4390,7 +4150,7 @@ def dd_cluster_canonical(spark, sf_dir):
 
 
 DD_CANONICAL_SQL = f"""
-WITH RECURSIVE {_MINHASH_CTES.format(src="documents")},
+WITH RECURSIVE {MINHASH_CTES.format(src="documents")},
 lsh_pairs AS (SELECT DISTINCT doc_a, doc_b FROM cand_pairs),
 exact_pairs AS (
   SELECT keep AS doc_a, doc_id AS doc_b FROM (
@@ -4620,7 +4380,7 @@ def dd_novelty_by_source(spark, sf_dir):
     per-doc counts then reduce before the small doc_id→source join, so
     the per-source rollup joins doc-grain rows, never shingle-grain."""
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    exploded = (_spread(docs)
+    exploded = (spread_partitions(docs)
                 .mapInPandas(_ngram_shingle_stage, "doc_id long, s long")
                 .persist())
     first = exploded.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
@@ -4715,7 +4475,7 @@ QUERIES = {
     "dd_incremental_neardup": (
         dd_incremental_neardup,
         _dd_incr_neardup_sql().format(
-            minhash=_MINHASH_CTES.format(src="src"))),
+            minhash=MINHASH_CTES.format(src="src"))),
     "sim_cosine_topk": (sim_cosine_topk, SIM_COSINE_SQL),
     "sim_bm25_topk": (sim_bm25_topk, SIM_BM25_SQL),
     "sim_hybrid_topk": (sim_hybrid_topk, _sim_hybrid_sql()),

@@ -11,6 +11,29 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.hashing import md5_long
+from ..functions.minhash import (MINHASH_CTES, lsh_candidate_pairs,
+                                 minhash_bands, minhash_sig_stage)
+from ..functions.text import REFUSAL_MARKS, TOKENS_EXPR
+from ..sources.synthetic import (BASE_EPOCH, agent_transcripts,
+                                 agent_transcripts_sql)
+
+
+def _doc_turns(docs, payload, role: str, tool: str, turn_idx=None):
+    """One transcript turn per document carrying `payload`: conversation
+    doc_id % 50, turn doc_id % 1000 unless given, ts BASE_EPOCH + doc_id
+    seconds."""
+    if turn_idx is None:
+        turn_idx = F.col("doc_id") % 1000
+    return docs.select(
+        F.format_string("conv-%06d", F.col("doc_id") % 50).alias("conv_id"),
+        turn_idx.cast("int").alias("turn_idx"),
+        F.lit(role).alias("role"),
+        payload.alias("text"),
+        F.lit(tool).alias("tool"),
+        F.timestamp_seconds(F.lit(BASE_EPOCH) + F.col("doc_id")).alias("ts"),
+    )
+
 
 def _transcripts_from_documents(spark, sf_dir):
     """Wrap each document's text into a transcript turn whose payload is a
@@ -32,14 +55,7 @@ def _transcripts_from_documents(spark, sf_dir):
         F.format_string("%d.00", ((F.col("doc_id") % 5) + 1) * 10),
         F.lit("\nremark: "), F.substring(F.col("text"), 1, 120), F.lit("\n"),
     )
-    return docs.select(
-        F.format_string("conv-%06d", F.col("doc_id") % 50).alias("conv_id"),
-        (F.col("doc_id") % 1000).cast("int").alias("turn_idx"),
-        F.lit("tool").alias("role"),
-        payload.alias("text"),
-        F.lit("markdown").alias("tool"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("doc_id")).alias("ts"),
-    )
+    return _doc_turns(docs, payload, "tool", "markdown")
 
 
 def extract_documents(spark, sf_dir):
@@ -150,14 +166,8 @@ def _sale_transcripts_from_documents(spark, sf_dir):
     # (conv, turn, ...) — a collision would merge two invoices into one
     # sales row while the oracle emits two (latent sf-scaling divergence;
     # the per-row extraction queries don't group, so they keep % 1000).
-    return docs.select(
-        F.format_string("conv-%06d", F.col("doc_id") % 50).alias("conv_id"),
-        (F.col("doc_id") / 50).cast("int").alias("turn_idx"),
-        F.lit("tool").alias("role"),
-        payload.alias("text"),
-        F.lit("markdown").alias("tool"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("doc_id")).alias("ts"),
-    )
+    return _doc_turns(docs, payload, "tool", "markdown",
+                      turn_idx=F.col("doc_id") / 50)
 
 
 def import_sales(spark, sf_dir):
@@ -260,14 +270,7 @@ def _html_transcripts_from_documents(spark, sf_dir):
         F.col("n_chars").cast("string"),
         F.lit(_HTML_CHROME[5]),
     )
-    return docs.select(
-        F.format_string("conv-%06d", F.col("doc_id") % 50).alias("conv_id"),
-        (F.col("doc_id") % 1000).cast("int").alias("turn_idx"),
-        F.lit("assistant").alias("role"),
-        payload.alias("text"),
-        F.lit("html").alias("tool"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("doc_id")).alias("ts"),
-    )
+    return _doc_turns(docs, payload, "assistant", "html")
 
 
 def extract_html_readability(spark, sf_dir):
@@ -408,14 +411,7 @@ def _pdf_transcripts_from_documents(spark, sf_dir):
         p2,
         F.lit(_PDF_CHROME[3]),
     )
-    return docs.select(
-        F.format_string("conv-%06d", F.col("doc_id") % 50).alias("conv_id"),
-        (F.col("doc_id") % 1000).cast("int").alias("turn_idx"),
-        F.lit("tool").alias("role"),
-        payload.alias("text"),
-        F.lit("pdf").alias("tool"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("doc_id")).alias("ts"),
-    )
+    return _doc_turns(docs, payload, "tool", "pdf")
 
 
 def extract_pdf_layout_q(spark, sf_dir):
@@ -578,8 +574,6 @@ def dd_conv_neardup(spark, sf_dir):
     candidate pairs join back to conv ids on both sides (keyed joins on
     the surrogate — no broadcast assumption, works at any conv count).
     Planted-duplicate recovery additionally pinned in pytest."""
-    from ..operators.corpus import (_lsh_candidate_pairs, _md5_long,
-                                    _minhash_bands, _minhash_sig_stage)
     t = _transcripts_from_documents(spark, sf_dir)
     assembled = (
         t.groupBy("conv_id")
@@ -589,12 +583,12 @@ def dd_conv_neardup(spark, sf_dir):
                 F.concat_ws("\n", F.transform(
                     F.col("turns"), lambda s: s["text"])).alias("text"))
     )
-    docs = assembled.select(_md5_long(F.col("conv_id")).alias("doc_id"),
+    docs = assembled.select(md5_long(F.col("conv_id")).alias("doc_id"),
                             "text", "conv_id")
     ids = docs.select("doc_id", "conv_id")
     sigs = docs.select("doc_id", "text").mapInPandas(
-        _minhash_sig_stage(), "doc_id long, sig array<long>").cache()
-    pairs = _lsh_candidate_pairs(_minhash_bands(sigs))
+        minhash_sig_stage(), "doc_id long, sig array<long>").cache()
+    pairs = lsh_candidate_pairs(minhash_bands(sigs))
     return (
         pairs
         .join(ids.withColumnRenamed("doc_id", "doc_a")
@@ -611,8 +605,7 @@ def dd_conv_neardup(spark, sf_dir):
 def _dd_conv_neardup_sql() -> str:
     """Oracle for dd_conv_neardup: the conv_assemble transcripts CTE →
     stable-order assembly → md5-long surrogate ids → the shared MinHash
-    CTE chain (corpus._MINHASH_CTES) → pairs mapped back to conv ids."""
-    from ..operators.corpus import _MINHASH_CTES
+    CTE chain (functions.minhash.MINHASH_CTES) → pairs mapped back to conv ids."""
     return f"""
 WITH t AS ({_TRANSCRIPTS_CTE}),
 assembled AS (
@@ -625,7 +618,7 @@ ids AS (
               - 9223372036854775808 AS BIGINT) AS doc_id
   FROM assembled
 ),
-{_MINHASH_CTES.format(src="ids")}
+{MINHASH_CTES.format(src="ids")}
 SELECT least(ia.conv_id, ib.conv_id) AS conv_a,
        greatest(ia.conv_id, ib.conv_id) AS conv_b,
        COUNT(*) AS n_band_collisions
@@ -655,53 +648,6 @@ def extract_conversations_q(spark, sf_dir):
     )
 
 
-_AGENT_ROLES = ("user", "assistant", "tool", "system")
-_AGENT_TOOLS = ("search", "code", "browser")
-
-
-def _agent_transcripts(spark, sf_dir, conv_mod=50):
-    """Transcripts in the exact input_hint shape (conv_id, turn_idx, role,
-    text, tool, ts), synthesized deterministically from documents with a
-    realistic role mix and tool names on tool turns — the input for the
-    transcript-native analytics queries (conv_stats).
-
-    conv_mod parity trap: with the default 50, conv ≡ doc_id (mod 50)
-    and role ≡ doc_id (mod 4) share the factor 2 — even conversations
-    get ONLY user/tool turns and odd ones ONLY assistant/system, so any
-    op that needs a user turn FOLLOWED by an assistant turn in the same
-    conversation sees zero instances. Such ops pass conv_mod=25
-    (coprime to 4: every conversation mixes all four roles). Tie-role
-    constancy survives any conv_mod dividing 1000: rows tied on
-    (conv_id, turn_idx) agree mod 1000 and hence mod 4.
-
-    All doc_id arithmetic uses pmod, not %: Spark's % keeps the
-    dividend's sign, so a NEGATIVE doc_id (production ids are md5-longs,
-    uniform over signed int64) would make element_at(roles, 0) throw and
-    doc_id * 7 overflow int64 in timestamp_seconds. pmod keeps every
-    index in range and the ts seed is bounded to 2^31 seconds-from-epoch
-    before the *7; the oracle CTE mirrors with ((x % n) + n) % n —
-    identical to % on the dense positive testdata ids, so the oracle
-    hash is unchanged."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    role = F.element_at(F.array(*[F.lit(r) for r in _AGENT_ROLES]),
-                        (F.pmod(did, F.lit(4)) + 1).cast("int"))
-    tool = F.when(F.pmod(did, F.lit(4)) == 2,
-                  F.element_at(F.array(*[F.lit(t) for t in _AGENT_TOOLS]),
-                               (F.pmod(did, F.lit(3)) + 1).cast("int")))
-    return docs.select(
-        F.format_string("conv-%06d",
-                        F.pmod(did, F.lit(conv_mod))).alias("conv_id"),
-        F.pmod(did, F.lit(1000)).cast("int").alias("turn_idx"),
-        role.alias("role"),
-        F.col("text"),
-        tool.alias("tool"),
-        F.timestamp_seconds(
-            F.lit(1735689600)
-            + F.pmod(did, F.lit(2147483648)) * 7).alias("ts"),
-    )
-
-
 def conv_stats(spark, sf_dir):
     """Per-conversation transcript statistics — the screening pass a
     transcript pipeline runs before extraction/dedup: role balance, tool
@@ -710,7 +656,7 @@ def conv_stats(spark, sf_dir):
     output an exact integer so the oracle is exact. Span arithmetic is
     timestampdiff on whole-second timestamps (the w3 lesson: no
     unix_timestamp truncation class)."""
-    t = _agent_transcripts(spark, sf_dir)
+    t = agent_transcripts(spark, sf_dir)
 
     def n_role(r):
         return F.sum((F.col("role") == r).cast("bigint"))
@@ -745,7 +691,7 @@ def conv_dialogue_balance(spark, sf_dir):
     rows sharing (conv_id, turn_idx) carry the SAME role by
     construction, so the role sequence — and hence the alternation
     count, min_by/max_by role — is invariant under tie order."""
-    t = _agent_transcripts(spark, sf_dir)
+    t = agent_transcripts(spark, sf_dir)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     flagged = t.select(
         "conv_id", "turn_idx", "role",
@@ -776,28 +722,8 @@ def conv_dialogue_balance(spark, sf_dir):
         .orderBy("conv_id"))
 
 
-def _agent_transcripts_cte(conv_mod=50):
-    return _AGENT_TRANSCRIPTS_CTE.replace(
-        "% 50) + 50) % 50", f"% {conv_mod}) + {conv_mod}) % {conv_mod}")
-
-
-_AGENT_TRANSCRIPTS_CTE = """
-  SELECT printf('conv-%06d', ((doc_id % 50) + 50) % 50) AS conv_id,
-         CAST(((doc_id % 1000) + 1000) % 1000 AS INTEGER) AS turn_idx,
-         ['user', 'assistant', 'tool', 'system']
-           [CAST(((doc_id % 4) + 4) % 4 AS INT) + 1] AS role,
-         text,
-         CASE WHEN ((doc_id % 4) + 4) % 4 = 2
-              THEN ['search', 'code', 'browser']
-                     [CAST(((doc_id % 3) + 3) % 3 AS INT) + 1]
-         END AS tool,
-         to_timestamp(1735689600
-           + (((doc_id % 2147483648) + 2147483648) % 2147483648) * 7) AS ts
-  FROM documents
-"""
-
 CONV_STATS_SQL = f"""
-WITH t AS ({_AGENT_TRANSCRIPTS_CTE})
+WITH t AS ({agent_transcripts_sql()})
 SELECT conv_id,
        CAST(COUNT(*) AS BIGINT) AS n_turns,
        CAST(SUM(CASE WHEN role = 'user' THEN 1 ELSE 0 END) AS BIGINT)
@@ -815,7 +741,7 @@ FROM t GROUP BY conv_id ORDER BY conv_id
 
 
 CONV_BALANCE_SQL = f"""
-WITH t AS ({_AGENT_TRANSCRIPTS_CTE}),
+WITH t AS ({agent_transcripts_sql()}),
 flagged AS (
   SELECT conv_id, turn_idx, role,
          CAST(len(text) AS BIGINT) AS n_chars,
@@ -870,7 +796,7 @@ def conv_tool_chains(spark, sf_dir):
     add a second exchange), the run flags reuse the window's sort, and
     the run-length/per-conv aggregations cluster on conv_id subsets so
     Spark reuses the partitioning (pinned in test_plans.py)."""
-    t = _agent_transcripts(spark, sf_dir)
+    t = agent_transcripts(spark, sf_dir)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     # tie dedup: rows sharing (conv_id, turn_idx) carry the same role by
     # construction — keep the first row of each tie group via lag, which
@@ -926,7 +852,7 @@ def conv_tool_chains(spark, sf_dir):
 
 
 CONV_TOOL_CHAINS_SQL = f"""
-WITH t AS ({_AGENT_TRANSCRIPTS_CTE}),
+WITH t AS ({agent_transcripts_sql()}),
 turns AS (
   SELECT conv_id, turn_idx, MIN(role) AS role
   FROM t GROUP BY conv_id, turn_idx
@@ -1004,10 +930,10 @@ def conv_reply_latency(spark, sf_dir):
     ONE exchange (hash(conv_id) clusters every later key).
 
     Uses conv_mod=25 (coprime to the role modulus — see
-    _agent_transcripts): the default 50 shares a factor 2 with the role
+    agent_transcripts): the default 50 shares a factor 2 with the role
     assignment, which puts users and assistants in DISJOINT
     conversations and would make every latency NULL."""
-    t = _agent_transcripts(spark, sf_dir, conv_mod=25)
+    t = agent_transcripts(spark, sf_dir, conv_mod=25)
     turns = (t.repartition("conv_id")
              .groupBy("conv_id", "turn_idx")
              .agg(F.min("role").alias("role"), F.min("ts").alias("ts")))
@@ -1041,7 +967,7 @@ def conv_reply_latency(spark, sf_dir):
 
 
 CONV_REPLY_LATENCY_SQL = f"""
-WITH t AS ({_agent_transcripts_cte(25)}),
+WITH t AS ({agent_transcripts_sql(25)}),
 turns AS (
   SELECT conv_id, turn_idx, MIN(role) AS role, MIN(ts) AS ts
   FROM t GROUP BY conv_id, turn_idx
@@ -1083,7 +1009,7 @@ def conv_role_transitions(spark, sf_dir):
     role by construction (turn_idx ≡ doc_id mod 1000 determines role ≡
     doc_id mod 4), so the per-conversation role SEQUENCE — and hence
     the multiset of adjacent pairs — is invariant under tie order on
-    both engines. Uses conv_mod=25 (see _agent_transcripts): the
+    both engines. Uses conv_mod=25 (see agent_transcripts): the
     default 50 confines each conversation to two roles and the matrix
     would miss user→assistant entirely.
 
@@ -1091,7 +1017,7 @@ def conv_role_transitions(spark, sf_dir):
     downstream assembly pays) into a ≤16-row aggregate with map-side
     combine; the share window runs on those ≤16 rows. Integer-division
     basis points — exact on both engines."""
-    t = _agent_transcripts(spark, sf_dir, conv_mod=25)
+    t = agent_transcripts(spark, sf_dir, conv_mod=25)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     pairs = (t.select("conv_id", "turn_idx", "role",
                       F.lag("role").over(w).alias("prev_role"))
@@ -1106,7 +1032,7 @@ def conv_role_transitions(spark, sf_dir):
 
 
 CONV_ROLE_TRANS_SQL = f"""
-WITH t AS ({_agent_transcripts_cte(25)}),
+WITH t AS ({agent_transcripts_sql(25)}),
 p AS (
   SELECT prev_role, role FROM (
     SELECT role,
@@ -1137,7 +1063,7 @@ def conv_context_growth(spark, sf_dir):
     exclude each other symmetrically — the output is tie-order-
     invariant on both engines without a dedup pass. One window keyed
     on conv_id; nothing else touches the corpus."""
-    t = _agent_transcripts(spark, sf_dir)
+    t = agent_transcripts(spark, sf_dir)
     w = (Window.partitionBy("conv_id").orderBy("turn_idx")
          .rangeBetween(Window.unboundedPreceding, -1))
     g = t.select(
@@ -1153,7 +1079,7 @@ def conv_context_growth(spark, sf_dir):
 
 
 CONV_CTX_GROWTH_SQL = f"""
-WITH t AS ({_AGENT_TRANSCRIPTS_CTE}),
+WITH t AS ({agent_transcripts_sql()}),
 g AS (
   SELECT conv_id, turn_idx, role,
          CAST(len(text) AS BIGINT) AS n_chars,
@@ -1191,7 +1117,7 @@ def conv_turn_dedup(spark, sf_dir):
     groupBy(text_hash) with map-side combinable aggregates — nothing
     else touches the corpus; same plan family as dd_exact_dup
     (corpus.py:66) at turn grain."""
-    t = _agent_transcripts(spark, sf_dir)
+    t = agent_transcripts(spark, sf_dir)
     ln = F.length("text")
     turn_text = F.when(
         ln % 5 == 0,
@@ -1213,7 +1139,7 @@ def conv_turn_dedup(spark, sf_dir):
 
 
 CONV_TURN_DEDUP_SQL = f"""
-WITH t AS ({_AGENT_TRANSCRIPTS_CTE}),
+WITH t AS ({agent_transcripts_sql()}),
 templ AS (
   SELECT conv_id, turn_idx,
          CASE WHEN len(text) % 5 = 0
@@ -1240,11 +1166,6 @@ ORDER BY text_hash
 """
 
 
-# lowercase substrings that mark an assistant refusal / canned apology
-_REFUSAL_MARKS = ("i can't help", "i cannot help", "i'm unable to",
-                  "i am unable to")
-
-
 def conv_refusal_scan(spark, sf_dir):
     """Per-conversation refusal screening — SFT curation drops or
     downweights conversations dominated by canned assistant refusals
@@ -1261,7 +1182,7 @@ def conv_refusal_scan(spark, sf_dir):
     the dd_exact_dup plan family at conversation grain. Only
     conversations with ≥1 assistant turn appear (the others have no
     refusal denominator)."""
-    t = _agent_transcripts(spark, sf_dir)
+    t = agent_transcripts(spark, sf_dir)
     ln = F.length("text")
     turn_text = F.when(
         ln % 5 == 0,
@@ -1274,7 +1195,7 @@ def conv_refusal_scan(spark, sf_dir):
     # coalesce to '' so all three surfaces agree (advice r4).
     low = F.lower(F.coalesce(turn_text, F.lit("")))
     is_refusal = F.lit(False)
-    for m in _REFUSAL_MARKS:
+    for m in REFUSAL_MARKS:
         is_refusal = is_refusal | low.contains(m)
     asst = t.where(F.col("role") == "assistant").select(
         "conv_id", is_refusal.cast("long").alias("r"))
@@ -1291,10 +1212,10 @@ def conv_refusal_scan(spark, sf_dir):
 
 _REFUSAL_PRED_SQL = " OR ".join(
     "contains(lower(turn_text), '%s')" % m.replace("'", "''")
-    for m in _REFUSAL_MARKS)
+    for m in REFUSAL_MARKS)
 
 CONV_REFUSAL_SQL = f"""
-WITH t AS ({_AGENT_TRANSCRIPTS_CTE}),
+WITH t AS ({agent_transcripts_sql()}),
 templ AS (
   SELECT conv_id,
          CASE WHEN len(text) % 5 = 0
@@ -1338,7 +1259,7 @@ def conv_tool_latency(spark, sf_dir):
     needs cross-role adjacency. Plan: one repartition(conv_id) feeds
     the tie collapse, the forward-looking window, and nothing else; the
     final rollup is a ≤3-row aggregate with map-side combine."""
-    t = _agent_transcripts(spark, sf_dir, conv_mod=25)
+    t = agent_transcripts(spark, sf_dir, conv_mod=25)
     turns = (t.repartition("conv_id")
              .groupBy("conv_id", "turn_idx")
              .agg(F.min("role").alias("role"),
@@ -1370,7 +1291,7 @@ def conv_tool_latency(spark, sf_dir):
 
 
 CONV_TOOL_LATENCY_SQL = f"""
-WITH t AS ({_agent_transcripts_cte(25)}),
+WITH t AS ({agent_transcripts_sql(25)}),
 turns AS (
   SELECT conv_id, turn_idx, MIN(role) AS role, MIN(tool) AS tool,
          MIN(ts) AS ts
@@ -1415,7 +1336,7 @@ def conv_verbosity_drift(spark, sf_dir):
     One map-only projection (role filter + integer depth bucket) into a
     tiny groupBy(bucket) with map-side combine; mean chars is exact
     integer division, so the oracle is exact at any scale."""
-    t = _agent_transcripts(spark, sf_dir)
+    t = agent_transcripts(spark, sf_dir)
     asst = t.where(F.col("role") == "assistant").select(
         F.expr(f"CAST(turn_idx AS BIGINT) DIV {VERBOSITY_BUCKET}")
         .alias("depth_bucket"),
@@ -1432,7 +1353,7 @@ def conv_verbosity_drift(spark, sf_dir):
 
 
 CONV_VERBOSITY_SQL = f"""
-WITH t AS ({_AGENT_TRANSCRIPTS_CTE})
+WITH t AS ({agent_transcripts_sql()})
 SELECT CAST(turn_idx // {VERBOSITY_BUCKET} AS BIGINT) AS depth_bucket,
        CAST(COUNT(*) AS BIGINT) AS n_turns,
        CAST(SUM(len(text)) AS BIGINT) AS sum_chars,
@@ -1459,7 +1380,7 @@ def conv_lang_mix(spark, sf_dir):
     conversations × 5 labels, not by turns. Dominant share is integer
     basis points (exact on both engines)."""
     from .corpus import lang_argmax_column, lang_hit_columns
-    t = _agent_transcripts(spark, sf_dir)
+    t = agent_transcripts(spark, sf_dir)
     pred = (t.select("conv_id", *lang_hit_columns(F.col("text")))
             .withColumn("pred_lang", lang_argmax_column())
             .select("conv_id", "pred_lang"))
@@ -1488,13 +1409,13 @@ def conv_lang_mix(spark, sf_dir):
             .orderBy("conv_id"))
 
 
-# SQL blocks generated from the same _LANG_MARKERS dict as the Spark
+# SQL blocks generated from the same LANG_MARKERS dict as the Spark
 # scoring — a third hand-maintained copy of the marker lists would drift
 # (corpus.py imports no sibling operator module, so this is cycle-free)
 from .corpus import LANG_HITS_SQL, LANG_PRED_SQL  # noqa: E402
 
 CONV_LANG_MIX_SQL = f"""
-WITH t AS ({_AGENT_TRANSCRIPTS_CTE}),
+WITH t AS ({agent_transcripts_sql()}),
 scored AS (
   SELECT conv_id,
 {LANG_HITS_SQL}
@@ -1547,9 +1468,9 @@ def conv_degenerate_scan(spark, sf_dir):
     explode + GROUP BY form (differential across two algorithms, like
     txt_repetition). Share is integer basis points — exact."""
     from .quality import with_repetition_signals
-    t = _agent_transcripts(spark, sf_dir)
+    t = agent_transcripts(spark, sf_dir)
     asst = (t.where(F.col("role") == "assistant")
-            .selectExpr("conv_id", "split(lower(text), '[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+') AS t")
+            .selectExpr("conv_id", f"{TOKENS_EXPR} AS t")
             .where(f"size(t) >= {DEGEN_MIN_TOKENS}"))
     per_turn = (with_repetition_signals(asst)
                 .select("conv_id",
@@ -1598,7 +1519,7 @@ dg_scored AS (SELECT conv_id, dup_bg * 10000 // n_bg AS dup_bp FROM dg_bg)"""
 
 def degen_turns_ctes(conv_mod: int = 50) -> str:
     """DEGEN_TURNS_CTES at an alternate conv modulus (conv_mod=25 mixes
-    all four roles per conversation — see _agent_transcripts' parity
+    all four roles per conversation — see agent_transcripts' parity
     note)."""
     return DEGEN_TURNS_CTES.replace(
         "% 50) + 50) % 50", f"% {conv_mod}) + {conv_mod}) % {conv_mod}")
@@ -1629,10 +1550,10 @@ def conv_chat_render(spark, sf_dir):
     (W1/north_rule, same contract as conv_assemble) — and the transform
     lambda touches only its own variable (the HOF-recompute trap never
     fires). conv_mod=25 mixes all four roles per conversation (see
-    _agent_transcripts' parity note), so templates interleave
+    agent_transcripts' parity note), so templates interleave
     realistically. Rendered text stays inside the plan; only its md5 and
     integer sizes come out."""
-    t = _agent_transcripts(spark, sf_dir, conv_mod=25)
+    t = agent_transcripts(spark, sf_dir, conv_mod=25)
     ws = "[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+"
     return (
         t.groupBy("conv_id")
@@ -1657,7 +1578,7 @@ def conv_chat_render(spark, sf_dir):
 
 
 CONV_CHAT_RENDER_SQL = f"""
-WITH t AS ({_agent_transcripts_cte(25)}),
+WITH t AS ({agent_transcripts_sql(25)}),
 r AS (
   -- COALESCE to '': on a conversation whose EVERY turn has NULL text
   -- string_agg returns NULL while Spark's concat_ws skips the NULL
@@ -1698,7 +1619,7 @@ def conv_loss_mass(spark, sf_dir):
     # imported, not re-spelled, so the two surfaces cannot drift
     # (in-function import: quality.py lazily imports extraction)
     from .quality import _TURN_TOKENS
-    t = _agent_transcripts(spark, sf_dir, conv_mod=25)
+    t = agent_transcripts(spark, sf_dir, conv_mod=25)
     tok = t.selectExpr(
         "conv_id", "role",
         f"CAST(size({_TURN_TOKENS}) AS BIGINT) AS n_tok")
@@ -1757,7 +1678,7 @@ def conv_system_templates(spark, sf_dir):
     empty-concat hash like any other template). Uses conv_mod=25 (the
     role-mixing surface)."""
     from .corpus import content_md5
-    t = _agent_transcripts(spark, sf_dir, conv_mod=25)
+    t = agent_transcripts(spark, sf_dir, conv_mod=25)
     # persist: the counts branch AND the n_convs total both read the
     # transcript-assembly aggregation (the two-branch persist convention)
     per_conv = (t.groupBy("conv_id")
@@ -1819,7 +1740,7 @@ def conv_turn_profile(spark, sf_dir):
     Scale shape: one keyed (role, bucket) count with map-side combine +
     a tiny per-role total joined back (broadcast — roles are four)."""
     from .corpus import len_bucket
-    t = _agent_transcripts(spark, sf_dir, conv_mod=25)
+    t = agent_transcripts(spark, sf_dir, conv_mod=25)
     binned = t.select(
         "role",
         len_bucket(F.length(F.coalesce(F.col("text"), F.lit(""))))
@@ -1863,14 +1784,14 @@ QUERIES = {
     "conv_assemble": (conv_assemble, CONV_ASSEMBLE_SQL),
     "conv_turn_profile": (
         conv_turn_profile,
-        CONV_TURN_PROFILE_SQL.format(cte=_agent_transcripts_cte(25))),
+        CONV_TURN_PROFILE_SQL.format(cte=agent_transcripts_sql(25))),
     "conv_system_templates": (
         conv_system_templates,
-        CONV_SYS_TEMPLATES_SQL.format(cte=_agent_transcripts_cte(25),
+        CONV_SYS_TEMPLATES_SQL.format(cte=agent_transcripts_sql(25),
                                       topk=SYS_TEMPLATE_TOPK)),
     "conv_loss_mass": (conv_loss_mass,
                        CONV_LOSS_MASS_SQL.format(
-                           cte=_agent_transcripts_cte(25))),
+                           cte=agent_transcripts_sql(25))),
     "conv_chat_render": (conv_chat_render, CONV_CHAT_RENDER_SQL),
     "conv_stats": (conv_stats, CONV_STATS_SQL),
     "conv_dialogue_balance": (conv_dialogue_balance, CONV_BALANCE_SQL),

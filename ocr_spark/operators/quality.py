@@ -20,7 +20,7 @@ Scale notes:
   per-doc count;
 - stratified sampling and token-budget capping are map-only / one window:
   the md5-bridge keeps the sampling decision deterministic and
-  engine-reproducible (same trick as corpus._md5_long).
+  engine-reproducible (same trick as functions.hashing.md5_long).
 """
 
 from __future__ import annotations
@@ -29,14 +29,14 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from .corpus import (_STOPWORDS_EN, _URL_KEYED_CTES, _docs, _md5_long,
-                     len_bucket)
+from ..functions.hashing import md5_long, smp_threshold_u64
+from ..functions.text import TOKENS_EXPR, URL_RE
+from ..sources.synthetic import agent_transcripts, agent_transcripts_sql
+from .corpus import _STOPWORDS_EN, _URL_KEYED_CTES, _docs, len_bucket
 
 # ---------------------------------------------------------------------------
 # Repetition signals (Gopher-style quality filters)
 # ---------------------------------------------------------------------------
-
-_TOKENS = "split(lower(text), '[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+')"
 
 # Gopher-style gate thresholds (shared by txt_gate_agreement and the
 # curation funnel, which imports them from here — defining them in the
@@ -118,7 +118,7 @@ def txt_repetition(spark, sf_dir):
     the same numbers via the keyed explode + GROUP BY form, so the
     driver compare is differential across both algorithms."""
     docs = _docs(spark, sf_dir).selectExpr(
-        "doc_id", f"{_TOKENS} AS t").where("size(t) >= 2")
+        "doc_id", f"{TOKENS_EXPR} AS t").where("size(t) >= 2")
 
     def _bp(a, b):
         return F.floor(F.col(a).cast("double") / F.col(b) * 10000)
@@ -177,14 +177,14 @@ def dd_chunk_dup(spark, sf_dir):
     doc. Chunks shuffle on their 8-byte md5 fold — one keyed corpus-wide
     aggregation + one same-key join back, the scalable line-dedup shape."""
     chunks = (
-        _docs(spark, sf_dir).selectExpr("doc_id", f"{_TOKENS} AS t")
+        _docs(spark, sf_dir).selectExpr("doc_id", f"{TOKENS_EXPR} AS t")
         .selectExpr(
             "doc_id",
             f"explode(transform("
             f" sequence(0, cast(ceil(size(t) / {CHUNK_TOKENS}.0) AS int) - 1),"
             f" i -> array_join(slice(t, i * {CHUNK_TOKENS} + 1,"
             f" {CHUNK_TOKENS}), ' '))) AS chunk")
-        .select("doc_id", _md5_long(F.col("chunk")).alias("chunk_hash")))
+        .select("doc_id", md5_long(F.col("chunk")).alias("chunk_hash")))
     stats = (chunks.groupBy("chunk_hash")
              .agg(F.countDistinct("doc_id").alias("n_docs")))
     return (chunks.join(stats, "chunk_hash")
@@ -242,7 +242,7 @@ def dd_chunk_dedup_strip(spark, sf_dir):
     reassembly); re-assembly is one groupBy(doc_id) with an ordered
     struct sort. Two shuffles total at any scale."""
     chunks = (
-        _docs(spark, sf_dir).selectExpr("doc_id", f"{_TOKENS} AS t")
+        _docs(spark, sf_dir).selectExpr("doc_id", f"{TOKENS_EXPR} AS t")
         .selectExpr(
             "doc_id",
             f"CAST(ceil(size(t) / {CHUNK_TOKENS}.0) AS BIGINT)"
@@ -347,7 +347,7 @@ def dd_substring_dup(spark, sf_dir):
             # have no fingerprints (LEFT JOIN restores them with 0s)
             .where(F.size("t") >= K + W - 1))
     win = F.filter(_window_join(F.col("t"), K), lambda x: x.isNotNull())
-    hs = F.transform(win, lambda w: _md5_long(w))
+    hs = F.transform(win, lambda w: md5_long(w))
     fps = docs.select(
         "doc_id",
         F.explode(F.array_distinct(_sliding_min(hs, W))).alias("fp"))
@@ -615,10 +615,6 @@ FROM p GROUP BY 1, 2 ORDER BY source, block_reason
 SMP_RATES = {"en": 0.3, "de": 1.0, "fr": 1.0, "es": 1.0, "zh": 0.5}
 
 
-def _smp_threshold_u64(rate: float) -> int:
-    return min(int(rate * 2**64), 2**64 - 1)
-
-
 def smp_stratified(spark, sf_dir):
     """Deterministic stratified sampling for data mixing: a doc is kept
     iff its salted md5 fold falls under the language's keep-rate
@@ -626,10 +622,10 @@ def smp_stratified(spark, sf_dir):
     same fate on any cluster, any partitioning, any engine — the property
     that makes corpus sampling reproducible and resumable at 100 TB."""
     docs = _docs(spark, sf_dir)
-    h = _md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":strat")))
+    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":strat")))
     kept = F.lit(False)
     for lang, rate in SMP_RATES.items():
-        thr = _smp_threshold_u64(rate) - 2**63  # signed-space threshold
+        thr = smp_threshold_u64(rate) - 2**63  # signed-space threshold
         kept = F.when(F.col("lang") == lang,
                       h < F.lit(thr)).otherwise(kept)
     return (docs.select("lang", kept.cast("int").alias("k"))
@@ -640,7 +636,7 @@ def smp_stratified(spark, sf_dir):
 
 
 _SMP_CASES = "\n".join(
-    f"       WHEN lang = '{lang}' THEN h < {_smp_threshold_u64(rate)}"
+    f"       WHEN lang = '{lang}' THEN h < {smp_threshold_u64(rate)}"
     for lang, rate in SMP_RATES.items())
 
 SMP_STRAT_SQL = f"""
@@ -669,7 +665,7 @@ def smp_token_budget(spark, sf_dir):
     bit-identical to the single-window form the SQL oracle states."""
     docs = _docs(spark, sf_dir).selectExpr(
         "doc_id", "lang",
-        f"CAST(size({_TOKENS}) AS BIGINT) AS n_tokens_b")
+        f"CAST(size({TOKENS_EXPR}) AS BIGINT) AS n_tokens_b")
     return (sharded_prefix_sum(docs, ["lang"], "n_tokens_b", "cum_tokens")
             .withColumn("kept",
                         (F.col("cum_tokens") <= SMP_TOKEN_BUDGET)
@@ -774,7 +770,7 @@ def pack_placement_from(docs: DataFrame,
     if token_col is None:
         docs = docs.selectExpr(
             "doc_id", "lang", "source",
-            f"CAST(size({_TOKENS}) AS BIGINT) AS n_tokens_b")
+            f"CAST(size({TOKENS_EXPR}) AS BIGINT) AS n_tokens_b")
     else:
         docs = docs.selectExpr(
             "doc_id", "lang", "source",
@@ -918,7 +914,7 @@ ORDER BY lang, source, seq_id
 # ---------------------------------------------------------------------------
 
 # whitespace tokenizer over a turn's text — the same explicit Java-\s
-# class as _TOKENS, total on NULL turns (coalesce '' -> 1 empty token,
+# class as TOKENS_EXPR, total on NULL turns (coalesce '' -> 1 empty token,
 # identical on both engines)
 _TURN_TOKENS = ("split(lower(coalesce(text, '')),"
                 " '[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+')")
@@ -952,7 +948,7 @@ def chat_pack_placement(turns: DataFrame) -> DataFrame:
         f"CAST(size({_TURN_TOKENS}) AS BIGINT) AS n_tokens")
     conv = (tok.groupBy("conv_id")
             .agg(F.sum("n_tokens").alias("conv_tokens"))
-            .withColumn("doc_id", _md5_long(F.col("conv_id"))))
+            .withColumn("doc_id", md5_long(F.col("conv_id"))))
     conv_pos = (sharded_prefix_sum(conv, [], "conv_tokens", "_cum")
                 .select("conv_id",
                         (F.col("_cum") - F.col("conv_tokens"))
@@ -980,9 +976,8 @@ def smp_chat_pack(spark, sf_dir):
     """Per-turn chat-pack placement over the transcript table (the
     conv_mod=25 surface: every conversation mixes all four roles, so
     loss-masked and trainable spans interleave)."""
-    from .extraction import _agent_transcripts
-    return (chat_pack_placement(_agent_transcripts(spark, sf_dir,
-                                                   conv_mod=25))
+    return (chat_pack_placement(agent_transcripts(spark, sf_dir,
+                                                  conv_mod=25))
             .select("conv_id", "turn_idx", "role", "loss", "n_tokens",
                     "tok_start", "first_seq", "seq_offset", "n_seqs")
             .orderBy("tok_start"))
@@ -1023,9 +1018,8 @@ def smp_chat_pack_seqs(spark, sf_dir):
     trainer builds). Derived by exploding each turn over the sequences
     it spans (bounded fan-out) and ONE keyed aggregation on seq_id.
     All-integer, oracle-exact."""
-    from .extraction import _agent_transcripts
-    p = chat_pack_placement(_agent_transcripts(spark, sf_dir,
-                                               conv_mod=25))
+    p = chat_pack_placement(agent_transcripts(spark, sf_dir,
+                                              conv_mod=25))
     L = PACK_SEQ_LEN
     exploded = chat_pack_exploded(p, extra_cols=("conv_start",
                                                  "first_seq"))
@@ -1052,9 +1046,8 @@ def _chat_pack_ctes() -> str:
     tokens -> md5-bridge conversation order -> global conv prefix ->
     per-conv turn prefix. DuckDB window SUM(BIGINT) is HUGEINT; every
     consumer casts outputs back to BIGINT (the round-1 typing class)."""
-    from .extraction import _agent_transcripts_cte
     return f"""
-t AS ({_agent_transcripts_cte(conv_mod=25)}),
+t AS ({agent_transcripts_sql(conv_mod=25)}),
 tok AS (
   SELECT conv_id, turn_idx, role, coalesce(text, '') AS text,
          CAST(len(string_split_regex(lower(coalesce(text, '')),
@@ -1166,7 +1159,7 @@ def smp_source_mix(spark, sf_dir):
     SQL (weights and token counts are integer-exact, so the operands are
     bit-identical on both engines)."""
     docs = _docs(spark, sf_dir)
-    h = _md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":mix")))
+    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":mix")))
     # coalesce: size(split(NULL)) is -1 in Spark but NULL (SUM-skipped) in
     # DuckDB — NULL text must count 1 empty token on both engines
     proj = (docs.selectExpr(
@@ -1271,7 +1264,7 @@ def txt_quality_hist(spark, sf_dir):
     corpus."""
     docs = _docs(spark, sf_dir)
     # lowercase before matching the lowercase stopword list (sentence-
-    # initial 'The'/'It' must count, like every other op via _TOKENS)
+    # initial 'The'/'It' must count, like every other op via TOKENS_EXPR)
     tokens = F.split(F.lower(F.col("text")), r"[ \t\n\x0b\f\r]+")
     n_tokens = F.size(tokens)
     n_stop = F.size(F.filter(
@@ -1806,7 +1799,7 @@ def smp_temperature_mix(spark, sf_dir):
     one map-only projection, one tiny groupBy(source), broadcast rates
     back — the corpus side never shuffles."""
     docs = _docs(spark, sf_dir)
-    h = _md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":tmix")))
+    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":tmix")))
     proj = (docs.selectExpr(
         "doc_id", "source",
         "CAST(size(split(lower(coalesce(text, '')), '[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+')) AS BIGINT)"
@@ -1909,8 +1902,8 @@ def shard_key_column():
     pipeline/shards.py derives shard membership AND within-shard order
     from this same column, so the stats view below audits exactly the
     placement the export writes."""
-    return _md5_long(F.concat(F.col("doc_id").cast("string"),
-                              F.lit(":shard")))
+    return md5_long(F.concat(F.col("doc_id").cast("string"),
+                             F.lit(":shard")))
 
 
 def smp_shard_assign(spark, sf_dir):
@@ -2110,7 +2103,7 @@ def epoch_replicate(docs: DataFrame) -> DataFrame:
     index — what the training-shard writer consumes. Map-only explode;
     guarded so copies=0 emits nothing (Spark's sequence(1, 0) would
     DESCEND and emit [1, 0])."""
-    h = _md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":epoch")))
+    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":epoch")))
     return (docs.withColumn("h", h)
             .withColumn("copies", epoch_copies_column())
             .where(F.col("copies") >= 1)
@@ -2133,7 +2126,7 @@ def smp_epoch_mix(spark, sf_dir):
     materializing twin and its row count equals sum(n_copies) here
     (pinned in tests)."""
     docs = _docs(spark, sf_dir)
-    h = _md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":epoch")))
+    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":epoch")))
     rate = _epoch_rate_col()
     proj = (docs.selectExpr(
         "doc_id", "source",
@@ -2319,7 +2312,7 @@ def chunk_windows_from(docs: DataFrame) -> DataFrame:
             "doc_id", "chunk_idx",
             "CAST(size(ck) AS BIGINT) AS n_tok_c",
             "array_join(ck, ' ') AS chunk_text")
-        .withColumn("chunk_hash", _md5_long(F.col("chunk_text"))))
+        .withColumn("chunk_hash", md5_long(F.col("chunk_text"))))
 
 
 TXT_CHUNK_SQL = f"""
@@ -2371,7 +2364,7 @@ def dd_boilerplate_topk(spark, sf_dir):
     merged on the driver, no global sort. Ties break on the chunk text
     so the K-boundary is deterministic on both engines."""
     chunks = (
-        _docs(spark, sf_dir).selectExpr("doc_id", f"{_TOKENS} AS t")
+        _docs(spark, sf_dir).selectExpr("doc_id", f"{TOKENS_EXPR} AS t")
         .selectExpr(
             "doc_id",
             f"explode(transform("
@@ -2516,9 +2509,6 @@ ORDER BY r.source, p
 # URL / link density (C4-style link-spam signal)
 # ---------------------------------------------------------------------------
 
-# [!-~] = printable non-space ASCII: Java \s and RE2 \s disagree on \x0B,
-# so neither appears in the pattern — it is byte-identical on both engines
-_URL_RE = "https?://[!-~]+"
 # a doc whose URL characters exceed 30% of its text is link spam
 URL_SPAM_BP = 3000
 
@@ -2545,10 +2535,10 @@ def txt_url_density(spark, sf_dir):
     # at 100 TB row widths.
     per = docs.selectExpr(
         "source",
-        f"CAST(regexp_count(coalesce(text, ''), '{_URL_RE}') AS BIGINT)"
+        f"CAST(regexp_count(coalesce(text, ''), '{URL_RE}') AS BIGINT)"
         " AS n_urls",
         "CAST(length(coalesce(text, '')) - length(regexp_replace("
-        f"coalesce(text, ''), '{_URL_RE}', '')) AS BIGINT) AS url_chars",
+        f"coalesce(text, ''), '{URL_RE}', '')) AS BIGINT) AS url_chars",
         "CAST(length(coalesce(text, '')) AS BIGINT) AS n_chars")
     spam = ((F.col("n_chars") > 0)
             & (F.col("url_chars") * 10000 >= F.col("n_chars") * URL_SPAM_BP))
@@ -2572,10 +2562,10 @@ def txt_url_density(spark, sf_dir):
 TXT_URL_DENSITY_SQL = f"""
 WITH per AS (
   SELECT source,
-         CAST(len(regexp_extract_all(coalesce(text, ''), '{_URL_RE}'))
+         CAST(len(regexp_extract_all(coalesce(text, ''), '{URL_RE}'))
               AS BIGINT) AS n_urls,
          CAST(length(coalesce(text, ''))
-              - length(regexp_replace(coalesce(text, ''), '{_URL_RE}',
+              - length(regexp_replace(coalesce(text, ''), '{URL_RE}',
                                       '', 'g')) AS BIGINT) AS url_chars,
          CAST(len(coalesce(text, '')) AS BIGINT) AS n_chars
   FROM documents WHERE doc_id IS NOT NULL
@@ -2609,7 +2599,7 @@ def txt_gate_agreement(spark, sf_dir):
     from .classifier import CLS_THRESHOLD, classifier_score_expr
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .where(F.col("doc_id").isNotNull())
-            .selectExpr("doc_id", "lang", f"{_TOKENS} AS t"))
+            .selectExpr("doc_id", "lang", f"{TOKENS_EXPR} AS t"))
     sig = with_repetition_signals(docs)
     bp = lambda a, b: F.floor(F.col(a).cast("double") / F.col(b) * 10000)  # noqa: E731
     gopher_fail = (F.col("n_tok").isNull()
@@ -2713,7 +2703,7 @@ def txt_drift_tvd(spark, sf_dir):
     half), then ONE map-side-combinable groupBy(source, bucket) whose
     output is ~sources x 40 rows; everything after is driver-trivial."""
     docs = _docs(spark, sf_dir)
-    h = _md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":drift")))
+    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":drift")))
     per_doc = len_bucket_frame(docs).select(
         "source",
         (h.bitwiseAND(F.lit(1))).cast("int").alias("half"),
@@ -2875,7 +2865,7 @@ def with_entropy_bits(df: DataFrame) -> DataFrame:
     array is empty/NULL are dropped (entropy undefined)."""
     fold = (f"aggregate(array_sort(t), {_ENT_ZERO}, {_ENT_STEP}, "
             f"a -> {_ENT_FLUSH})")
-    return (df.selectExpr("*", f"filter({_TOKENS}, x -> x <> '') AS t")
+    return (df.selectExpr("*", f"filter({TOKENS_EXPR}, x -> x <> '') AS t")
             .where("size(t) >= 1")
             .selectExpr("* EXCEPT (t)",
                         "CAST(size(t) AS BIGINT) AS n_tokens",
@@ -2958,7 +2948,7 @@ def txt_cooc_pmi(spark, sf_dir):
     beyond that the same op runs per source shard (documented bound)."""
     base = _docs(spark, sf_dir).selectExpr(
         "doc_id",
-        f"explode(array_distinct(filter({_TOKENS}, x -> x <> ''))) AS w")
+        f"explode(array_distinct(filter({TOKENS_EXPR}, x -> x <> ''))) AS w")
     dfreq = base.groupBy("w").agg(F.count("*").cast("long").alias("df"))
     topv = dfreq.orderBy(F.desc("df"), F.asc("w")).limit(COOC_TOP_V)
     n_docs = _docs(spark, sf_dir).agg(
@@ -3033,7 +3023,7 @@ def txt_vocab_coverage(spark, sf_dir):
     one map-side-combinable agg. All integer: coverage_bp = floor via
     BIGINT division."""
     counts = (_docs(spark, sf_dir).selectExpr(
-                  "explode(filter(" + _TOKENS + ", x -> x <> '')) AS w")
+                  "explode(filter(" + TOKENS_EXPR + ", x -> x <> '')) AS w")
               .groupBy("w").agg(F.count("*").cast("long").alias("c")))
     total = counts.agg(F.sum("c").cast("long").alias("s"))
     top = counts.orderBy(F.desc("c"), F.asc("w")).limit(max(COV_THRESHOLDS))
@@ -3103,7 +3093,7 @@ def dd_dup_rate_by_gate(spark, sf_dir):
     signal algorithms, like txt_repetition."""
     from .corpus import content_md5
     docs = _docs(spark, sf_dir).selectExpr(
-        "doc_id", "text", f"{_TOKENS} AS t")
+        "doc_id", "text", f"{TOKENS_EXPR} AS t")
     sig = with_repetition_signals(docs)
     # persist: the dup-count aggregation and the join-back both read the
     # heavy sort-run-fold projection (the dd_exact_dup two-branch
@@ -3290,11 +3280,11 @@ def smp_eval_holdout(spark, sf_dir):
     downstream reader reapplies — no materialization needed for the
     decision to be stable."""
     docs = _docs(spark, sf_dir)
-    h = _md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":eval")))
+    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":eval")))
     # strata = THE shared len_bucket definition (corpus.len_bucket) over
     # the non-empty token count, so the holdout's length match can never
     # drift from the drift-baseline buckets (txt_drift_tvd, corpus-stats)
-    n_tok = F.expr(f"CAST(size(filter({_TOKENS}, x -> x <> '')) AS BIGINT)")
+    n_tok = F.expr(f"CAST(size(filter({TOKENS_EXPR}, x -> x <> '')) AS BIGINT)")
     binned = (docs.withColumn("__h", h)
               .select(len_bucket(n_tok).alias("bucket"),
                       F.expr(f"pmod(__h, 10000) < {EVAL_HOLDOUT_BP}")
@@ -3350,7 +3340,7 @@ def txt_hapax_by_source(spark, sf_dir):
     then a tiny per-source rollup. All integer."""
     toks = _docs(spark, sf_dir).selectExpr(
         "source",
-        f"explode(filter({_TOKENS}, x -> x <> '')) AS w")
+        f"explode(filter({TOKENS_EXPR}, x -> x <> '')) AS w")
     vocab = (toks.groupBy("source", "w")
              .agg(F.count("*").cast("long").alias("c")))
     return (vocab.groupBy("source")
@@ -3407,7 +3397,7 @@ def txt_zipf_slope(spark, sf_dir):
     over that BOUNDED frame only. int64 headroom: n ≤ 1024, x,y ≤ 63 →
     10⁴·n·Σxy ≤ 4·10¹³."""
     counts = (_docs(spark, sf_dir).selectExpr(
-                  "explode(filter(" + _TOKENS + ", x -> x <> '')) AS w")
+                  "explode(filter(" + TOKENS_EXPR + ", x -> x <> '')) AS w")
               .groupBy("w").agg(F.count("*").cast("long").alias("c")))
     top = counts.orderBy(F.desc("c"), F.asc("w")).limit(ZIPF_TOP_RANKS)
     pts = (top.withColumn(

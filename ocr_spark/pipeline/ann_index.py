@@ -19,7 +19,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from ..operators.corpus import (N_LSH_MULTIPROBE, N_LSH_TOPK_PLANES, _dot,
+from ..functions.frames import array_dot
+from ..operators.corpus import (N_LSH_MULTIPROBE, N_LSH_TOPK_PLANES,
                                 lsh_code_frame)
 from . import artifact
 
@@ -91,7 +92,7 @@ def query_lsh_index(spark: SparkSession, index_dir: str,
         probes, "query_id long, code long, qvec array<double>, qnorm double")
 
     pruned = index.where(F.col("code").isin(probe_codes))
-    cos = (_dot(F.col("qvec"), F.col("vec"))
+    cos = (array_dot(F.col("qvec"), F.col("vec"))
            / (F.col("qnorm") * F.col("norm")))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                                F.asc("cand_id"))

@@ -32,8 +32,8 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.corpus import (_md5_long, lang_argmax_column,
-                                lang_hit_columns)
+from ..functions.hashing import md5_long
+from ..operators.corpus import lang_argmax_column, lang_hit_columns
 from ..operators.quality import PACK_SEQ_LEN, SMP_RATES, pack_placement_from
 from . import artifact
 from .curate import run_curation
@@ -60,8 +60,8 @@ def documents_from_extracted(extracted: DataFrame) -> DataFrame:
             .where(F.col("clean_text").isNotNull()
                    & (F.length("clean_text") > 0))
             .select(
-                _md5_long(F.concat(F.col("conv_id"), F.lit(":"),
-                                   F.col("turn_idx").cast("string")))
+                md5_long(F.concat(F.col("conv_id"), F.lit(":"),
+                                  F.col("turn_idx").cast("string")))
                 .alias("doc_id"),
                 F.col("clean_text").alias("text"),
                 F.coalesce(F.col("source_kind"), F.lit("chatter"))

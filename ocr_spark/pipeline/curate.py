@@ -17,7 +17,7 @@ joins keyed on doc_id (repetition, chunk share) or broadcast
 (contamination), the sampling decision is a map-only md5 fold, and the
 funnel metrics come from one aggregation over drop_reason. Every gate is
 engine-exact (basis points / md5 bridge), so the full funnel is
-oracle-paired at the driver (operators/__init__.py: `curate_funnel`).
+oracle-paired at the driver (operators/curation.py: `curate_funnel`).
 """
 
 from __future__ import annotations
@@ -29,21 +29,21 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from ..operators.classifier import (CLS_THRESHOLD, classifier_score_expr,
-                                    classifier_score_sql)
-from ..operators.corpus import _md5_long
+from ..functions.hashing import md5_long, smp_threshold_u64
+from ..functions.text import TOKENS_EXPR
+from ..operators.classifier import CLS_THRESHOLD, classifier_score_expr
+from ..operators.curation import MAX_SHARED_CHUNK_BP
 from ..operators.quality import (BENCH_MOD, CHUNK_TOKENS, CONTAM_NGRAM,
                                  MAX_DUP_BIGRAM_BP, MAX_TOP_TOKEN_BP,
-                                 MIN_TOKENS, SMP_RATES, _smp_threshold_u64,
-                                 _TOKENS, token_shingle_expr,
+                                 MIN_TOKENS, SMP_RATES, token_shingle_expr,
                                  with_repetition_signals)
 from . import artifact
 
-# gate thresholds (documented defaults; callers override per corpus)
-# MIN_TOKENS / MAX_TOP_TOKEN_BP / MAX_DUP_BIGRAM_BP now live in
-# operators/quality.py (txt_gate_agreement shares them) and are
-# imported above
-MAX_SHARED_CHUNK_BP = 5000  # C4: ≥ half the chunks shared → near-dup drop
+# gate thresholds (documented defaults; callers override per corpus):
+# MIN_TOKENS / MAX_TOP_TOKEN_BP / MAX_DUP_BIGRAM_BP live in
+# operators/quality.py (txt_gate_agreement shares them) and
+# MAX_SHARED_CHUNK_BP in operators/curation.py (the funnel's oracle SQL
+# embeds it)
 
 # v2: learned hashed-feature classifier gate after the heuristic gate
 CURATOR_VERSION = "curate-v2"
@@ -67,7 +67,7 @@ def curation_flags(docs: DataFrame,
     # consume the tokenized frame — without the cache each branch
     # re-scans the parquet and re-runs the regex tokenizer. Tokens only —
     # the raw text column stays out of the cache.
-    toks = docs.selectExpr("doc_id", f"{_TOKENS} AS t").persist()
+    toks = docs.selectExpr("doc_id", f"{TOKENS_EXPR} AS t").persist()
 
     # exact dedup: first-wins inside each normalized-text hash group
     wdup = Window.partitionBy("text_hash").orderBy("doc_id")
@@ -93,7 +93,7 @@ def curation_flags(docs: DataFrame,
                   f" AS int) - 1),"
                   f" i -> array_join(slice(t, i * {CHUNK_TOKENS} + 1,"
                   f" {CHUNK_TOKENS}), ' '))) AS chunk")
-              .select("doc_id", _md5_long(F.col("chunk")).alias("chunk_hash")))
+              .select("doc_id", md5_long(F.col("chunk")).alias("chunk_hash")))
     cstats = (chunks.groupBy("chunk_hash")
               .agg(F.min("doc_id").alias("min_doc")))
     share = (chunks.join(cstats, "chunk_hash")
@@ -117,10 +117,10 @@ def curation_flags(docs: DataFrame,
               .withColumn("contaminated", F.lit(True)))
 
     # stratified sampling decision (md5 bridge, engine-exact)
-    h = _md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":strat")))
+    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":strat")))
     sampled_in = F.lit(False)
     for lang, rate in rates.items():
-        thr = _smp_threshold_u64(rate) - 2**63
+        thr = smp_threshold_u64(rate) - 2**63
         sampled_in = F.when(F.col("lang") == lang,
                             h < F.lit(thr)).otherwise(sampled_in)
 
@@ -130,7 +130,7 @@ def curation_flags(docs: DataFrame,
     bp = lambda a, b: F.floor(F.col(a).cast("double") / F.col(b) * 10000)  # noqa: E731
     flagged = (with_repetition_signals(
                    docs.selectExpr("doc_id", "lang", "text",
-                                   f"{_TOKENS} AS t"))
+                                   f"{TOKENS_EXPR} AS t"))
                .select("doc_id", "lang", "text",
                        sampled_in.alias("sampled_in"),
                        F.col("n_tok"),
@@ -155,131 +155,6 @@ def curation_flags(docs: DataFrame,
               .when(~F.col("sampled_in"), "sampled_out"))
     return flagged.select("doc_id", "lang", "text",
                           reason.alias("drop_reason"))
-
-
-def curate_funnel(spark, sf_dir) -> DataFrame:
-    """Per-stage funnel counts of the full curation pipeline over the
-    documents table — the oracle-paired surface of run_curation (the
-    driver replays the identical gates in SQL)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (curation_flags(docs)
-            .groupBy(F.coalesce(F.col("drop_reason"), F.lit("kept"))
-                     .alias("stage"))
-            .agg(F.count("*").cast("long").alias("n_docs"))
-            .orderBy("stage"))
-
-
-def _smp_cases() -> str:
-    return "\n".join(
-        f"         WHEN lang = '{lang}' THEN h < {_smp_threshold_u64(rate)}"
-        for lang, rate in SMP_RATES.items())
-
-
-CURATE_FUNNEL_SQL = f"""
-WITH docs AS (
-  SELECT doc_id, lang, text, string_split_regex(lower(text), '[ \\t\\n\\x0b\\f\\r]+') AS t
-  FROM documents WHERE doc_id IS NOT NULL
-),
-uni AS (
-  SELECT doc_id, MAX(c) AS max_tok, CAST(SUM(c) AS BIGINT) AS n_tok FROM (
-    SELECT doc_id, g, COUNT(*) AS c
-    FROM (SELECT doc_id, unnest(t) AS g FROM docs WHERE len(t) >= 2)
-    GROUP BY 1, 2)
-  GROUP BY doc_id
-),
-bg AS (
-  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_bg,
-         CAST(SUM(CASE WHEN c >= 2 THEN c ELSE 0 END) AS BIGINT) AS dup_bg
-  FROM (
-    SELECT doc_id, g, COUNT(*) AS c
-    FROM (SELECT doc_id, unnest(list_transform(range(1, len(t)),
-                 i -> t[i] || ' ' || t[i + 1])) AS g
-          FROM docs WHERE len(t) >= 2) GROUP BY 1, 2)
-  GROUP BY doc_id
-),
-rep AS (
-  SELECT uni.doc_id, n_tok,
-         CAST(FLOOR(CAST(max_tok AS DOUBLE) / n_tok * 10000) AS BIGINT)
-           AS top_token_bp,
-         CAST(FLOOR(CAST(dup_bg AS DOUBLE) / n_bg * 10000) AS BIGINT)
-           AS dup_bigram_bp
-  FROM uni JOIN bg ON uni.doc_id = bg.doc_id
-),
-cls AS (
-  SELECT doc_id, {classifier_score_sql('t')} AS cls_score FROM docs
-),
-exact AS (
-  SELECT doc_id,
-         ROW_NUMBER() OVER (
-           PARTITION BY md5(regexp_replace(lower(text), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'))
-           ORDER BY doc_id) AS dup_rank
-  FROM docs
-),
-ch AS (
-  SELECT doc_id, chunk
-  FROM (SELECT doc_id,
-               unnest(list_transform(
-                 range(0, cast(ceil(len(t) / {CHUNK_TOKENS}.0) AS int)),
-                 i -> array_to_string(t[i * {CHUNK_TOKENS} + 1
-                        : i * {CHUNK_TOKENS} + {CHUNK_TOKENS}], ' '))) AS chunk
-        FROM docs
-        WHERE doc_id IN (SELECT doc_id FROM exact WHERE dup_rank = 1))
-),
-share AS (
-  SELECT doc_id,
-         CAST(FLOOR(CAST(SUM(CASE WHEN min_doc < doc_id THEN 1 ELSE 0 END)
-                         AS DOUBLE) / COUNT(*) * 10000) AS BIGINT)
-           AS shared_bp
-  FROM ch JOIN (SELECT chunk, MIN(doc_id) AS min_doc
-                FROM ch GROUP BY chunk) USING (chunk)
-  GROUP BY doc_id
-),
-sh AS (
-  SELECT DISTINCT doc_id, s FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(t) - {CONTAM_NGRAM - 2}),
-                  i -> {" || ' ' || ".join(f"t[i + {j}]" for j in range(CONTAM_NGRAM))})) AS s
-    FROM docs WHERE len(t) >= {CONTAM_NGRAM})
-),
-contam AS (
-  SELECT DISTINCT c.doc_id FROM sh c
-  JOIN (SELECT DISTINCT s FROM sh WHERE doc_id % {BENCH_MOD} = 0) b USING (s)
-  WHERE c.doc_id % {BENCH_MOD} <> 0
-),
-samp AS (
-  SELECT doc_id,
-         CASE
-{_smp_cases()}
-         ELSE FALSE END AS sampled_in
-  FROM (SELECT doc_id, lang,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':strat'),
-                1, 16))::UBIGINT AS h
-        FROM docs)
-),
-flags AS (
-  SELECT d.doc_id,
-         CASE
-           WHEN rep.n_tok IS NULL OR rep.n_tok < {MIN_TOKENS}
-                OR rep.top_token_bp > {MAX_TOP_TOKEN_BP}
-                OR rep.dup_bigram_bp > {MAX_DUP_BIGRAM_BP} THEN 'quality'
-           WHEN cls.cls_score <= {CLS_THRESHOLD} THEN 'classifier'
-           WHEN exact.dup_rank > 1 THEN 'exact_dup'
-           WHEN COALESCE(share.shared_bp, 0) >= {MAX_SHARED_CHUNK_BP}
-             THEN 'chunk_dup'
-           WHEN contam.doc_id IS NOT NULL THEN 'contaminated'
-           WHEN NOT samp.sampled_in THEN 'sampled_out'
-           ELSE 'kept' END AS stage
-  FROM docs d
-  LEFT JOIN rep ON d.doc_id = rep.doc_id
-  LEFT JOIN cls ON d.doc_id = cls.doc_id
-  LEFT JOIN exact ON d.doc_id = exact.doc_id
-  LEFT JOIN share ON d.doc_id = share.doc_id
-  LEFT JOIN contam ON d.doc_id = contam.doc_id
-  LEFT JOIN samp ON d.doc_id = samp.doc_id
-)
-SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM flags GROUP BY stage ORDER BY stage
-"""
 
 
 def run_curation(spark, docs: DataFrame, out_dir: str,
@@ -322,9 +197,3 @@ def run_curation(spark, docs: DataFrame, out_dir: str,
     finally:
         flags.unpersist()
 
-
-# self-registration for the curate-first import order (see
-# operators/__init__._register_curate for the operators-first order)
-from ..operators import ALL_QUERIES as _ALL_QUERIES  # noqa: E402
-
-_ALL_QUERIES["curate_funnel"] = (curate_funnel, CURATE_FUNNEL_SQL)

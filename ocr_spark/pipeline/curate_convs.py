@@ -27,7 +27,8 @@ keyed plan; the only corpus-wide shuffles are the conv_id assembly
 groupBy and the banded signature groupBy (both keyed, both skew-capped
 by MAX_LSH_BUCKET). Every gate is engine-exact (string_agg ordering,
 md5 bridge, the certified MinHash CTE chain), so the funnel is
-oracle-paired at the driver (`conv_curate_funnel`).
+oracle-paired at the driver (operators/curation.py:
+`conv_curate_funnel`).
 """
 
 from __future__ import annotations
@@ -38,19 +39,18 @@ import time
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from ..operators.corpus import (_lsh_candidate_pairs, _md5_long,
-                                _MINHASH_CTES, _minhash_bands,
-                                _minhash_sig_stage, min_label_components)
-from ..operators.extraction import (_agent_transcripts,
-                                    _agent_transcripts_cte, DEGEN_DUP_BP,
-                                    DEGEN_MIN_TOKENS, degen_turns_ctes)
-from ..operators.quality import (CONTAM_NGRAM, _smp_threshold_u64,
-                                 token_shingle_expr, with_repetition_signals)
+from ..functions.hashing import md5_long, smp_threshold_u64
+from ..functions.minhash import (lsh_candidate_pairs, minhash_bands,
+                                 minhash_sig_stage)
+from ..functions.text import TOKENS_EXPR
+from ..operators.corpus import min_label_components
+from ..operators.curation import (CONV_BENCH_RATE, CONV_KEEP_RATE,
+                                  MIN_CONV_CHARS)
+from ..operators.extraction import DEGEN_DUP_BP, DEGEN_MIN_TOKENS
+from ..operators.quality import (CONTAM_NGRAM, token_shingle_expr,
+                                 with_repetition_signals)
 from . import artifact
 
-MIN_CONV_CHARS = 100     # assembled-conversation char floor
-CONV_KEEP_RATE = 0.8     # deterministic sampling keep rate
-CONV_BENCH_RATE = 0.125  # md5 slice of convs that plays the eval suite
 CONV_CURATOR_VERSION = "curate-convs-v3"
 
 
@@ -106,7 +106,7 @@ def conv_curation_flags(t: DataFrame,
     # generation must not claim a cluster's canonical slot. The fold is
     # turn-local map-only; only flagged (conv_id) rows shuffle.
     asst = (t.where(F.col("role") == "assistant")
-            .selectExpr("conv_id", "split(lower(text), '[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+') AS tt")
+            .selectExpr("conv_id", f"{TOKENS_EXPR} AS tt")
             .where(f"size(tt) >= {DEGEN_MIN_TOKENS}"))
     # persisted: both the survivors anti-join and the final flag join
     # read it — uncached, the assistant-turn fold + distinct shuffle run
@@ -125,17 +125,17 @@ def conv_curation_flags(t: DataFrame,
     survivors = (flags0.where(~F.col("quality_fail")
                               & (F.col("dup_rank") == 1))
                  .join(degen.select("conv_id"), "conv_id", "left_anti")
-                 .select(_md5_long(F.col("conv_id")).alias("doc_id"),
+                 .select(md5_long(F.col("conv_id")).alias("doc_id"),
                          "conv_id", F.col("doc").alias("text")))
-    # cached: _lsh_candidate_pairs consumes the bands through two
+    # cached: lsh_candidate_pairs consumes the bands through two
     # exchange subtrees (stats aggregation + join probe) that
     # ReuseExchange cannot dedup — uncached, the tokenize+md5 signature
     # stage (the hottest per-conv work here) would run twice
     sigs = survivors.select("doc_id", "text").mapInPandas(
-        _minhash_sig_stage(), "doc_id long, sig array<long>").persist()
+        minhash_sig_stage(), "doc_id long, sig array<long>").persist()
     if _track is not None:
         _track.append(sigs)
-    pairs = (_lsh_candidate_pairs(_minhash_bands(sigs))
+    pairs = (lsh_candidate_pairs(minhash_bands(sigs))
              .select("doc_a", "doc_b").distinct())
     ids = survivors.select("doc_id", "conv_id")
     # CLUSTER first-wins, not one-hop: connected components over the
@@ -164,8 +164,8 @@ def conv_curation_flags(t: DataFrame,
     # benchmark conversation drops. Benchmark side broadcasts — eval
     # suites are tiny next to the corpus.
     from pyspark.sql.functions import broadcast
-    bench_thr = _smp_threshold_u64(CONV_BENCH_RATE) - 2**63
-    is_bench = _md5_long(
+    bench_thr = smp_threshold_u64(CONV_BENCH_RATE) - 2**63
+    is_bench = md5_long(
         F.concat(F.col("conv_id"), F.lit(":bench"))) < F.lit(bench_thr)
     n = CONTAM_NGRAM
     csh = (conv.where(F.size("ct") >= n)
@@ -178,8 +178,8 @@ def conv_curation_flags(t: DataFrame,
               .select("conv_id").distinct()
               .withColumn("contaminated", F.lit(True)))
 
-    thr = _smp_threshold_u64(CONV_KEEP_RATE) - 2**63
-    sampled_in = _md5_long(
+    thr = smp_threshold_u64(CONV_KEEP_RATE) - 2**63
+    sampled_in = md5_long(
         F.concat(F.col("conv_id"), F.lit(":csmp"))) < F.lit(thr)
     reason = (F.when(F.col("quality_fail"), "quality")
               .when(F.coalesce(F.col("degenerate"), F.lit(False)),
@@ -193,124 +193,6 @@ def conv_curation_flags(t: DataFrame,
             .join(near_dropped, "conv_id", "left")
             .join(contam, "conv_id", "left")
             .select("conv_id", "n_turns", reason.alias("drop_reason")))
-
-
-def conv_curate_funnel(spark, sf_dir, conv_mod: int = 50) -> DataFrame:
-    """Per-stage funnel over the synthesized agent transcripts — the
-    oracle-paired surface of run_conv_curation. conv_mod=25 mixes all
-    four roles per conversation (the registered query keeps the default
-    50; the 25 twin makes the degenerate branch's oracle differential
-    REAL in tests — under 50, role parity means no conversation carries
-    both a user and an assistant turn)."""
-    t = _agent_transcripts(spark, sf_dir, conv_mod=conv_mod)
-    return (conv_curation_flags(t)
-            .groupBy(F.coalesce(F.col("drop_reason"), F.lit("kept"))
-                     .alias("stage"))
-            .agg(F.count("*").cast("long").alias("n_convs"),
-                 F.sum("n_turns").cast("long").alias("n_turns"))
-            .orderBy("stage"))
-
-
-def conv_curate_sql(conv_mod: int = 50) -> str:
-    """The funnel oracle at an arbitrary conv modulus (mirrors
-    conv_curate_funnel's conv_mod)."""
-    return f"""
-WITH RECURSIVE t AS ({_agent_transcripts_cte(conv_mod)}),
-conv AS (
-  SELECT conv_id,
-         CAST(COUNT(*) AS BIGINT) AS n_turns,
-         CAST(SUM(CASE WHEN role = 'user' THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_user,
-         CAST(SUM(len(text)) AS BIGINT) AS total_chars,
-         string_agg(text, chr(10) ORDER BY turn_idx, text) AS doc
-  FROM t GROUP BY conv_id
-),
-flags0 AS (
-  SELECT *,
-         (n_user < 1 OR total_chars < {MIN_CONV_CHARS}) AS quality_fail,
-         ROW_NUMBER() OVER (
-           PARTITION BY md5(regexp_replace(lower(doc), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'))
-           ORDER BY conv_id) AS dup_rank
-  FROM conv
-),
-{degen_turns_ctes(conv_mod)},
-dg_degen AS (
-  SELECT DISTINCT conv_id FROM dg_scored WHERE dup_bp >= {DEGEN_DUP_BP}
-),
-ids AS (
-  SELECT conv_id, doc AS text,
-         CAST(('0x' || substr(md5(conv_id), 1, 16))::UBIGINT::HUGEINT
-              - 9223372036854775808 AS BIGINT) AS doc_id
-  FROM flags0 WHERE NOT quality_fail AND dup_rank = 1
-    AND conv_id NOT IN (SELECT conv_id FROM dg_degen)
-),
-{_MINHASH_CTES.format(src="ids")},
-near_edges AS (
-  SELECT ia.conv_id AS src, ib.conv_id AS dst
-  FROM (SELECT DISTINCT doc_a, doc_b FROM cand_pairs) p
-  JOIN ids ia ON ia.doc_id = p.doc_a
-  JOIN ids ib ON ib.doc_id = p.doc_b
-),
-near_sym AS (
-  SELECT src, dst FROM near_edges UNION SELECT dst, src FROM near_edges
-),
--- cluster first-wins: per-vertex MIN over the transitive closure of
--- the colliding-pair graph; every conversation except its component's
--- min conv_id drops (mirrors min_label_components' fixpoint)
-near_reach AS (
-  SELECT src AS conv_id, src AS label FROM near_sym
-  UNION
-  SELECT e.dst AS conv_id, r.label
-  FROM near_reach r JOIN near_sym e ON e.src = r.conv_id
-),
-near AS (
-  SELECT conv_id FROM near_reach GROUP BY conv_id
-  HAVING MIN(label) != conv_id
-),
-csh AS (
-  SELECT DISTINCT conv_id, is_bench, s FROM (
-    SELECT conv_id,
-           ('0x' || substr(md5(conv_id || ':bench'), 1, 16))::UBIGINT
-             < {_smp_threshold_u64(CONV_BENCH_RATE)} AS is_bench,
-           unnest(list_transform(range(1, len(ct) - {CONTAM_NGRAM - 2}),
-                  i -> {" || ' ' || ".join(f"ct[i + {j}]" for j in range(CONTAM_NGRAM))})) AS s
-    FROM (SELECT conv_id, string_split_regex(lower(doc), '[ \\t\\n\\x0b\\f\\r]+') AS ct
-          FROM conv)
-    WHERE len(ct) >= {CONTAM_NGRAM})
-),
-contam AS (
-  SELECT DISTINCT c.conv_id FROM csh c
-  JOIN (SELECT DISTINCT s FROM csh WHERE is_bench) b USING (s)
-  WHERE NOT c.is_bench
-),
-samp AS (
-  SELECT conv_id,
-         ('0x' || substr(md5(conv_id || ':csmp'), 1, 16))::UBIGINT
-           < {_smp_threshold_u64(CONV_KEEP_RATE)} AS sampled_in
-  FROM conv
-),
-staged AS (
-  SELECT f.conv_id, f.n_turns,
-         CASE WHEN f.quality_fail THEN 'quality'
-              WHEN dg.conv_id IS NOT NULL THEN 'degenerate'
-              WHEN f.dup_rank > 1 THEN 'exact_dup'
-              WHEN near.conv_id IS NOT NULL THEN 'near_dup'
-              WHEN contam.conv_id IS NOT NULL THEN 'contaminated'
-              WHEN NOT samp.sampled_in THEN 'sampled_out'
-              ELSE 'kept' END AS stage
-  FROM flags0 f
-  LEFT JOIN dg_degen dg ON dg.conv_id = f.conv_id
-  LEFT JOIN near ON near.conv_id = f.conv_id
-  LEFT JOIN contam ON contam.conv_id = f.conv_id
-  LEFT JOIN samp ON samp.conv_id = f.conv_id
-)
-SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_convs,
-       CAST(SUM(n_turns) AS BIGINT) AS n_turns
-FROM staged GROUP BY stage ORDER BY stage
-"""
-
-
-CONV_CURATE_SQL = conv_curate_sql()
 
 
 def run_conv_curation(spark, t: DataFrame, out_dir: str) -> dict:
@@ -350,10 +232,3 @@ def run_conv_curation(spark, t: DataFrame, out_dir: str) -> dict:
         for df in intermediates:
             df.unpersist()
 
-
-# self-registration for the curate-first import order (the
-# pipeline.curate pattern; operators/__init__ registers it in the
-# operators-first order)
-from ..operators import ALL_QUERIES as _ALL_QUERIES  # noqa: E402
-
-_ALL_QUERIES["conv_curate_funnel"] = (conv_curate_funnel, CONV_CURATE_SQL)

@@ -28,8 +28,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.corpus import (N_BANDS, N_MINHASH, _minhash_bands,
-                                _minhash_sig_stage, _spread)
+from ..functions.frames import spread_partitions
+from ..functions.minhash import (N_BANDS, N_MINHASH, minhash_bands,
+                                 minhash_sig_stage)
 from . import artifact
 
 INDEX_VERSION = 1
@@ -39,14 +40,15 @@ _DATA = "band_index"
 
 
 def _bands_of(docs: DataFrame, spread: bool = True) -> DataFrame:
-    # _spread inspects df.rdd, which streaming DataFrames forbid — the
-    # stream path skips it (micro-batch sizing is the trigger's job)
+    # spread_partitions inspects df.rdd, which streaming DataFrames
+    # forbid — the stream path skips it (micro-batch sizing is the
+    # trigger's job)
     src = docs.select("doc_id", "text")
     if spread:
-        src = _spread(src)
-    sigs = src.mapInPandas(_minhash_sig_stage(),
+        src = spread_partitions(src)
+    sigs = src.mapInPandas(minhash_sig_stage(),
                            "doc_id long, sig array<long>")
-    return _minhash_bands(sigs)
+    return minhash_bands(sigs)
 
 
 def _bucketize(bands: DataFrame) -> DataFrame:

@@ -251,10 +251,15 @@ def stable_bucket_py(conv_id: str, n_buckets: int) -> int:
     return int(hashlib.md5(conv_id.encode()).hexdigest()[:8], 16) % n_buckets
 
 
+# turns per salting block: a hot conversation larger than one task's
+# share is cut only at these boundaries, so consecutive turns stay in one
+# Arrow batch
+TURN_BLOCK = 64
+
+
 def extract_turns(transcripts: DataFrame,
                   salt_partitions: int | None = None,
-                  n_buckets: int = 64,
-                  turn_bucket_size: int = 64) -> DataFrame:
+                  n_buckets: int = 64) -> DataFrame:
     """Transcripts → extracted turns DataFrame (no write).
 
     salt_partitions:
@@ -262,7 +267,7 @@ def extract_turns(transcripts: DataFrame,
       0     → skip the shuffle (map-only over scan partitions; the stream
               path uses this, so no micro-batch pays a sampling job)
       n > 0 → explicit partition count
-    The shuffle key is (bucket, conv_id, floor(turn_idx / turn_bucket_size))
+    The shuffle key is (bucket, conv_id, floor(turn_idx / TURN_BLOCK))
     under range partitioning. Leading with the output bucket keeps each
     task's rows in a contiguous run of buckets, so a partitioned write
     opens a few files per task instead of one per bucket; the sampled range
@@ -288,7 +293,7 @@ def extract_turns(transcripts: DataFrame,
             salt_partitions,
             F.col("bucket"),
             F.col("conv_id"),
-            F.floor(F.col("turn_idx") / turn_bucket_size))
+            F.floor(F.col("turn_idx") / TURN_BLOCK))
     return df.mapInPandas(make_extract_fn(), schema=EXTRACT_SCHEMA)
 
 

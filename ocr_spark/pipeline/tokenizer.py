@@ -22,7 +22,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.corpus import _spread, train_bpe_merge_list
+from ..functions.frames import spread_partitions
+from ..operators.corpus import train_bpe_merge_list
 from . import artifact
 
 TOKENIZER_VERSION = 1
@@ -141,7 +142,7 @@ def apply_tokenizer(spark: SparkSession, tok_dir: str,
     schema = ("doc_id long, "
               + "".join(f"{c} string, " for c in pt)
               + "n_words long, n_bpe_tokens long")
-    out = (_spread(docs.select("doc_id", "text", *pt))
+    out = (spread_partitions(docs.select("doc_id", "text", *pt))
            .mapInPandas(_apply, schema))
     return out.orderBy("doc_id") if sort else out
 

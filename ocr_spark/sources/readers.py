@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..streaming.stream import TRANSCRIPT_SCHEMA
+from .synthetic import TRANSCRIPT_SCHEMA
 
 # FileScanner.php:12-19 ignore patterns, path-level variant — one
 # source of truth in sources/ingest.py beside the name-level originals

@@ -28,14 +28,23 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
-                               StructType)
+                               StructType, TimestampType)
 
 BASE_EPOCH = 1735689600  # 2025-01-01T00:00:00Z
 DEFAULT_TURNS_PER_CONV = 8
 HOT_FACTOR = 100
 HOT_PCT = 100  # 1 in HOT_PCT convs is hot
 
-TRANSCRIPT_FIELDS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+# the one definition of the transcripts table: readers, the stream source
+# and every synthesizer here produce exactly these columns
+TRANSCRIPT_SCHEMA = StructType([
+    StructField("conv_id", StringType()),
+    StructField("turn_idx", IntegerType()),
+    StructField("role", StringType()),
+    StructField("text", StringType()),
+    StructField("tool", StringType()),
+    StructField("ts", TimestampType()),
+])
 
 
 def _h(*parts) -> int:
@@ -297,14 +306,8 @@ def synthesize_transcripts(spark: SparkSession, n_convs: int,
         .repartition(partitions, F.col("conv_id"), F.col("turn_idx"))
     )
 
-    out_schema = StructType([
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("role", StringType()),
-        StructField("text", StringType()),
-        StructField("tool", StringType()),
-        StructField("ts_epoch", LongType()),
-    ])
+    out_schema = StructType(TRANSCRIPT_SCHEMA.fields[:-1]
+                            + [StructField("ts_epoch", LongType())])
 
     def _fill(batches):
         import pandas as pd
@@ -327,5 +330,75 @@ def synthesize_transcripts(spark: SparkSession, n_convs: int,
         skel.mapInPandas(_fill, schema=out_schema)
         .withColumn("ts", F.timestamp_seconds(F.col("ts_epoch")))
         .drop("ts_epoch")
-        .select(*TRANSCRIPT_FIELDS)
+        .select(*TRANSCRIPT_SCHEMA.fieldNames())
     )
+
+
+# ---------------------------------------------------------------------------
+# agent transcripts over the documents table (the query layer's input)
+# ---------------------------------------------------------------------------
+
+_AGENT_ROLES = ("user", "assistant", "tool", "system")
+_AGENT_TOOLS = ("search", "code", "browser")
+
+
+def agent_transcripts(spark, sf_dir, conv_mod=50):
+    """Transcripts in the exact input_hint shape (conv_id, turn_idx, role,
+    text, tool, ts), synthesized deterministically from documents with a
+    realistic role mix and tool names on tool turns — the input for the
+    transcript-native analytics queries (conv_stats).
+
+    conv_mod parity trap: with the default 50, conv ≡ doc_id (mod 50)
+    and role ≡ doc_id (mod 4) share the factor 2 — even conversations
+    get ONLY user/tool turns and odd ones ONLY assistant/system, so any
+    op that needs a user turn FOLLOWED by an assistant turn in the same
+    conversation sees zero instances. Such ops pass conv_mod=25
+    (coprime to 4: every conversation mixes all four roles). Tie-role
+    constancy survives any conv_mod dividing 1000: rows tied on
+    (conv_id, turn_idx) agree mod 1000 and hence mod 4.
+
+    All doc_id arithmetic uses pmod, not %: Spark's % keeps the
+    dividend's sign, so a NEGATIVE doc_id (production ids are md5-longs,
+    uniform over signed int64) would make element_at(roles, 0) throw and
+    doc_id * 7 overflow int64 in timestamp_seconds. pmod keeps every
+    index in range and the ts seed is bounded to 2^31 seconds-from-epoch
+    before the *7; the oracle CTE mirrors with ((x % n) + n) % n —
+    identical to % on the dense positive testdata ids, so the oracle
+    hash is unchanged."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    did = F.col("doc_id")
+    role = F.element_at(F.array(*[F.lit(r) for r in _AGENT_ROLES]),
+                        (F.pmod(did, F.lit(4)) + 1).cast("int"))
+    tool = F.when(F.pmod(did, F.lit(4)) == 2,
+                  F.element_at(F.array(*[F.lit(t) for t in _AGENT_TOOLS]),
+                               (F.pmod(did, F.lit(3)) + 1).cast("int")))
+    return docs.select(
+        F.format_string("conv-%06d",
+                        F.pmod(did, F.lit(conv_mod))).alias("conv_id"),
+        F.pmod(did, F.lit(1000)).cast("int").alias("turn_idx"),
+        role.alias("role"),
+        F.col("text"),
+        tool.alias("tool"),
+        F.timestamp_seconds(
+            F.lit(BASE_EPOCH)
+            + F.pmod(did, F.lit(2147483648)) * 7).alias("ts"),
+    )
+
+
+def agent_transcripts_sql(conv_mod=50):
+    """DuckDB twin of agent_transcripts: a CTE body over `documents`;
+    ((x % n) + n) % n mirrors Spark's pmod."""
+    return f"""
+  SELECT printf('conv-%06d', ((doc_id % {conv_mod}) + {conv_mod}) % {conv_mod}) AS conv_id,
+         CAST(((doc_id % 1000) + 1000) % 1000 AS INTEGER) AS turn_idx,
+         ['user', 'assistant', 'tool', 'system']
+           [CAST(((doc_id % 4) + 4) % 4 AS INT) + 1] AS role,
+         text,
+         CASE WHEN ((doc_id % 4) + 4) % 4 = 2
+              THEN ['search', 'code', 'browser']
+                     [CAST(((doc_id % 3) + 3) % 3 AS INT) + 1]
+         END AS tool,
+         to_timestamp({BASE_EPOCH}
+           + (((doc_id % 2147483648) + 2147483648) % 2147483648) * 7) AS ts
+  FROM documents
+"""

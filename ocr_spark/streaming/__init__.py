@@ -7,10 +7,9 @@ gap-based sessionization (TextBlockParser.php:219-263 Y-gap grouping ≙
 session_window).
 """
 
-from .stream import (TRANSCRIPT_SCHEMA, read_transcript_stream,
-                     run_stream_extract, sessionize_by_gap)
+from .stream import (read_transcript_stream, run_stream_extract,
+                     sessionize_by_gap)
 
 __all__ = [
-    "TRANSCRIPT_SCHEMA", "read_transcript_stream", "run_stream_extract",
-    "sessionize_by_gap",
+    "read_transcript_stream", "run_stream_extract", "sessionize_by_gap",
 ]

@@ -19,10 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.quality import (blocklist_reason_col, chunk_windows_from,
-                                 with_repetition_signals)
-from ..pipeline.curate import (MAX_DUP_BIGRAM_BP, MAX_TOP_TOKEN_BP,
-                               MIN_TOKENS)
+from ..functions.text import TOKENS_EXPR
+from ..operators.quality import (MAX_DUP_BIGRAM_BP, MAX_TOP_TOKEN_BP,
+                                 MIN_TOKENS, blocklist_reason_col,
+                                 chunk_windows_from, with_repetition_signals)
 
 
 def quality_signals(docs: DataFrame) -> DataFrame:
@@ -31,7 +31,7 @@ def quality_signals(docs: DataFrame) -> DataFrame:
     with ≥2 tokens)."""
     bp = "FLOOR(CAST({a} AS DOUBLE) / {b} * 10000)"
     return (with_repetition_signals(
-                docs.selectExpr("*", "split(lower(text), '[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+') AS _t"),
+                docs.selectExpr("*", f"{TOKENS_EXPR} AS _t"),
                 tcol="_t")
             .selectExpr(
                 "*",
@@ -84,10 +84,11 @@ def url_spam_gate_stream(docs: DataFrame) -> DataFrame:
     annotating survivors with their link share. Same regex class as the
     batch op ([!-~], Java/RE2-identical); batch/stream equivalence is
     pinned by tests/test_streaming_quality.py."""
-    from ..operators.quality import _URL_RE, URL_SPAM_BP
+    from ..functions.text import URL_RE
+    from ..operators.quality import URL_SPAM_BP
     url_chars = (
         "CAST(length(coalesce(text, '')) - length(regexp_replace("
-        f"coalesce(text, ''), '{_URL_RE}', '')) AS BIGINT)")
+        f"coalesce(text, ''), '{URL_RE}', '')) AS BIGINT)")
     n_chars = "CAST(length(coalesce(text, '')) AS BIGINT)"
     # underscore names: the documents schema already carries n_chars
     return (docs.selectExpr(

@@ -242,7 +242,7 @@ def streaming_conv_quality(turns: DataFrame) -> DataFrame:
     transcript (pinned across micro-batch splits in
     tests/test_stateful_streaming.py). State is three longs per
     conversation — O(1), no text retained."""
-    from ..pipeline.curate_convs import MIN_CONV_CHARS
+    from ..operators.curation import MIN_CONV_CHARS
     return (
         turns.groupBy("conv_id")
         .applyInPandasWithState(
@@ -265,7 +265,7 @@ REFUSAL_STATE_SCHEMA = "n_assistant long, n_refusals long"
 def _refusal_fn(key, pdfs, state: GroupState):
     import pandas as pd
 
-    from ..operators.extraction import _REFUSAL_MARKS
+    from ..functions.text import REFUSAL_MARKS
 
     (conv_id,) = key
     n_a, n_r = state.get if state.exists else (0, 0)
@@ -282,7 +282,7 @@ def _refusal_fn(key, pdfs, state: GroupState):
                  + (ln % 3).astype(str) + ")")
         low = txt.where((ln % 5 != 0) | ~nn, templ).str.lower()
         r = pd.Series(False, index=low.index)
-        for m in _REFUSAL_MARKS:
+        for m in REFUSAL_MARKS:
             r |= low.str.contains(m, regex=False)
         n_a += int(len(a))
         n_r += int((r & nn).sum())
@@ -329,14 +329,14 @@ def _langmix_fn(key, pdfs, state: GroupState):
 
     import pandas as pd
 
-    from ..operators.corpus import _LANG_MARKERS
+    from ..functions.text import LANG_MARKERS
 
     (conv_id,) = key
-    langs = list(_LANG_MARKERS)                      # ordered: tie winner
+    langs = list(LANG_MARKERS)                       # ordered: tie winner
     counts = dict(zip(langs + ["unk"],
                       state.get if state.exists else [0] * 5))
     ws = re.compile(r"[ \t\n\x0b\f\r]+")             # Java \s, not unicode
-    marker_sets = {lang: set(w) for lang, w in _LANG_MARKERS.items()}
+    marker_sets = {lang: set(w) for lang, w in LANG_MARKERS.items()}
     for pdf in pdfs:
         for text in pdf["text"]:
             toks = ws.split(("" if text is None else str(text)).lower())
@@ -370,7 +370,7 @@ def streaming_conv_lang_mix(turns: DataFrame) -> DataFrame:
     ARRIVE, so a router can direct a live conversation to
     language-specific curation without waiting for the batch pass. State
     is five fixed counters per conversation — O(1), no text retained;
-    the marker sets come from the SAME _LANG_MARKERS dict as the batch
+    the marker sets come from the SAME LANG_MARKERS dict as the batch
     scoring and its oracle. Batch equivalence across micro-batch splits
     pinned in tests/test_stateful_streaming.py."""
     return (
@@ -482,7 +482,7 @@ def streaming_minhash_neardup(docs: DataFrame) -> DataFrame:
     AS DOCUMENTS ARRIVE, across micro-batches.
 
     docs(doc_id, text) stream → minhash signatures (the batch kernel's
-    numpy Arrow stage, unchanged) → band explode (shared _minhash_bands
+    numpy Arrow stage, unchanged) → band explode (shared minhash_bands
     plan) → applyInPandasWithState keyed by (band, band_hash): each
     bucket's state is the canonical (first-seen) member id, set once;
     a document landing in a non-empty bucket emits a candidate edge to
@@ -493,10 +493,10 @@ def streaming_minhash_neardup(docs: DataFrame) -> DataFrame:
     aggregation. State per bucket is ONE long across millions of
     buckets; the shuffle is the same keyed (band, band_hash) exchange
     as the batch plan."""
-    from ..operators.corpus import _minhash_bands, _minhash_sig_stage
-    sigs = docs.mapInPandas(_minhash_sig_stage(),
+    from ..functions.minhash import minhash_bands, minhash_sig_stage
+    sigs = docs.mapInPandas(minhash_sig_stage(),
                             "doc_id long, sig array<long>")
-    bands = _minhash_bands(sigs)
+    bands = minhash_bands(sigs)
     return (
         bands.groupBy("band", "band_hash")
         .applyInPandasWithState(

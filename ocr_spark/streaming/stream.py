@@ -25,17 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (IntegerType, StringType, StructField,
-                               StructType, TimestampType)
 
-TRANSCRIPT_SCHEMA = StructType([
-    StructField("conv_id", StringType()),
-    StructField("turn_idx", IntegerType()),
-    StructField("role", StringType()),
-    StructField("text", StringType()),
-    StructField("tool", StringType()),
-    StructField("ts", TimestampType()),
-])
+from ..sources.synthetic import TRANSCRIPT_SCHEMA
 
 
 def read_transcript_stream(spark: SparkSession, input_dir: str,

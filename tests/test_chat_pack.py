@@ -15,10 +15,10 @@ pytestmark = pytest.mark.skipif(
 
 
 def _placement(spark):
-    from ocr_spark.operators.extraction import _agent_transcripts
     from ocr_spark.operators.quality import chat_pack_placement
+    from ocr_spark.sources.synthetic import agent_transcripts
     return chat_pack_placement(
-        _agent_transcripts(spark, SF_DIR, conv_mod=25))
+        agent_transcripts(spark, SF_DIR, conv_mod=25))
 
 
 def test_chat_pack_tiles_the_token_stream(spark):
@@ -92,15 +92,15 @@ def test_chat_pack_conv_scan_matches_naive_window(spark):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    from ocr_spark.operators.corpus import _md5_long
-    from ocr_spark.operators.extraction import _agent_transcripts
+    from ocr_spark.functions.hashing import md5_long
     from ocr_spark.operators.quality import _TURN_TOKENS
+    from ocr_spark.sources.synthetic import agent_transcripts
 
-    t = _agent_transcripts(spark, SF_DIR, conv_mod=25)
+    t = agent_transcripts(spark, SF_DIR, conv_mod=25)
     conv = (t.selectExpr(
         "conv_id", f"CAST(size({_TURN_TOKENS}) AS BIGINT) AS n_tokens")
         .groupBy("conv_id").agg(F.sum("n_tokens").alias("conv_tokens"))
-        .withColumn("ckey", _md5_long(F.col("conv_id"))))
+        .withColumn("ckey", md5_long(F.col("conv_id"))))
     w = (W.partitionBy().orderBy("ckey")
          .rowsBetween(W.unboundedPreceding, W.currentRow))
     naive = {r.conv_id: r.conv_start for r in conv.withColumn(
@@ -117,10 +117,10 @@ def test_write_packed_chat_shards_export(spark, tmp_path):
     manifest conservation totals equal to the placement's, boundary
     turns duplicated into both shards, per-shard rows ordered by
     (seq_id, tok_start)."""
-    from ocr_spark.operators.extraction import _agent_transcripts
     from ocr_spark.pipeline.shards import write_packed_chat_shards
+    from ocr_spark.sources.synthetic import agent_transcripts
 
-    turns = _agent_transcripts(spark, SF_DIR, conv_mod=25)
+    turns = agent_transcripts(spark, SF_DIR, conv_mod=25)
     out = str(tmp_path / "chatpack")
     m = write_packed_chat_shards(spark, turns, out, seqs_per_shard=8)
 

@@ -144,7 +144,7 @@ def test_funnel_oracle_on_planted_classifier_corpus(spark, tmp_path):
     """The doc-grain funnel's DuckDB oracle must agree on a corpus
     where the classifier stage actually FIRES (the registry compare
     only sees well-formed testdata where it never does)."""
-    from ocr_spark.pipeline.curate import CURATE_FUNNEL_SQL, curate_funnel
+    from ocr_spark.operators.curation import CURATE_FUNNEL_SQL, curate_funnel
     base = ("alpha bravo charlie delta echo foxtrot golf hotel india "
             "juliett kilo lima mike november oscar papa quebec romeo")
     rows = [

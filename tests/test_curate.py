@@ -76,7 +76,7 @@ def test_planted_gates(spark, tmp_path):
 
 
 def test_funnel_stages_present_at_sf001(spark):
-    from ocr_spark.pipeline.curate import curate_funnel
+    from ocr_spark.operators.curation import curate_funnel
     stages = {r.stage: r.n_docs for r in curate_funnel(spark, SF_DIR).collect()}
     assert "kept" in stages and stages["kept"] > 0
     # en is downsampled at rate 0.3, so sampling must reject something
@@ -106,12 +106,12 @@ def _planted_conv_docs_dir(spark, tmp_path):
 
 
 def test_conv_curation_planted_stages(spark, tmp_path):
-    from ocr_spark.operators.extraction import _agent_transcripts
     from ocr_spark.pipeline.curate_convs import conv_curation_flags
+    from ocr_spark.sources.synthetic import agent_transcripts
 
     d = _planted_conv_docs_dir(spark, tmp_path)
     flags = {r.conv_id: r.drop_reason for r in
-             conv_curation_flags(_agent_transcripts(spark, d)).collect()}
+             conv_curation_flags(agent_transcripts(spark, d)).collect()}
     assert len(flags) == 50
     assert flags["conv-000004"] == "exact_dup"
     assert flags["conv-000008"] == "near_dup"
@@ -128,8 +128,8 @@ def test_conv_funnel_oracle_on_planted_corpus(spark, tmp_path):
     dup stages never fire)."""
     import duckdb
 
-    from ocr_spark.pipeline.curate_convs import (CONV_CURATE_SQL,
-                                                 conv_curate_funnel)
+    from ocr_spark.operators.curation import (CONV_CURATE_SQL,
+                                              conv_curate_funnel)
 
     d = _planted_conv_docs_dir(spark, tmp_path)
     rows = sorted(tuple(r) for r in conv_curate_funnel(spark, d).collect())
@@ -143,11 +143,11 @@ def test_conv_funnel_oracle_on_planted_corpus(spark, tmp_path):
 
 
 def test_run_conv_curation_end_to_end(spark, tmp_path):
-    from ocr_spark.operators.extraction import _agent_transcripts
     from ocr_spark.pipeline.curate_convs import run_conv_curation
+    from ocr_spark.sources.synthetic import agent_transcripts
 
     d = _planted_conv_docs_dir(spark, tmp_path)
-    t = _agent_transcripts(spark, d)
+    t = agent_transcripts(spark, d)
     out = str(tmp_path / "conv_run")
     manifest = run_conv_curation(spark, t, out)
     assert manifest["n_input"] == 50
@@ -168,12 +168,12 @@ def test_conv_contamination_gate_planted(spark, tmp_path):
     drop as 'contaminated', the benchmark side must not."""
     import hashlib
 
-    from ocr_spark.operators.extraction import _agent_transcripts
-    from ocr_spark.pipeline.curate_convs import (CONV_BENCH_RATE,
-                                                 conv_curation_flags)
-    from ocr_spark.operators.quality import _smp_threshold_u64
+    from ocr_spark.functions.hashing import smp_threshold_u64
+    from ocr_spark.operators.curation import CONV_BENCH_RATE
+    from ocr_spark.pipeline.curate_convs import conv_curation_flags
+    from ocr_spark.sources.synthetic import agent_transcripts
 
-    thr = _smp_threshold_u64(CONV_BENCH_RATE) - 2**63
+    thr = smp_threshold_u64(CONV_BENCH_RATE) - 2**63
 
     def is_bench(j):
         u = int(hashlib.md5(f"conv-{j:06d}:bench".encode())
@@ -197,14 +197,14 @@ def test_conv_contamination_gate_planted(spark, tmp_path):
     ).write.parquet(os.path.join(d, "documents.parquet"))
 
     flags = {r.conv_id: r.drop_reason for r in
-             conv_curation_flags(_agent_transcripts(spark, d)).collect()}
+             conv_curation_flags(agent_transcripts(spark, d)).collect()}
     assert flags[f"conv-{plain:06d}"] == "contaminated"
     assert flags[f"conv-{bench:06d}"] != "contaminated"
 
 def test_conv_funnel_contamination_broadcasts(spark):
     """The conv funnel's decontamination join must broadcast the eval-
     suite shingle side — the corpus-side shingles never shuffle for it."""
-    from ocr_spark.pipeline.curate_convs import conv_curate_funnel
+    from ocr_spark.operators.curation import conv_curate_funnel
     from ocr_spark.plans import has_broadcast_hash_join
 
     df = conv_curate_funnel(spark, SF_DIR)
@@ -268,7 +268,7 @@ def test_corpus_pipeline_resume_idempotent(spark, tmp_path):
 
 def test_agent_transcripts_negative_doc_ids_engine_exact(spark, tmp_path):
     """Production doc_ids are md5-longs — uniform over SIGNED int64, half
-    negative. _agent_transcripts must not throw (Spark % keeps the
+    negative. agent_transcripts must not throw (Spark % keeps the
     dividend sign; element_at(roles, 0) used to raise) and must agree
     with the DuckDB CTE row-for-row on a mixed-sign corpus."""
     import duckdb
@@ -301,9 +301,9 @@ def test_conv_neardup_cluster_first_wins_not_one_hop(spark):
     distinguishing assertion."""
     import hashlib
 
-    from ocr_spark.pipeline.curate_convs import (CONV_BENCH_RATE,
-                                                 conv_curation_flags)
-    from ocr_spark.operators.quality import _smp_threshold_u64
+    from ocr_spark.functions.hashing import smp_threshold_u64
+    from ocr_spark.operators.curation import CONV_BENCH_RATE
+    from ocr_spark.pipeline.curate_convs import conv_curation_flags
 
     c_text = " ".join(f"tok{i}" for i in range(40))
     wa = c_text.split(); wa[0] = "mutA"
@@ -312,7 +312,7 @@ def test_conv_neardup_cluster_first_wins_not_one_hop(spark):
 
     # pick a conv-id suffix where none of the three lands in the bench
     # slice (contamination would otherwise co-fire on the shared grams)
-    bthr = _smp_threshold_u64(CONV_BENCH_RATE)
+    bthr = smp_threshold_u64(CONV_BENCH_RATE)
     def in_bench(cid):
         return int(hashlib.md5(f"{cid}:bench".encode())
                    .hexdigest()[:16], 16) < bthr
@@ -384,7 +384,7 @@ def test_conv_degenerate_gate_planted(spark):
 def test_conv_funnel_oracle_degenerate_stage_mod25(spark, tmp_path):
     """The funnel's degenerate branch, differentially: at conv_mod=25
     every conversation mixes all four roles (the parity note in
-    _agent_transcripts), so a planted looping assistant turn yields a
+    agent_transcripts), so a planted looping assistant turn yields a
     conversation that PASSES quality and drops at 'degenerate' — and the
     conv_mod=25 SQL twin must reproduce the whole funnel including that
     stage. Under the registered conv_mod=50 surface the stage is
@@ -392,8 +392,8 @@ def test_conv_funnel_oracle_degenerate_stage_mod25(spark, tmp_path):
     user turn), so this is the test that keeps the dg_ CTE chain honest."""
     import duckdb
 
-    from ocr_spark.pipeline.curate_convs import (conv_curate_funnel,
-                                                 conv_curate_sql)
+    from ocr_spark.operators.curation import (conv_curate_funnel,
+                                              conv_curate_sql)
 
     texts = {i: f"turn body {i} " + " ".join(f"tok{i}w{j}" for j in range(20))
              for i in range(100)}

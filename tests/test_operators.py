@@ -136,6 +136,7 @@ def test_lsh_degenerate_bucket_bounded_fanout(spark):
     must NOT explode O(n²) pairs: above MAX_LSH_BUCKET the star pattern
     emits exactly n-1 pairs per band, preserving cluster connectivity
     with bounded fan-out. A small bucket still emits all pairs."""
+    from ocr_spark.functions.minhash import N_BANDS
     from ocr_spark.operators import corpus as C
 
     rows = ([(i, "the same boilerplate text repeated again and again here")
@@ -154,7 +155,7 @@ def test_lsh_degenerate_bucket_bounded_fanout(spark):
     # star: every member pairs with doc 0 only -> n-1 pairs, all bands agree
     assert len(degenerate) == 199
     assert all(p.doc_a == 0 for p in degenerate)
-    assert all(p.n_band_collisions == C.N_BANDS for p in degenerate)
+    assert all(p.n_band_collisions == N_BANDS for p in degenerate)
 
 
 def test_ivf_deterministic_under_partitioning(spark, tmp_path):
@@ -493,9 +494,9 @@ def test_lsh_topk_recall_and_lift(spark):
 def test_conv_neardup_recovers_planted_duplicate_conversations(spark):
     """Conversation-grain near-dup must pair conversations whose ASSEMBLED
     text is a light mutation of another's, and not pair unrelated ones."""
-    from ocr_spark.operators.corpus import (_lsh_candidate_pairs,
-                                            _minhash_bands,
-                                            _minhash_sig_stage)
+    from ocr_spark.functions.minhash import (lsh_candidate_pairs,
+                                             minhash_bands,
+                                             minhash_sig_stage)
     from pyspark.sql import functions as F
 
     base_turns = [f"turn {i}: the quick brown fox jumps over the lazy dog "
@@ -521,10 +522,10 @@ def test_conv_neardup_recovers_planted_duplicate_conversations(spark):
                             "conv_id")
     ids = {r.doc_id: r.conv_id for r in docs.select("doc_id", "conv_id").collect()}
     sigs = docs.select("doc_id", "text").mapInPandas(
-        _minhash_sig_stage(), "doc_id long, sig array<long>")
+        minhash_sig_stage(), "doc_id long, sig array<long>")
     pairs = {(ids[p.doc_a], ids[p.doc_b]) if ids[p.doc_a] < ids[p.doc_b]
              else (ids[p.doc_b], ids[p.doc_a])
-             for p in _lsh_candidate_pairs(_minhash_bands(sigs)).collect()}
+             for p in lsh_candidate_pairs(minhash_bands(sigs)).collect()}
     assert ("conv-A", "conv-B") in pairs, "near-dup conversations missed"
     assert not any("conv-C" in p for p in pairs), "unrelated conv paired"
 
@@ -657,7 +658,8 @@ def test_lsh_candidate_pairs_never_collects_degenerate_bucket(spark):
     with exact star output."""
     from pyspark.sql import functions as F
 
-    from ocr_spark.operators.corpus import MAX_LSH_BUCKET, _lsh_candidate_pairs
+    from ocr_spark.functions.minhash import (MAX_LSH_BUCKET,
+                                             lsh_candidate_pairs)
 
     n = 100_000
     big = spark.range(n).select(
@@ -665,7 +667,7 @@ def test_lsh_candidate_pairs_never_collects_degenerate_bucket(spark):
         F.lit(111).cast("long").alias("band_hash"))
     small = spark.createDataFrame(
         [(5, 1, 222), (9, 1, 222)], "doc_id long, band int, band_hash long")
-    pairs = _lsh_candidate_pairs(big.unionByName(small))
+    pairs = lsh_candidate_pairs(big.unionByName(small))
 
     plan = pairs._jdf.queryExecution().optimizedPlan().toString()
     assert "collect_list" in plan
@@ -761,10 +763,10 @@ def test_minhash_verified_prunes_band_collisions(spark, tmp_path):
     true near-dup pair. Both pairs provably collide in a band first —
     the test asserts the candidate stage saw them, so the pruning is the
     verifier's doing, not luck."""
-    from ocr_spark.operators.corpus import (_lsh_candidate_pairs,
-                                            _minhash_bands,
-                                            _minhash_sig_stage,
-                                            dd_minhash_verified)
+    from ocr_spark.functions.minhash import (lsh_candidate_pairs,
+                                             minhash_bands,
+                                             minhash_sig_stage)
+    from ocr_spark.operators.corpus import dd_minhash_verified
 
     base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     tail = ("kilo lima mike november oscar papa quebec romeo sierra tango "
@@ -776,9 +778,9 @@ def test_minhash_verified_prunes_band_collisions(spark, tmp_path):
     sf = str(tmp_path / "sf")
     df.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
 
-    sigs = df.mapInPandas(_minhash_sig_stage(), "doc_id long, sig array<long>")
+    sigs = df.mapInPandas(minhash_sig_stage(), "doc_id long, sig array<long>")
     cand = {(r.doc_a, r.doc_b)
-            for r in _lsh_candidate_pairs(_minhash_bands(sigs)).collect()}
+            for r in lsh_candidate_pairs(minhash_bands(sigs)).collect()}
     assert {(1, 2), (10, 11)} <= cand
 
     rows = dd_minhash_verified(spark, sf).collect()

@@ -26,11 +26,11 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from ocr_spark.functions.minhash import (MAX_LSH_BUCKET, MINHASH_A,
+                                         MINHASH_B, MINHASH_P, N_MINHASH)
 from ocr_spark.operators.corpus import (DD_MINHASH_SQL, DD_SIMHASH_SQL,
-                                        MAX_LSH_BUCKET, MINHASH_A, MINHASH_B,
-                                        MINHASH_P, MM_WINNOW_SQL, N_MINHASH,
-                                        SIMHASH_MAX_HAMMING, WINNOW_K,
-                                        WINNOW_W)
+                                        MM_WINNOW_SQL, SIMHASH_MAX_HAMMING,
+                                        WINNOW_K, WINNOW_W)
 
 _WORD = st.text(
     alphabet=("abcdefghijklmnopqrstuvwxyz"
@@ -70,8 +70,8 @@ def test_winnow_sql_matches_python(texts):
 
 def _py_minhash_pairs(texts):
     """Pure-Python replay of the MinHash-LSH candidate pipeline (the
-    same arithmetic as corpus._minhash_sig_stage + _minhash_bands +
-    _lsh_candidate_pairs, without numpy/Spark)."""
+    same arithmetic as functions.minhash.minhash_sig_stage + minhash_bands +
+    lsh_candidate_pairs, without numpy/Spark)."""
     sigs = {}
     for doc_id, text in enumerate(texts):
         words = " ".join((text or "").lower().split()).split(" ")

@@ -317,13 +317,13 @@ def test_pack_two_level_scan_matches_naive_window(spark):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    from ocr_spark.operators.quality import (PACK_SEQ_LEN, _TOKENS,
-                                             pack_placement_from)
+    from ocr_spark.functions.text import TOKENS_EXPR
+    from ocr_spark.operators.quality import PACK_SEQ_LEN, pack_placement_from
 
     def naive(docs):
         d = docs.selectExpr(
             "doc_id", "lang", "source",
-            f"CAST(size({_TOKENS}) AS BIGINT) AS n_tokens_b")
+            f"CAST(size({TOKENS_EXPR}) AS BIGINT) AS n_tokens_b")
         w = (W.partitionBy("lang", "source").orderBy("doc_id")
              .rowsBetween(W.unboundedPreceding, W.currentRow))
         return (d.withColumn("tok_start",

@@ -529,11 +529,11 @@ def test_loss_mass_agrees_with_chat_pack_masks(spark):
     """The loss-mass report and the chat-pack loss masks must count the
     SAME units: per conversation, asst_tokens == the sum of n_tokens on
     loss=1 turns in chat_pack_placement, and n_tokens == the total."""
-    from ocr_spark.operators.extraction import (_agent_transcripts,
-                                                conv_loss_mass)
+    from ocr_spark.operators.extraction import conv_loss_mass
     from ocr_spark.operators.quality import chat_pack_placement
+    from ocr_spark.sources.synthetic import agent_transcripts
     placement = chat_pack_placement(
-        _agent_transcripts(spark, SF_DIR, conv_mod=25)).collect()
+        agent_transcripts(spark, SF_DIR, conv_mod=25)).collect()
     want_total = Counter()
     want_loss = Counter()
     for r in placement:

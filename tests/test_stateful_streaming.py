@@ -321,8 +321,8 @@ def test_streaming_refusal_matches_batch_scan(spark, tmp_path):
     emitted row per conversation must equal the batch operator's."""
     import os
 
-    from ocr_spark.operators.extraction import (_agent_transcripts,
-                                                conv_refusal_scan)
+    from ocr_spark.operators.extraction import conv_refusal_scan
+    from ocr_spark.sources.synthetic import agent_transcripts
     from ocr_spark.streaming.stateful import streaming_conv_refusal
 
     d = str(tmp_path / "docs")
@@ -338,7 +338,7 @@ def test_streaming_refusal_matches_batch_scan(spark, tmp_path):
     assert any(v[2] > 0 for v in want.values()), \
         "fixture must reach the refusal class"
 
-    turns = _agent_transcripts(spark, d).collect()
+    turns = agent_transcripts(spark, d).collect()
     inp = str(tmp_path / "in")
     schema_str = ("conv_id string, turn_idx int, role string, "
                   "text string, tool string, ts timestamp")
@@ -366,8 +366,8 @@ def test_streaming_degenerate_matches_batch_scan(spark, tmp_path):
     (highest n_checked) must equal the batch operator's."""
     import os
 
-    from ocr_spark.operators.extraction import (_agent_transcripts,
-                                                conv_degenerate_scan)
+    from ocr_spark.operators.extraction import conv_degenerate_scan
+    from ocr_spark.sources.synthetic import agent_transcripts
     from ocr_spark.streaming.stateful import streaming_conv_degenerate
 
     d = str(tmp_path / "docs")
@@ -398,7 +398,7 @@ def test_streaming_degenerate_matches_batch_scan(spark, tmp_path):
     assert any(v[2] == 0 for v in want.values()), \
         "fixture must include clean checked conversations"
 
-    turns = _agent_transcripts(spark, d).collect()
+    turns = agent_transcripts(spark, d).collect()
     inp = str(tmp_path / "in")
     schema_str = ("conv_id string, turn_idx int, role string, "
                   "text string, tool string, ts timestamp")
@@ -424,8 +424,8 @@ def test_streaming_lang_mix_matches_batch_scan(spark, tmp_path):
     rows at ANY micro-batch split (dominant-language tie order included)."""
     import os
 
-    from ocr_spark.operators.extraction import (_agent_transcripts,
-                                                conv_lang_mix)
+    from ocr_spark.operators.extraction import conv_lang_mix
+    from ocr_spark.sources.synthetic import agent_transcripts
     from ocr_spark.streaming.stateful import streaming_conv_lang_mix
 
     d = str(tmp_path / "docs")
@@ -443,7 +443,7 @@ def test_streaming_lang_mix_matches_batch_scan(spark, tmp_path):
     assert any(v[2] >= 2 for v in want.values()), \
         "fixture must include multilingual conversations"
 
-    turns = _agent_transcripts(spark, d).collect()
+    turns = agent_transcripts(spark, d).collect()
     inp = str(tmp_path / "in")
     schema_str = ("conv_id string, turn_idx int, role string, "
                   "text string, tool string, ts timestamp")

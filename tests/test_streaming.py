@@ -73,7 +73,8 @@ def test_stream_malformed_rows_survive_extraction(spark, tmp_path):
     quarantine (test_pipeline's malformed-rows case): a null conv_id or
     turn_idx must not kill the Python task — such rows land at conv ''
     / turn -1 and rows in == rows out holds."""
-    from ocr_spark.streaming import TRANSCRIPT_SCHEMA, run_stream_extract
+    from ocr_spark.sources.synthetic import TRANSCRIPT_SCHEMA
+    from ocr_spark.streaming import run_stream_extract
 
     rows = [
         ("c1", 1, "tool", None, "markdown", None),   # null text
