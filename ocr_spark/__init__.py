@@ -16,12 +16,16 @@ Layout:
              contract); ALL_QUERIES is assembled in operators/__init__ only
   pipeline/  the Spark extraction job (mapInPandas stages, salting,
              checkpoints) and the artifact pipelines built on operators
-  streaming/ Structured Streaming variant of the extraction job
+  streaming/ checkpointed AvailableNow extraction and gap sessionization
+             (stream.py)
+  plans/     physical-plan audit helpers the plan tests assert with
 
 Imports are one-way (tests/test_layering.py): kernels/, functions/ and
 sources/ import nothing from operators/, pipeline/ or streaming/;
-pipeline/, streaming/ and jobs/ use only public operator names; and the
-query layer reaches pipeline/ only inside a query's body, never at load.
+streaming/ imports nothing from operators/; pipeline/ and jobs/ use only
+public operator names; and the query layer reaches pipeline/ only inside
+a query's body, never at load. Every top-level def is reached from
+non-test code or kept on purpose with its reason (same test file).
 """
 
 __version__ = "0.1.0"

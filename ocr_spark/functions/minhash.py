@@ -90,8 +90,8 @@ def minhash_sig_stage(emit_shingles: bool = False):
 
 def minhash_bands(sigs: DataFrame) -> DataFrame:
     """Explode K-value signatures into (doc_id, band, band_hash) rows —
-    shared by the batch candidate generator and the streaming near-dedup
-    operator (streaming/stateful.py). The band hash is md5 over the
+    shared by every batch candidate generator and the persisted dedup
+    index (pipeline/dedup_index.py). The band hash is md5 over the
     comma-joined band values folded to a signed long (compact 8-byte
     shuffle key at 100 TB, vs a 32-char hex string), engine-agnostic so
     the DuckDB oracle reproduces the buckets exactly."""

@@ -1,7 +1,6 @@
-"""Token expressions and marker lists shared by the batch operators, the
-curation pipelines and their streaming twins. Each is spelled once so the
-Spark side, the generated DuckDB SQL and the Python state functions read
-the same definition."""
+"""Token expressions and marker lists shared by the batch operators and
+the curation pipelines. Each is spelled once so the Spark side and the
+generated DuckDB SQL read the same definition."""
 
 # lowercase + split on the explicit Java-\s class: Spark and DuckDB
 # disagree on \x0B under a bare \s, so every whitespace tokenizer in an

@@ -1,11 +1,12 @@
-"""Header→field mapping and currency detection.
+"""Header→field mapping.
 
-Replicates /root/reference/src/Parsers/Traits/SmartFieldMapping.php:
+Replicates SmartFieldMapping.php:
 - field patterns in priority order (:18-62)
 - smartMapColumn exact pass (:81-102), fuzzyMatchColumn (:107-129)
 - mapHeaderRow two-pass mapping with positional numeric fallback (:137-183)
-- inferColumnType value-distribution inference (:192-241)
-- currency patterns + extractCurrency (:67-73, :249-265)
+
+inferColumnType (:192-241, SURVEY T6) is excluded by design: no reference
+parser calls it.
 
 Pattern-iteration order is load-bearing: e.g. the header 'Amount' matches the
 *qty* pattern list before 'total' is ever tried, so an 'Amount' column only
@@ -18,7 +19,7 @@ from __future__ import annotations
 import re
 from functools import lru_cache
 
-from .php import compile_php, php_float, php_strlen, php_trim
+from .php import compile_php, php_strlen, php_trim
 
 # field → list of compiled patterns, in priority order (SmartFieldMapping.php:18-62)
 FIELD_PATTERNS: dict[str, list[re.Pattern]] = {
@@ -153,35 +154,3 @@ def _php_is_numeric_loose(s: str) -> bool:
     from .php import php_is_numeric
     return php_is_numeric(s)
 
-
-def infer_column_type(rows: list[list], col_index: int) -> str | None:
-    """SmartFieldMapping::inferColumnType (:192-241)."""
-    values = [php_trim(str(r[col_index])) for r in rows if col_index < len(r)]
-    if not values:
-        return None
-
-    numeric_count = 0
-    has_decimals = False
-    max_value = 0.0
-    total_chars = 0
-    for v in values:
-        clean = re.sub(r"[,\s]", "", v, flags=re.ASCII)
-        if _php_is_numeric_loose(clean):
-            numeric_count += 1
-            num = php_float(clean)
-            if num > max_value:
-                max_value = num
-            if "." in clean:
-                has_decimals = True
-        total_chars += len(v)
-
-    numeric_ratio = numeric_count / len(values)
-    if numeric_ratio > 0.8:
-        if not has_decimals and max_value < 1000:
-            return "qty"
-        if has_decimals or max_value > 100:
-            return "total"
-    avg_chars = total_chars / len(values)
-    if avg_chars > 10 and numeric_ratio < 0.2:
-        return "name"
-    return None

@@ -7,7 +7,7 @@ fold as the rest of the repo) and score with integer weights learned by
 an averaged perceptron. Scoring is ONE map-only projection — at 100 TB
 the corpus side never shuffles, never collects, and the whole gate is a
 column expression, so it composes into the curation funnel's single
-drop_reason plan and runs unchanged on a stream.
+drop_reason plan.
 
 Engine-exactness: weights and bias are INTEGERS (the averaged
 perceptron's unnormalized average Σ c·Δ is integer by construction), so
@@ -29,11 +29,10 @@ no data dependency, zero import-time cost in executor workers;
 points at its labeled sample (pipeline/classifier.py is the
 persisted-artifact form).
 
-The three scoring surfaces — the oracle-paired query here, the
-persisted artifact's `score_with_model`, and the streaming gate — all
-build their projections from `score_frame` / `with_classifier_score`
-below, so tokenization and threshold semantics live in exactly one
-place.
+Both scoring surfaces — the oracle-paired query here and the persisted
+artifact's `score_with_model` — build their projection from
+`score_frame` below, so tokenization and threshold semantics live in
+exactly one place.
 """
 
 from __future__ import annotations
@@ -332,22 +331,8 @@ def classifier_score_sql(tok_expr: str, weights: list[int] | None = None,
 
 
 # ---------------------------------------------------------------------------
-# Shared scoring projections (the ONE place tokenization + threshold live)
+# Shared scoring projection (the ONE place tokenization + threshold live)
 # ---------------------------------------------------------------------------
-
-def with_classifier_score(docs: DataFrame, text_col: str = "text",
-                          weights: list[int] | None = None,
-                          bias: int | None = None,
-                          div_w: int | None = None) -> DataFrame:
-    """All input columns + `cls_score` (the integer model score of
-    text_col) — the stateless map-only building block the streaming
-    gate filters on."""
-    expr = classifier_score_expr("_t", weights, bias, div_w)
-    return (docs.selectExpr(
-                "*", f"split(lower({text_col}), '{_WS_SPARK}') AS _t")
-            .selectExpr("*", f"{expr} AS cls_score")
-            .drop("_t"))
-
 
 def score_frame(docs: DataFrame, weights: list[int] | None = None,
                 bias: int | None = None, div_w: int | None = None,

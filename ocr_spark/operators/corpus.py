@@ -758,7 +758,7 @@ INCR_BATCH_RESIDUE = 7  # doc_id % 10 == 7 plays the "new crawl batch"
 def incr_batch_frame(docs: DataFrame, replay_suffix: str = "") -> DataFrame:
     """The deterministic "new crawl batch" shared by the incremental
     dedup family (dd_incremental / dd_incremental_neardup /
-    dd_bloom_check and the streaming bloom twin): doc_id % 10 == 7 rows
+    dd_bloom_check): doc_id % 10 == 7 rows
     form the batch; half of them (doc_id % 20 == 7) replay doc_id-7's
     text plus `replay_suffix` (planted dups / near-dups), the rest get a
     unique marker (guaranteed new) — so every verdict branch is
@@ -842,8 +842,8 @@ BLOOM_EXTRA_BITS = 3  # m = 2^(bit_length(n)+3)  →  8n < m ≤ 16n bits
 
 def content_md5(c):
     """Whitespace-normalized lowercase content hash (md5 hex) — the
-    exact-dedup key shared by the incremental family and the streaming
-    bloom twin."""
+    exact-dedup key shared by the incremental family and the Bloom
+    filter."""
     return F.md5(F.regexp_replace(F.lower(c), r"[ \t\n\x0b\f\r]+", " "))
 
 
@@ -864,8 +864,8 @@ def bloom_pos_explode():
 def bloom_probe_frame(docs: DataFrame, m: int) -> DataFrame:
     """(doc_id, pos) probe positions of a documents frame against an
     m-bit filter — THE shared probe projection of the Bloom artifact's
-    build, batch-check, and streaming paths (one builder, so a preimage
-    change cannot drift batch vs stream). NULL text is coalesced to ''
+    build, batch-check and append paths (one builder, so a preimage
+    change cannot drift between them). NULL text is coalesced to ''
     (the sim_bm25 discipline): hashing NULL would probe NULL positions
     that join nothing and break the artifact's no-false-negatives
     contract."""
@@ -880,7 +880,7 @@ def bloom_probe_frame(docs: DataFrame, m: int) -> DataFrame:
 def bloom_bits_build(corpus_docs: DataFrame,
                      extra_bits: int = BLOOM_EXTRA_BITS):
     """Materialize the Bloom filter of a corpus's content hashes for
-    serving (the streaming twin joins a stream against it): returns
+    serving: returns
     (bits DataFrame of distinct positions, m, n_keys). m is fixed
     driver-side from ONE count (n_keys reuses it — no second input
     scan, and the manifest's sizing claim can never disagree with its

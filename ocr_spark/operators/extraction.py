@@ -1191,8 +1191,8 @@ def conv_refusal_scan(spark, sf_dir):
     ).otherwise(F.col("text"))
     # NULL-text assistant turns: contains() on NULL yields NULL, and a
     # conversation whose assistant turns are ALL NULL would report NULL
-    # counts while the oracle's CASE and the streaming twin report 0 —
-    # coalesce to '' so all three surfaces agree (advice r4).
+    # counts while the oracle's CASE reports 0 — coalesce to '' so both
+    # surfaces agree.
     low = F.lower(F.coalesce(turn_text, F.lit("")))
     is_refusal = F.lit(False)
     for m in REFUSAL_MARKS:

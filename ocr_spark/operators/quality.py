@@ -88,7 +88,7 @@ def with_repetition_signals(df, tcol: str = "t"):
     twin computes the same numbers but shuffles ~every distinct
     (doc, gram) pair in the corpus — at 100 TB that is a full-corpus
     exchange for a doc-local answer. The keyed form survives as the
-    differential reference (tests/test_streaming_quality.py rebuilds it
+    differential reference (tests/test_quality_ops.py rebuilds it
     inline; the DuckDB oracles replay it in SQL), so the two
     implementations keep checking each other."""
     few = f"size({tcol}) < 2"
@@ -545,9 +545,7 @@ BLOCK_PHRASES = ("click here", "lorem ipsum", "subscribe now")
 
 def blocklist_reason_col(text_col):
     """Block-reason Column for any text Column: the FIRST matching
-    BLOCK_PHRASES entry in list order, else 'kept'. Pure expression —
-    shared by the batch query and the streaming gate
-    (streaming/quality.blocklist_gate_stream)."""
+    BLOCK_PHRASES entry in list order, else 'kept'. Pure expression."""
     low = F.lower(F.coalesce(text_col, F.lit("")))
     reason = F.lit("kept")
     for phrase in reversed(BLOCK_PHRASES):  # earlier phrases win
@@ -983,31 +981,6 @@ def smp_chat_pack(spark, sf_dir):
             .orderBy("tok_start"))
 
 
-def chat_pack_exploded(placement: DataFrame,
-                       extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """One row per (turn, spanned training sequence) with the overlap
-    accounting (`tok_in_seq` tokens of the turn inside the sequence;
-    `loss_in_seq` of them unmasked) — the SHARED fan-out of
-    smp_chat_pack_seqs and the shard exporter
-    (pipeline/shards.write_packed_chat_shards), so a fix to the overlap
-    arithmetic lands in exactly one place. Bounded: a turn adds
-    <= n_tokens/PACK_SEQ_LEN + 1 rows."""
-    L = PACK_SEQ_LEN
-    exploded = placement.select(
-        *extra_cols, "conv_id", "tok_start", "n_tokens", "loss",
-        F.explode(F.sequence(
-            F.col("first_seq"),
-            F.col("first_seq") + F.col("n_seqs") - 1)).alias("seq_id"))
-    overlap = (F.least(F.col("tok_start") + F.col("n_tokens"),
-                       (F.col("seq_id") + 1) * L)
-               - F.greatest(F.col("tok_start"), F.col("seq_id") * L))
-    return (exploded
-            .withColumn("tok_in_seq", overlap)
-            .withColumn("loss_in_seq",
-                        F.when(F.col("loss") == 1, F.col("tok_in_seq"))
-                        .otherwise(F.lit(0))))
-
-
 def smp_chat_pack_seqs(spark, sf_dir):
     """The trainer's view of the chat pack: one row PER TRAINING
     SEQUENCE with the loss-mask and attention-mask accounting — how
@@ -1021,8 +994,20 @@ def smp_chat_pack_seqs(spark, sf_dir):
     p = chat_pack_placement(agent_transcripts(spark, sf_dir,
                                               conv_mod=25))
     L = PACK_SEQ_LEN
-    exploded = chat_pack_exploded(p, extra_cols=("conv_start",
-                                                 "first_seq"))
+    spanned = p.select(
+        "conv_start", "first_seq", "conv_id", "tok_start", "n_tokens",
+        "loss",
+        F.explode(F.sequence(
+            F.col("first_seq"),
+            F.col("first_seq") + F.col("n_seqs") - 1)).alias("seq_id"))
+    overlap = (F.least(F.col("tok_start") + F.col("n_tokens"),
+                       (F.col("seq_id") + 1) * L)
+               - F.greatest(F.col("tok_start"), F.col("seq_id") * L))
+    exploded = (spanned
+                .withColumn("tok_in_seq", overlap)
+                .withColumn("loss_in_seq",
+                            F.when(F.col("loss") == 1, F.col("tok_in_seq"))
+                            .otherwise(F.lit(0))))
     is_start = F.col("tok_start") == F.col("conv_start")
     return (exploded
             .groupBy("seq_id")
@@ -2098,20 +2083,6 @@ def epoch_copies_column():
             + (F.col("h").cast("double") < thr).cast("long"))
 
 
-def epoch_replicate(docs: DataFrame) -> DataFrame:
-    """The materializing form: one row per (doc, epoch) with an `epoch`
-    index — what the training-shard writer consumes. Map-only explode;
-    guarded so copies=0 emits nothing (Spark's sequence(1, 0) would
-    DESCEND and emit [1, 0])."""
-    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":epoch")))
-    return (docs.withColumn("h", h)
-            .withColumn("copies", epoch_copies_column())
-            .where(F.col("copies") >= 1)
-            .withColumn("epoch", F.explode(
-                F.sequence(F.lit(1).cast("long"), F.col("copies"))))
-            .drop("h", "copies"))
-
-
 def smp_epoch_mix(spark, sf_dir):
     """Epoch up-sampling audit: per-source doc/copy/token totals under
     the configured EPOCH_RATES — the replication plan a pretraining run
@@ -2122,9 +2093,7 @@ def smp_epoch_mix(spark, sf_dir):
 
     Scale shape: one map-only projection (rate is a CASE over a
     broadcast-sized config, not a join) + one tiny groupBy(source); the
-    audit never explodes the copies — `epoch_replicate` is the
-    materializing twin and its row count equals sum(n_copies) here
-    (pinned in tests)."""
+    audit never explodes the copies."""
     docs = _docs(spark, sf_dir)
     h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":epoch")))
     rate = _epoch_rate_col()
@@ -2293,9 +2262,7 @@ def txt_chunk_windows(spark, sf_dir):
 
 def chunk_windows_from(docs: DataFrame) -> DataFrame:
     """The chunking projection itself, unordered — a stateless map-only
-    plan (split → explode → slice), so the SAME code chunks a streaming
-    documents frame under any trigger (streaming/quality re-exports it
-    as the stream twin)."""
+    plan (split → explode → slice)."""
     w, s = CHUNK_WINDOW, CHUNK_STRIDE
     return (docs.selectExpr(
         "doc_id", "split(coalesce(text, ''), '[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+') AS tk")
@@ -2855,14 +2822,11 @@ _ENT_STEP = (f"(a, x) -> IF(x <=> a.prev, "
              f"'n', a.n, 'acc', {_ENT_FLUSH}))")
 
 
-ENT_GATE_MIN_BPT_BP = 2000  # stream gate: drop docs under 0.2 bits/token
-
-
 def with_entropy_bits(df: DataFrame) -> DataFrame:
     """Append (n_tokens, ent_bits, bpt_bp) to a frame with a `text`
-    column — the map-only integer-bits entropy fold shared by
-    txt_entropy and the streaming low-entropy gate. Rows whose token
-    array is empty/NULL are dropped (entropy undefined)."""
+    column — the map-only integer-bits entropy fold of txt_entropy.
+    Rows whose token array is empty/NULL are dropped (entropy
+    undefined)."""
     fold = (f"aggregate(array_sort(t), {_ENT_ZERO}, {_ENT_STEP}, "
             f"a -> {_ENT_FLUSH})")
     return (df.selectExpr("*", f"filter({TOKENS_EXPR}, x -> x <> '') AS t")

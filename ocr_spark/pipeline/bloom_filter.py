@@ -23,8 +23,6 @@ dedup, tokenizer, classifier, compaction, corpus-stats):
   verdict (all k set). No false negatives ever; false-positive rate
   grows with fill — the manifest's fill_bp is the saturation gauge that
   tells ops when to rebuild wider.
-- check_stream: the same probe as a stateless stream-static join
-  (streaming/quality.bloom_check_stream), at (doc_id, pos, hit) grain.
 - append_batch: OR the batch's positions into the bitset (union +
   distinct — set-monotone, so a replayed append is semantically a no-op
   even without its idempotence tag; the tag still skips the rewrite and
@@ -109,18 +107,6 @@ def check_batch(spark: SparkSession, bloom_dir: str,
             .select("doc_id", "n_hits",
                     (F.col("n_hits") == BLOOM_K).alias("bloom_dup"))
             .orderBy("doc_id"))
-
-
-def check_stream(spark: SparkSession, bloom_dir: str,
-                 docs_stream: DataFrame) -> DataFrame:
-    """Streaming probe against the committed filter — the stateless
-    stream-static join (streaming/quality.bloom_check_stream), at
-    (doc_id, pos, hit) grain; per-doc roll-up is the consumer's
-    aggregation. Batch equivalence pinned in tests/test_bloom_filter.py."""
-    from ..streaming.quality import bloom_check_stream
-    manifest = read_manifest(bloom_dir)
-    bits = spark.read.parquet(os.path.join(bloom_dir, _DATA))
-    return bloom_check_stream(docs_stream, bits, manifest["m"])
 
 
 def append_batch(spark: SparkSession, bloom_dir: str,

@@ -12,9 +12,7 @@ expression builder the oracle-paired query uses
 artifact score is engine-exact by the same argument).
 
 Scoring is the 100 TB side: the weights ride into one foldable literal
-array (a few KB), the corpus never shuffles, and the identical
-expression runs on a stream (streaming/quality.classifier_gate_stream
-is the shipped-constants instance of the same plan). Commits follow
+array (a few KB) and the corpus never shuffles. Commits follow
 pipeline/artifact.py's atomicity contract.
 """
 from __future__ import annotations

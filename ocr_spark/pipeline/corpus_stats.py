@@ -191,33 +191,3 @@ def drift_check(spark: SparkSession, stats_dir: str,
                     .otherwise(F.lit("both")).alias("status"))
             .orderBy("source"))
 
-
-def rarity_check(spark: SparkSession, stats_dir: str,
-                 docs: DataFrame) -> DataFrame:
-    """Per-document rarity against the committed snapshot: how much of
-    the source's snapshot mass sits in this doc's length bucket
-    (snapshot_share_bp; NULL when the (source, bucket) cell — or the
-    whole source — is unseen). A doc landing in a near-empty cell of
-    its source's historical profile is the per-row face of drift: the
-    triage read for 'this crawl suddenly emits 10-token pages'.
-
-    Works identically on a STATIC batch and on a STREAM: the profile is
-    a stream-static LEFT join (the static side is ~|sources| x 40 rows,
-    re-read per micro-batch, no state store), and the projection is
-    stateless. Batch/stream equivalence is pinned in
-    tests/test_corpus_stats.py."""
-    if read_manifest(stats_dir) is None:
-        raise FileNotFoundError(
-            f"no committed corpus-stats snapshot at {stats_dir} "
-            "(missing manifest — build_stats first)")
-    prof = spark.read.parquet(os.path.join(stats_dir, _DATA))
-    totals = (prof.groupBy("source")
-              .agg(F.sum("n_docs").alias("src_docs")))
-    cells = (prof.join(totals, "source")
-             .select("source", "bucket",
-                     F.expr("n_docs * 10000 DIV src_docs")
-                     .cast("long").alias("snapshot_share_bp")))
-    return (len_bucket_frame(docs)
-            .join(F.broadcast(cells), ["source", "bucket"], "left")
-            .select("doc_id", "source", "bucket", "n_tok",
-                    "snapshot_share_bp"))

@@ -39,15 +39,9 @@ _MANIFEST = "_index_manifest.json"
 _DATA = "band_index"
 
 
-def _bands_of(docs: DataFrame, spread: bool = True) -> DataFrame:
-    # spread_partitions inspects df.rdd, which streaming DataFrames
-    # forbid — the stream path skips it (micro-batch sizing is the
-    # trigger's job)
-    src = docs.select("doc_id", "text")
-    if spread:
-        src = spread_partitions(src)
-    sigs = src.mapInPandas(minhash_sig_stage(),
-                           "doc_id long, sig array<long>")
+def _bands_of(docs: DataFrame) -> DataFrame:
+    sigs = (spread_partitions(docs.select("doc_id", "text"))
+            .mapInPandas(minhash_sig_stage(), "doc_id long, sig array<long>"))
     return minhash_bands(sigs)
 
 
@@ -122,27 +116,6 @@ def check_batch(spark: SparkSession, index_dir: str,
                     (F.col("n_band_hits").isNotNull()).cast("int")
                     .alias("is_dup"))
             .orderBy("doc_id"))
-
-
-def check_stream(spark: SparkSession, index_dir: str,
-                 docs_stream: DataFrame) -> DataFrame:
-    """Streaming incremental dedup: documents ARRIVING on a stream are
-    banded (stateless mapInPandas) and LEFT-joined against the committed
-    STATIC index — the stream-static join shape Structured Streaming
-    executes with the static side re-read per micro-batch, no state
-    store at all. Output grain is (doc_id, band, band_hash, match_id):
-    one append-mode row per band, match_id NULL where the band is novel
-    — per-doc roll-up is the consumer's aggregation (a per-doc groupBy
-    on a stream would drag in watermark state for what is a
-    batch-local fact). Batch equivalence with check_batch is pinned in
-    tests/test_dedup_index.py."""
-    read_manifest(index_dir)
-    index = (spark.read.parquet(os.path.join(index_dir, _DATA))
-             .select("band", "band_hash",
-                     F.col("canonical_id").alias("match_id")))
-    return (_bands_of(docs_stream, spread=False)
-            .join(index, ["band", "band_hash"], "left")
-            .select("doc_id", "band", "band_hash", "match_id"))
 
 
 def append_batch(spark: SparkSession, index_dir: str,

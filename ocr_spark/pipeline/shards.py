@@ -34,8 +34,6 @@ from . import artifact
 
 SHARDS_VERSION = "shards-v1"
 DEFAULT_N_SHARDS = N_TRAIN_SHARDS
-CHAT_SHARDS_VERSION = "chat-shards-v1"
-DEFAULT_SEQS_PER_SHARD = 64
 
 
 def shard_assignment(docs: DataFrame, n_shards: int = DEFAULT_N_SHARDS
@@ -89,75 +87,3 @@ def write_training_shards(spark, docs: DataFrame, out_dir: str,
     artifact.commit(out_dir, manifest)
     return manifest
 
-
-def write_packed_chat_shards(spark, turns: DataFrame, out_dir: str,
-                             seqs_per_shard: int = DEFAULT_SEQS_PER_SHARD
-                             ) -> dict:
-    """Export an SFT chat pack as shard files a trainer's loader reads
-    directly: the chat-pack placement (operators.quality
-    chat_pack_placement — whole conversations laid end to end in
-    md5-bridge order, cut into PACK_SEQ_LEN sequences) exploded to one
-    row per (turn, sequence) overlap and sharded by CONTIGUOUS sequence
-    ranges (`shard = seq_id DIV seqs_per_shard`), so each shard is a
-    gap-free slice of the training stream and data-parallel readers
-    consume disjoint, equally-sized token ranges.
-
-    Per row the loader gets everything sequence assembly needs without
-    re-deriving the plan: the sequence, the turn's span inside it
-    (`seq_offset`/`tok_in_seq`), and the loss flag (assistant spans
-    train; `loss_in_seq` tokens of the overlap are unmasked). A turn
-    straddling a shard boundary appears in both shards by construction
-    (the explode is per overlapped sequence) — readers never need a
-    neighbor shard.
-
-    Scale shape: the placement's two-level scan, one bounded explode
-    (a turn adds <= n_tokens/PACK_SEQ_LEN + 1 rows), ONE hash
-    repartition on shard, per-task sort — no global sort. The manifest
-    carries the token/loss conservation totals so a resumed or audited
-    run can verify the export against the placement with two sums."""
-    from ..operators.quality import (PACK_SEQ_LEN, chat_pack_exploded,
-                                     chat_pack_placement)
-    t0 = time.time()
-    artifact.invalidate(out_dir)
-    L = PACK_SEQ_LEN
-    p = chat_pack_placement(turns)
-    exploded = chat_pack_exploded(p, extra_cols=("turn_idx", "role"))
-    rows = (exploded
-            .withColumn("seq_offset",
-                        F.greatest(F.col("tok_start")
-                                   - F.col("seq_id") * L, F.lit(0)))
-            .withColumn("shard",
-                        F.expr(f"CAST(seq_id DIV {seqs_per_shard}"
-                               " AS INT)")))
-    data_dir = os.path.join(out_dir, "chat_shards")
-    (rows
-     .repartition("shard")
-     .sortWithinPartitions("shard", "seq_id", "tok_start")
-     .write.mode("overwrite").partitionBy("shard").parquet(data_dir))
-    stats = (spark.read.parquet(data_dir)
-             .groupBy("shard")
-             .agg(F.count("*").alias("n_rows"),
-                  F.count_distinct("seq_id").alias("n_seqs"),
-                  F.sum("tok_in_seq").alias("n_tokens"),
-                  F.sum("loss_in_seq").alias("n_loss_tokens"))
-             .orderBy("shard")
-             .collect())  # bounded: one row per shard
-    manifest = {
-        "version": CHAT_SHARDS_VERSION,
-        "seq_len": L,
-        "seqs_per_shard": seqs_per_shard,
-        "n_shards": len(stats),
-        "rows_out": int(sum(r.n_rows for r in stats)),
-        "n_seqs": int(sum(r.n_seqs for r in stats)),
-        "n_tokens": int(sum(r.n_tokens for r in stats)),
-        "n_loss_tokens": int(sum(r.n_loss_tokens for r in stats)),
-        "shards": {int(r.shard): {"n_rows": int(r.n_rows),
-                                  "n_seqs": int(r.n_seqs),
-                                  "n_tokens": int(r.n_tokens),
-                                  "n_loss_tokens": int(r.n_loss_tokens)}
-                   for r in stats},
-        "output": data_dir,
-        "wall_ms": int((time.time() - t0) * 1000),
-    }
-    artifact.commit(out_dir, manifest)
-    return manifest

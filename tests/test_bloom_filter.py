@@ -1,13 +1,11 @@
 """Persisted Bloom-filter artifact: build/check/append contract,
 no-false-negatives guarantee, frozen modulus, fill gauge,
-manifest-after-data atomicity, swap crash-safety, and the streaming
-probe's batch equivalence."""
+manifest-after-data atomicity and swap crash-safety."""
 
 import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 # no testdata skipif: every test here builds its own frames via
 # tmp_path — the artifact's crash contracts must run on any machine
@@ -173,27 +171,3 @@ def test_incompatible_manifest_rejected(spark, tmp_path):
         json.dump(m, f)
     with pytest.raises(ValueError):
         read_manifest(d)
-
-
-def test_check_stream_matches_batch_verdicts(spark, tmp_path):
-    from ocr_spark.operators.corpus import BLOOM_K
-    from ocr_spark.pipeline.bloom_filter import (build_bloom_filter,
-                                                 check_batch, check_stream)
-    d = str(tmp_path / "bloom")
-    build_bloom_filter(spark, _docs_df(spark, CORPUS), d)
-    src = str(tmp_path / "in")
-    _docs_df(spark, BATCH).write.parquet(src)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = (check_stream(spark, d, stream)
-         .writeStream.format("parquet")
-         .option("path", out).option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rolled = {r.doc_id: r.n for r in
-              (spark.read.parquet(out).groupBy("doc_id")
-               .agg(F.sum("hit").cast("long").alias("n")).collect())}
-    want = {r.doc_id: r.n_hits for r in
-            check_batch(spark, d, _docs_df(spark, BATCH)).collect()}
-    assert rolled == want
-    assert rolled[11] == BLOOM_K

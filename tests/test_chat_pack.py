@@ -1,6 +1,6 @@
 """SFT-grain chat packing: token/mask conservation, the stream-tiling
-invariants, the distributed-scan-vs-naive-window pin at the conversation
-grain, and the shards.py consumer export. The sf0.01 oracle compare for
+invariants and the distributed-scan-vs-naive-window pin at the
+conversation grain. The sf0.01 oracle compare for
 smp_chat_pack / smp_chat_pack_seqs runs via the ALL_QUERIES parametrize
 in test_operators.py."""
 
@@ -110,51 +110,3 @@ def test_chat_pack_conv_scan_matches_naive_window(spark):
            for r in _placement(spark)
            .select("conv_id", "conv_start").distinct().collect()}
     assert got == naive
-
-
-def test_write_packed_chat_shards_export(spark, tmp_path):
-    """The shards.py consumer path: contiguous sequence-range shards,
-    manifest conservation totals equal to the placement's, boundary
-    turns duplicated into both shards, per-shard rows ordered by
-    (seq_id, tok_start)."""
-    from ocr_spark.pipeline.shards import write_packed_chat_shards
-    from ocr_spark.sources.synthetic import agent_transcripts
-
-    turns = agent_transcripts(spark, SF_DIR, conv_mod=25)
-    out = str(tmp_path / "chatpack")
-    m = write_packed_chat_shards(spark, turns, out, seqs_per_shard=8)
-
-    p = _placement(spark).collect()
-    total = sum(r.n_tokens for r in p)
-    loss_total = sum(r.n_tokens for r in p if r.loss == 1)
-    assert m["n_tokens"] == total
-    assert m["n_loss_tokens"] == loss_total
-    assert m["n_seqs"] == (total + m["seq_len"] - 1) // m["seq_len"]
-    assert m["n_shards"] == (m["n_seqs"] + 7) // 8
-
-    rows = spark.read.parquet(m["output"]).collect()
-    # every shard holds only its contiguous seq range, internally sorted
-    by_shard = {}
-    for r in rows:
-        assert r.shard == r.seq_id // 8
-        assert 0 <= r.seq_offset < m["seq_len"]
-        assert 1 <= r.tok_in_seq <= m["seq_len"]
-        by_shard.setdefault(r.shard, []).append(r)
-    for s, grp in by_shard.items():
-        keys = [(r.seq_id, r.tok_start) for r in sorted(
-            grp, key=lambda r: (r.seq_id, r.tok_start))]
-        assert len(set(keys)) == len(keys)
-    # a turn spanning two shards appears in both (duplicated on purpose)
-    spanning = [r for r in p
-                if r.first_seq // 8 != (r.first_seq + r.n_seqs - 1) // 8]
-    if spanning:
-        t0 = spanning[0]
-        copies = [r for r in rows if r.conv_id == t0.conv_id
-                  and r.tok_start == t0.tok_start]
-        assert len({r.shard for r in copies}) >= 2
-    # idempotent overwrite: re-running reproduces identical totals
-    m2 = write_packed_chat_shards(spark, turns, out, seqs_per_shard=8)
-    assert {k: m2[k] for k in ("n_tokens", "n_loss_tokens", "n_seqs",
-                               "rows_out")} == \
-           {k: m[k] for k in ("n_tokens", "n_loss_tokens", "n_seqs",
-                              "rows_out")}

@@ -3,9 +3,9 @@ retrain determinism, out-of-vocab generalization, the three-surface
 differential (Spark expression == DuckDB oracle == Python twin) on
 planted adversarial docs incl. \\x0b whitespace, funnel-stage
 REACHABILITY (a Gopher-passing spam doc must fall to 'classifier', not
-ride through), the planted-corpus funnel oracle, and the streaming
-twin. The sf0.01 oracle compare for txt_classifier_score runs via the
-ALL_QUERIES parametrize in test_operators.py."""
+ride through) and the planted-corpus funnel oracle. The sf0.01 oracle
+compare for txt_classifier_score runs via the ALL_QUERIES parametrize
+in test_operators.py."""
 
 import os
 
@@ -167,49 +167,3 @@ def test_funnel_oracle_on_planted_classifier_corpus(spark, tmp_path):
     assert got == want
     assert dict(got) == {"kept": 2, "exact_dup": 1,
                          "classifier": 1, "quality": 1}
-
-
-def test_classifier_gate_stream_equals_batch_and_streams(spark, tmp_path):
-    """The streaming twin is the identical shipped model: zero
-    exchanges in the plan, its batch application keeps exactly the
-    docs txt_classifier_score predicts positive, and an availableNow
-    stream over a planted (clean + spam) corpus keeps the same set."""
-    from ocr_spark.operators.classifier import score_text
-    from ocr_spark.plans import exchange_count
-    from ocr_spark.streaming.quality import classifier_gate_stream
-
-    batch = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    assert exchange_count(classifier_gate_stream(batch)) == 0
-
-    planted = spark.createDataFrame(
-        [(10_000_001, _spam_perm_doc(), "de"),
-         (10_000_002, " ".join(["viagra"] * 35), "de"),
-         (10_000_003, _OOV_CLEAN, "de")],
-        "doc_id long, text string, lang string")
-    docs = batch.select("doc_id", "text", "lang").unionByName(planted)
-    src = str(tmp_path / "in")
-    docs.repartition(4).write.parquet(src)
-
-    want = {r.doc_id: r.text for r in spark.read.parquet(src).collect()}
-    want_kept = {i for i, t in want.items() if score_text(t or "") > 0}
-    assert 10_000_003 in want_kept
-    assert not {10_000_001, 10_000_002} & want_kept
-
-    # batch application
-    got_batch = {r.doc_id for r in
-                 classifier_gate_stream(spark.read.parquet(src))
-                 .select("doc_id").collect()}
-    assert got_batch == want_kept
-
-    # the same code as a streaming query
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    q = (classifier_gate_stream(stream).select("doc_id", "cls_score")
-         .writeStream.format("parquet")
-         .option("path", out).option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.doc_id: r.cls_score for r in spark.read.parquet(out).collect()}
-    assert set(got) == want_kept
-    for i, s in got.items():
-        assert s == score_text(want[i] or "")

@@ -129,42 +129,6 @@ def test_drift_vanished_source(spark, tmp_path):
     assert rows["shift_src"].n_new == 0
 
 
-def test_rarity_check_batch_and_stream_agree(spark, tmp_path):
-    """rarity_check is stateless + stream-static: replayed over two
-    micro-batch files it must emit exactly the batch rows; unseen
-    (source, bucket) cells report NULL share."""
-    from ocr_spark.pipeline.corpus_stats import build_stats, rarity_check
-    d = str(tmp_path / "stats")
-    build_stats(spark, _docs_df(spark, BASE), d)
-    new_rows = [
-        (500, "word " * 11, "en", "stable_src", 55),       # seen cell
-        (501, "x " * 5000, "en", "stable_src", 10000),     # unseen bucket
-        (502, "fresh", "en", "brand_new_src", 5),          # unseen source
-    ]
-    batch = {r.doc_id: (r.bucket, r.n_tok, r.snapshot_share_bp)
-             for r in rarity_check(spark, d, _docs_df(spark, new_rows))
-             .collect()}
-    assert batch[500][2] is not None and batch[500][2] > 0
-    assert batch[501][2] is None
-    assert batch[502][2] is None
-
-    inp = str(tmp_path / "in")
-    for rows in (new_rows[:1], new_rows[1:]):
-        _docs_df(spark, rows).coalesce(1).write.mode("append").parquet(inp)
-    schema = spark.read.parquet(inp).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(inp))
-    out = str(tmp_path / "out")
-    q = (rarity_check(spark, d, stream)
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.doc_id: (r.bucket, r.n_tok, r.snapshot_share_bp)
-           for r in spark.read.parquet(out).collect()}
-    assert got == batch
-
-
 def test_registry_drift_read_uses_shared_bucket_frame(spark, tmp_path):
     """txt_drift_tvd and the artifact profile the same corpus through
     ONE shared bucket expression — their per-source totals must agree."""

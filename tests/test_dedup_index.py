@@ -138,41 +138,6 @@ def test_append_idempotent_by_batch_tag(spark, tmp_path):
     assert rows and all(r.n_members == 2 for r in rows)   # not 3
 
 
-def test_check_stream_matches_batch_verdicts(spark, tmp_path):
-    """The stream-static join path must yield check_batch's exact
-    verdicts once its per-band rows are rolled up — replayed in two
-    micro-batch files so the static index is re-read per batch."""
-    from ocr_spark.pipeline.dedup_index import (build_dedup_index,
-                                                check_batch, check_stream)
-    idx = str(tmp_path / "idx")
-    build_dedup_index(spark, _docs_df(spark, CORPUS), idx)
-
-    want = {r.doc_id: (r.n_band_hits, r.match_id) for r in
-            check_batch(spark, idx, _docs_df(spark, BATCH)).collect()}
-
-    inp = str(tmp_path / "in")
-    for rows in (BATCH[:2], BATCH[2:]):
-        _docs_df(spark, rows).coalesce(1).write.mode("append").parquet(inp)
-    schema = spark.read.parquet(inp).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(inp))
-    out = str(tmp_path / "out")
-    q = (check_stream(spark, idx, stream)
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = {}
-    for r in spark.read.parquet(out).collect():
-        hits, match = got.get(r.doc_id, (0, None))
-        if r.match_id is not None:
-            hits += 1
-            match = r.match_id if match is None else min(match, r.match_id)
-        got[r.doc_id] = (hits, match)
-    assert got == want
-
-
 def test_swap_crash_window_recovers(spark, tmp_path):
     """Crash INSIDE append's two-rename swap (data renamed away, tmp not
     yet promoted): the next reader rolls the old data back and serves the

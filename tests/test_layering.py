@@ -4,9 +4,13 @@ order.
 Layers, lowest first: kernels/, functions/ and sources/ are shared homes
 and import nothing from the query or engine layers; operators/ is the
 query registry; pipeline/, streaming/ and jobs/ compose public operator
-builders but never reach into the registry's private helpers. The
-registry itself is assembled in operators/__init__.py alone, so its
-order cannot depend on which module a process imports first.
+builders but never reach into the registry's private helpers, and
+streaming/ imports nothing from operators/ at all. The registry itself
+is assembled in operators/__init__.py alone, so its order cannot depend
+on which module a process imports first.
+
+Every top-level def in ocr_spark/ is reached from non-test code, except
+the short list of kept names below, each with its reason.
 """
 
 from __future__ import annotations
@@ -109,6 +113,116 @@ def test_leaf_layers_import_no_upper_layer():
                 found.append(f"{mod} -> {full}")
     assert not found, ("kernels/functions/sources must not import the "
                        "query or engine layers:\n" + "\n".join(found))
+
+
+def test_streaming_imports_no_operators():
+    found = []
+    for path in _scanned_files():
+        mod = _module_name(path)
+        if not _in_layer(mod, ("streaming",)):
+            continue
+        for target, name, _node in _imports(path):
+            full = target if name is None else f"{target}.{name}"
+            if _in_layer(target, ("operators",)) or _in_layer(
+                    full, ("operators",)):
+                found.append(f"{mod} -> {full}")
+    assert not found, ("streaming/ must not import the query layer:\n"
+                       + "\n".join(found))
+
+
+# Top-level defs no non-test code reaches, kept on purpose.
+KEPT_UNREACHED = {
+    "ocr_spark.operators.classifier.score_text":
+        "Python reference twin the classifier tests compare the Spark "
+        "expression and the DuckDB oracle against",
+    "ocr_spark.kernels.readability._text_of":
+        "naive reference the fast tree feed's text accumulator is "
+        "fuzzed against",
+    "ocr_spark.kernels.readability._link_len_of":
+        "naive reference the fast tree feed's link-length accumulator "
+        "is fuzzed against",
+    "ocr_spark.pipeline.extract.list_runs":
+        "run catalog, to be wired into jobs/extract_job.py output with "
+        "the measured per-bucket manifests",
+    "ocr_spark.sources.ingest.ingest_zip":
+        "zip-archive ingest (SURVEY S4)",
+    "ocr_spark.sources.ingest._name_is_junk":
+        "helper of ingest_zip (SURVEY S4)",
+    "ocr_spark.sources.ingest._zip_explode_stage":
+        "helper of ingest_zip (SURVEY S4)",
+    "ocr_spark.pipeline.maintenance.compact_parquet":
+        "parquet compaction, the small-files maintenance action",
+    "ocr_spark.pipeline.maintenance.recover_compaction":
+        "rolls back a compaction swap a crash interrupted",
+    "ocr_spark.pipeline.maintenance._dir_stats":
+        "helper of compact_parquet",
+    "ocr_spark.pipeline.bucketing.write_bucketed":
+        "bucketed catalog-table write for co-located joins",
+    "ocr_spark.pipeline.bucketing.colocated_join":
+        "exchange-free join of two write_bucketed tables",
+    "ocr_spark.sources.readers.write_transcripts":
+        "transcript writer, the inverse of read_transcripts",
+}
+
+
+def _names_used(nodes) -> set[str]:
+    """Every bare name and attribute name under the nodes: a def counts
+    as used wherever its name appears, whatever the module (a
+    conservative over-approximation)."""
+    out = set()
+    for n in nodes:
+        for m in ast.walk(n):
+            if isinstance(m, ast.Name):
+                out.add(m.id)
+            elif isinstance(m, ast.Attribute):
+                out.add(m.attr)
+    return out
+
+
+def unreached_defs() -> set[str]:
+    """Fixpoint over ocr_spark/'s top-level defs: a def is reached when
+    its name is used by a root — jobs/, tools/, perfbench/, bench.py,
+    __spark_entry__.py, module-level code of ocr_spark/ outside any
+    top-level def, or a name a package __init__ re-exports as its public
+    API — or by the body of a def already reached. Tests are no root."""
+    roots = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    for d in ("jobs", "tools", "perfbench"):
+        roots += sorted((ROOT / d).rglob("*.py"))
+    reached = set()
+    for f in roots:
+        if f.exists():
+            reached |= _names_used([ast.parse(f.read_text())])
+    defs = {}
+    for path in sorted((ROOT / "ocr_spark").rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for node in tree.body:
+            if path.name == "__init__.py" and isinstance(node, ast.ImportFrom):
+                reached |= {a.asname or a.name for a in node.names}
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                   ast.ClassDef)):
+                defs[f"{_module_name(path)}.{node.name}"] = node
+            else:
+                reached |= _names_used([node])
+    live = set()
+    grew = True
+    while grew:
+        grew = False
+        for key, node in defs.items():
+            if key not in live and node.name in reached:
+                live.add(key)
+                reached |= _names_used([node])
+                grew = True
+    return set(defs) - live
+
+
+def test_every_def_reached_or_kept_on_purpose():
+    unreached = unreached_defs()
+    assert unreached == set(KEPT_UNREACHED), (
+        "defs no non-test code reaches (wire them into a job or delete "
+        "them with their tests):\n"
+        + "\n".join(sorted(unreached - set(KEPT_UNREACHED)))
+        + "\nkept names that are reached now or gone:\n"
+        + "\n".join(sorted(set(KEPT_UNREACHED) - unreached)))
 
 
 def test_registry_assembled_only_in_operators_package():

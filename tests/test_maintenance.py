@@ -51,56 +51,6 @@ def test_compact_preserves_partition_layout(spark, tmp_path):
     assert after.where("lang = 'en'").count() == 1000
 
 
-def test_regression_diff_per_kind_parity(spark):
-    """diff_extractions: equal keys, diverging text, one-sided rows, and
-    tie-row multisets all land in the right per-kind buckets."""
-    from pyspark.sql import functions as F
-
-    from ocr_spark.pipeline.regression_diff import diff_extractions
-
-    cols = "conv_id string, turn_idx int, source_kind string, clean_text string"
-    a = spark.createDataFrame([
-        ("c1", 0, "html", "same text"),
-        ("c1", 1, "html", "old text"),          # diverges in b
-        ("c1", 2, "pdf", "a only"),             # missing in b
-        ("c2", 0, "html", "tie x"), ("c2", 0, "html", "tie y"),  # tie pair
-        ("c3", 0, "pdf", "tie p"),              # b has TWO rows here
-        ("c4", 0, "html", "rerouted"),          # b re-kinds it, text same
-    ], cols)
-    b = spark.createDataFrame([
-        ("c1", 0, "html", "same text"),
-        ("c1", 1, "html", "new text"),
-        ("c1", 3, "pdf", "b only"),             # missing in a
-        ("c2", 0, "html", "tie y"), ("c2", 0, "html", "tie x"),  # reordered
-        ("c3", 0, "pdf", "tie p"), ("c3", 0, "pdf", "tie p"),
-        ("c4", 0, "pdf", "rerouted"),           # kind flip, text identical
-    ], cols)
-    rows = {r.source_kind: r for r in diff_extractions(a, b).collect()}
-    html = rows["html"]
-    # c1t0 equal, c1t1 diverges, c2t0 equal (multiset, order-free),
-    # c4t0 present both sides but RE-KINDED -> counted, not equal
-    assert (html.n_both, html.n_equal, html.n_a_only, html.n_b_only) \
-        == (4, 2, 0, 0)
-    assert html.equal_bp == 5000
-    pdf = rows["pdf"]
-    # c3t0 present both sides but tie COUNT differs -> not equal
-    assert (pdf.n_both, pdf.n_equal, pdf.n_a_only, pdf.n_b_only) \
-        == (1, 0, 1, 1)
-
-
-def test_regression_diff_identical_runs_are_10000bp(spark):
-    from ocr_spark.pipeline.extract import extract_turns
-    from ocr_spark.pipeline.regression_diff import diff_extractions
-    from ocr_spark.sources.synthetic import synthesize_transcripts
-
-    t = synthesize_transcripts(spark, n_convs=20)
-    a = extract_turns(t, salt_partitions=0)
-    b = extract_turns(t, salt_partitions=8)     # different partitioning
-    rows = diff_extractions(a, b).collect()
-    assert rows and all(r.equal_bp == 10000 and r.n_a_only == 0
-                        and r.n_b_only == 0 for r in rows)
-
-
 def test_compaction_swap_crash_recovers(spark, tmp_path):
     """Crash inside the compaction's two-rename swap (data renamed away,
     tmp not yet promoted): the next compact_parquet call rolls the

@@ -302,7 +302,5 @@ def test_pdf_extractor_never_crashes(bits):
 @given(any_text)
 def test_llm_reply_cascade_never_crashes(s):
     """The T26 cascade must accept arbitrary reply text."""
-    from ocr_spark.kernels.llmreply import extract_json_from_reply, llm_parse_reply
+    from ocr_spark.kernels.llmreply import extract_json_from_reply
     extract_json_from_reply(s)
-    rec = llm_parse_reply(s, "f.json")
-    assert rec is None or isinstance(rec, dict)

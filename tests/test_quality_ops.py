@@ -8,6 +8,7 @@ import os
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -504,14 +505,9 @@ def test_gopher_gate_flags_planted_violations(spark, tmp_path):
 
 def test_epoch_mix_copies_and_replicate(spark, tmp_path):
     """Integer rates replicate exactly (src0 -> 3 copies each, default
-    sources -> 1), fractional rates admit the md5-bridge fraction into
-    {floor, floor+1}, and the materializing epoch_replicate twin emits
-    exactly sum(n_copies) rows with 1-based epoch indices (the
-    sequence(1, 0) descent guard)."""
-    from ocr_spark.operators.corpus import _docs
-    from ocr_spark.operators.quality import (
-        smp_epoch_mix, epoch_replicate, EPOCH_RATES)
-    import pyspark.sql.functions as F
+    sources -> 1), and fractional rates admit the md5-bridge fraction
+    into {floor, floor+1}."""
+    from ocr_spark.operators.quality import smp_epoch_mix, EPOCH_RATES
 
     assert EPOCH_RATES["src0"] == 3.0 and EPOCH_RATES["src1"] == 2.5
     docs = []
@@ -527,16 +523,6 @@ def test_epoch_mix_copies_and_replicate(spark, tmp_path):
     s1 = audit["src1"]
     assert 2 * s1.n_docs <= s1.n_copies <= 3 * s1.n_docs
     assert s1.n_copies not in (2 * s1.n_docs, 3 * s1.n_docs)  # bridge split
-    rep = epoch_replicate(_docs(spark, d))
-    per = {r.source: r for r in
-           rep.groupBy("source").agg(
-               F.count("*").alias("n"),
-               F.min("epoch").alias("emin"),
-               F.max("epoch").alias("emax")).collect()}
-    total = sum(a.n_copies for a in audit.values())
-    assert rep.count() == total
-    assert per["src0"].emin == 1 and per["src0"].emax == 3
-    assert per["plain"].emax == 1
 
 
 def test_chunk_dedup_strip_semantics(spark, tmp_path):
@@ -627,3 +613,46 @@ def test_gate_agreement_off_diagonal_cells(spark, tmp_path):
     want = {(r[0], r[1], r[2]): r[3]
             for r in con.execute(_txt_gate_agreement_sql()).fetchall()}
     assert got == want
+
+
+def _keyed_repetition(spark, sf_dir):
+    """Independent keyed explode+groupBy construction of the repetition
+    signals — the differential reference for the map-only sort-run fold
+    that txt_repetition / curation_flags share
+    (operators/quality.with_repetition_signals). Kept in the test so the
+    two algorithms keep checking each other."""
+    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .where(F.col("doc_id").isNotNull())
+            .selectExpr("doc_id", "split(lower(text), '[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+') AS t")
+            .where("size(t) >= 2"))
+    uni = (docs.select("doc_id", F.explode("t").alias("g"))
+           .groupBy("doc_id", "g").agg(F.count("*").alias("c"))
+           .groupBy("doc_id")
+           .agg(F.max("c").alias("max_tok"), F.sum("c").alias("n_tok")))
+    bg = (docs.selectExpr(
+            "doc_id",
+            "explode(transform(sequence(0, size(t) - 2),"
+            " i -> concat(t[i], ' ', t[i + 1]))) AS g")
+          .groupBy("doc_id", "g").agg(F.count("*").alias("c"))
+          .groupBy("doc_id")
+          .agg(F.max("c").alias("max_bg"), F.sum("c").alias("n_bg"),
+               F.sum(F.when(F.col("c") >= 2, F.col("c"))
+                     .otherwise(F.lit(0))).alias("dup_bg")))
+
+    def _bp(a, b):
+        return F.floor(F.col(a).cast("double") / F.col(b) * 10000)
+
+    return (uni.join(bg, "doc_id")
+            .select("doc_id",
+                    F.col("n_tok").cast("long").alias("n_tokens_b"),
+                    _bp("max_tok", "n_tok").alias("top_token_bp"),
+                    _bp("max_bg", "n_bg").alias("top_bigram_bp"),
+                    _bp("dup_bg", "n_bg").alias("dup_bigram_bp")))
+
+
+def test_txt_repetition_equals_keyed_aggregation_form(spark):
+    from ocr_spark.operators.quality import txt_repetition
+    a = [tuple(r) for r in txt_repetition(spark, SF_DIR).collect()]
+    b = sorted((tuple(r) for r in _keyed_repetition(spark, SF_DIR).collect()),
+               key=lambda r: r[0])
+    assert a == b
