@@ -153,8 +153,6 @@ def test_pii_scrub_redacts_everything(spark):
     """Every doc that had a synthetic PII item injected must report it
     detected (the scrub_hash end-to-end redaction parity is covered by
     the oracle compare; this pins the detection floor corpus-wide)."""
-    from pyspark.sql import functions as F
-
     from ocr_spark.operators.quality import txt_pii_scrub
     df = txt_pii_scrub(spark, SF_DIR)
     # every even doc_id gains exactly one synthetic email, %3 one phone, %5 one ip
@@ -315,7 +313,6 @@ def test_pack_two_level_scan_matches_naive_window(spark):
     naive one-window-per-shard plan — on dense small ids (all in one
     coarse bucket) AND on md5-long-style ids spread across the whole
     signed-64 space (many buckets, the production case)."""
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
     from ocr_spark.functions.text import TOKENS_EXPR
