@@ -13,7 +13,9 @@ JSON line on stdout: {"n_turns": ..., "wall_sec": ..., "turns_per_sec":
 ..., "parallelism": ...}.
 
 With --output, instead runs the full checkpointed job (write parquet +
-manifest) via run_extract_job and reports its metrics too.
+manifest) via run_extract_job, and before the summary line prints one
+JSON line {"runs": [...]}: the output dir's run catalog (list_runs),
+newest run first.
 """
 
 from __future__ import annotations
@@ -52,7 +54,8 @@ def main() -> None:
     from pyspark import StorageLevel
     from pyspark.sql import SparkSession
 
-    from ocr_spark.pipeline.extract import extract_turns, run_extract_job
+    from ocr_spark.pipeline.extract import (extract_turns, list_runs,
+                                            run_extract_job)
     from ocr_spark.sources.synthetic import synthesize_transcripts
 
     # master/cores come from spark-submit; only workload confs set here
@@ -120,6 +123,12 @@ def main() -> None:
             rows = extract_turns(t, salt_partitions=salt).count()
         walls.append(time.time() - t0)
         assert rows == n_turns, f"lineage broken: {rows} != {n_turns}"
+
+    if args.output:
+        runs = [r.asDict() for r in list_runs(spark, args.output).collect()]
+        for r in runs:
+            r["committed_at"] = r["committed_at"].isoformat()
+        print(json.dumps({"runs": runs}))
 
     walls.sort()
     median = walls[len(walls) // 2]

@@ -2,8 +2,8 @@
 knows it. Each artifact module (ann_index, dedup_index, tokenizer,
 classifier, bloom_filter, corpus_stats, maintenance's compaction) and
 each plain-manifest writer (curate, curate_convs, shards,
-corpus_pipeline) keeps only its data layout and manifest fields, and
-commits through these functions.
+corpus_pipeline, and extract's per-run parquet manifest parts) keeps only
+its data layout and manifest fields, and commits through these functions.
 
 Atomicity contract — the reference's single commit rule, data first and
 then an atomic tmp+rename manifest (RunStore.php:20-31):
@@ -29,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 
 MANIFEST = "manifest.json"
 
@@ -47,6 +48,19 @@ def commit(out_dir: str, manifest, name: str = MANIFEST) -> None:
     tmp = os.path.join(out_dir, f"_{name}.tmp")
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
+    os.replace(tmp, os.path.join(out_dir, name))
+
+
+def commit_part(out_dir: str, table) -> None:
+    """Atomically add one parquet part file (a pyarrow Table) to the
+    parquet dataset at out_dir: write `_part-<uuid>.parquet.tmp`, which
+    Spark and pyarrow readers skip, then os.replace it to
+    `part-<uuid>.parquet`."""
+    import pyarrow.parquet as pq
+    os.makedirs(out_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(out_dir, f"_{name}.tmp")
+    pq.write_table(table, tmp)
     os.replace(tmp, os.path.join(out_dir, name))
 
 

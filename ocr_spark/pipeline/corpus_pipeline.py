@@ -129,8 +129,7 @@ def run_corpus_pipeline(spark, transcripts: DataFrame, workdir: str,
         "run_id": run_id,
         "extract": {k: extract_metrics[k]
                     for k in ("rows_in", "rows_out", "buckets_written",
-                              "buckets_skipped")
-                    if k in extract_metrics},
+                              "buckets_skipped")},
         "documents": curate_manifest["n_input"],
         "curate": curate_manifest["funnel"],
         "pack": {r["lang"]: {"n_docs": r["n_docs"],

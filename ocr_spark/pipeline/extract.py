@@ -8,9 +8,12 @@ Spark plan (SURVEY.md §3.1 restatement, §4 custom work):
     → mapInPandas extraction stage (Arrow batches; kernels from
       ocr_spark.kernels — all per-row logic lives here, nothing per-row in
       the driver)
-    → one output row per input turn (lineage is 1:1 by construction)
+    → one output row per input turn; with a tally, the stage counts each
+      bucket's rows in, rows out and rejected as it produces them
     → write parquet partitioned by resume bucket
-    → manifest rows per bucket (rows_in/out/rejected, wall_ms, version)
+    → the driver checks rows_in == rows_out per bucket and commits one
+      manifest part (rows_in/out/rejected, wall_ms, version) for the
+      buckets this run wrote
 
 Scale notes:
 - The extraction map is embarrassingly parallel; the shuffle exists to
@@ -37,17 +40,21 @@ Scale notes:
 
 from __future__ import annotations
 
-import json
 import os
 import time
+from datetime import datetime, timezone
 
+import pyarrow as pa
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
                                MapType, StringType, StructField, StructType,
                                TimestampType)
 
 from .. import EXTRACTOR_VERSION
+from . import artifact
 
 ITEM_SCHEMA = StructType([
     StructField("code", StringType()),
@@ -170,11 +177,47 @@ def _warnings_for(invoices: list[dict]) -> list[str]:
     return warns
 
 
-def make_extract_fn():
+class BucketTally(AccumulatorParam):
+    """Accumulator of per-bucket lineage: {bucket: [rows_in, rows_out,
+    rows_rejected]}, summed over tasks."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, value1, value2):
+        for bucket, counts in value2.items():
+            have = value1.get(bucket)
+            value1[bucket] = (list(counts) if have is None
+                              else [a + b for a, b in zip(have, counts)])
+        return value1
+
+
+def _count_batch(counts: dict, pdf, frame) -> None:
+    """Add one batch's rows in (from the input batch), rows out and
+    rejected (from the frame the stage emits) to `counts`, per bucket."""
+    for bucket, n in pdf["bucket"].value_counts().items():
+        counts.setdefault(int(bucket), [0, 0, 0])[0] += int(n)
+    outs = frame.groupby("bucket")["rejected"].agg(["size", "sum"])
+    for bucket, n, rejected in zip(outs.index, outs["size"], outs["sum"]):
+        c = counts.setdefault(int(bucket), [0, 0, 0])
+        c[1] += int(n)
+        c[2] += int(rejected)
+
+
+def make_extract_fn(tally=None):
     """Iterator[pd.DataFrame] → Iterator[pd.DataFrame] extraction stage.
 
     Imports + regex compilation happen once per Python worker (module
     level), amortized across all Arrow batches (SURVEY §4 item 2).
+
+    tally: an optional BucketTally accumulator. The stage then counts each
+    bucket's rows in, rows out and rejected over all its batches and adds
+    them to the tally once, when its input is exhausted. Spark applies a
+    result stage's accumulator updates once per partition (a retried or
+    speculative attempt's are dropped), so when the stage runs fused into
+    the write's result stage, as in run_extract_job, the driver reads exact
+    counts after the write returns. Without a tally the stage counts
+    nothing.
     """
 
     def _extract(batches):
@@ -182,12 +225,12 @@ def make_extract_fn():
 
         from ..kernels import parsers as KP
 
+        counts: dict[int, list[int]] = {}
         for pdf in batches:
-            n = len(pdf)
             out = {k: [] for k in (
                 "source_kind", "confidence", "clean_text", "spans", "records",
-                "n_items", "calc_total", "warnings", "is_document", "rejected",
-                "bucket")}
+                "n_items", "calc_total", "warnings", "is_document",
+                "rejected")}
             for conv_id, turn_idx, text, tool in zip(
                     pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]):
                 text = text or ""
@@ -212,7 +255,7 @@ def make_extract_fn():
                 out["warnings"].append(_warnings_for(invoices))
                 out["is_document"].append(is_doc)
                 out["rejected"].append(rejected)
-            yield pd.DataFrame({
+            frame = pd.DataFrame({
                 "conv_id": pdf["conv_id"],
                 "turn_idx": pdf["turn_idx"].astype("int32"),
                 "role": pdf["role"],
@@ -229,6 +272,11 @@ def make_extract_fn():
                 "is_document": pd.Series(out["is_document"], dtype="int32"),
                 "rejected": pd.Series(out["rejected"], dtype="int32"),
             })
+            if tally is not None:
+                _count_batch(counts, pdf, frame)
+            yield frame
+        if tally is not None:
+            tally.add(counts)
 
     return _extract
 
@@ -259,7 +307,7 @@ TURN_BLOCK = 64
 
 def extract_turns(transcripts: DataFrame,
                   salt_partitions: int | None = None,
-                  n_buckets: int = 64) -> DataFrame:
+                  n_buckets: int = 64, tally=None) -> DataFrame:
     """Transcripts → extracted turns DataFrame (no write).
 
     salt_partitions:
@@ -273,6 +321,8 @@ def extract_turns(transcripts: DataFrame,
     opens a few files per task instead of one per bucket; the sampled range
     bounds balance rows across tasks and split a hot conversation at
     turn-block granularity.
+    tally: a BucketTally accumulator the stage adds per-bucket counts to
+    (see make_extract_fn).
     """
     spark = transcripts.sparkSession
     # null-key quarantine, JVM-side, BEFORE the Arrow stage: a malformed
@@ -294,7 +344,7 @@ def extract_turns(transcripts: DataFrame,
             F.col("bucket"),
             F.col("conv_id"),
             F.floor(F.col("turn_idx") / TURN_BLOCK))
-    return df.mapInPandas(make_extract_fn(), schema=EXTRACT_SCHEMA)
+    return df.mapInPandas(make_extract_fn(tally), schema=EXTRACT_SCHEMA)
 
 
 def run_extract_job(spark: SparkSession, transcripts: DataFrame,
@@ -304,7 +354,16 @@ def run_extract_job(spark: SparkSession, transcripts: DataFrame,
                     salt_partitions: int | None = None,
                     n_buckets: int = 64) -> dict:
     """Full job: extract → write parquet partitioned by bucket → commit
-    per-bucket manifest. Returns job metrics.
+    per-bucket manifest. Returns job metrics: rows_in, rows_out and
+    buckets_written count what this run extracted and wrote.
+
+    The manifest is measured, not read back: the Python stage counts each
+    bucket's rows in, rows out and rejected into a BucketTally accumulator
+    as it runs, fused with the write. After the write the driver checks
+    rows_in == rows_out per bucket and commits ONE parquet part file of
+    MANIFEST_SCHEMA rows into `_checkpoints/`, covering only the buckets
+    this run wrote (artifact.commit_part: tmp + os.replace, so a reader
+    sees the whole part or none of it). No Spark job runs after the write.
 
     Resume: with resume=True, buckets already recorded in the manifest are
     skipped (anti-join on the stable bucket id) and new output is appended.
@@ -333,8 +392,9 @@ def run_extract_job(spark: SparkSession, transcripts: DataFrame,
         # partitioned by — completed buckets never reach the Python stage
         pending = transcripts.where(~bucket_expr(n_buckets).isin(done))
 
+    tally = spark.sparkContext.accumulator({}, BucketTally())
     extracted = extract_turns(pending, salt_partitions=salt_partitions,
-                              n_buckets=n_buckets)
+                              n_buckets=n_buckets, tally=tally)
 
     # ALWAYS dynamic partition overwrite, also on resume: completed buckets
     # are filtered out of `pending` so they emit no partitions and stay
@@ -346,30 +406,28 @@ def run_extract_job(spark: SparkSession, transcripts: DataFrame,
      .partitionBy("bucket")
      .parquet(data_dir))
 
-    # manifest from the committed data (exact counts, no extra job over the
-    # python stage: parquet scan + hash agg only)
-    out_df = spark.read.parquet(data_dir)
+    counts = tally.value
+    lost = sorted(b for b, (n_in, n_out, _) in counts.items()
+                  if n_in != n_out)
+    if lost:
+        raise RuntimeError(
+            f"lineage broken: rows_in != rows_out in buckets {lost}")
     wall_ms = int((time.time() - t0) * 1000)
-    manifest = (
-        out_df.groupBy("bucket")
-        .agg(F.count("*").alias("rows_out"),
-             F.sum("rejected").cast("long").alias("rows_rejected"))
-        .withColumn("rows_in", F.col("rows_out"))  # 1:1 by construction
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("source_snapshot_id", F.lit(source_snapshot_id))
-        .withColumn("extractor_version", F.lit(EXTRACTOR_VERSION))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn("committed_at", F.current_timestamp())
-        .select([f.name for f in MANIFEST_SCHEMA.fields])
-    )
-    if done:
-        manifest = manifest.where(~F.col("bucket").isin(done))
-    manifest.write.mode("append").parquet(manifest_dir)
+    committed_at = datetime.now(timezone.utc)
+    rows = [{"run_id": run_id, "source_snapshot_id": source_snapshot_id,
+             "bucket": b, "rows_in": n_in, "rows_out": n_out,
+             "rows_rejected": rejected,
+             "extractor_version": EXTRACTOR_VERSION, "wall_ms": wall_ms,
+             "committed_at": committed_at}
+            for b, (n_in, n_out, rejected) in sorted(counts.items())]
+    artifact.commit_part(manifest_dir, pa.Table.from_pylist(
+        rows, schema=to_arrow_schema(MANIFEST_SCHEMA)))
 
-    rows = out_df.count()
     return {
         "run_id": run_id,
-        "rows_out": rows,
+        "rows_in": sum(c[0] for c in counts.values()),
+        "rows_out": sum(c[1] for c in counts.values()),
+        "buckets_written": len(counts),
         "buckets_skipped": len(done),
         "wall_ms": wall_ms,
         "output": data_dir,

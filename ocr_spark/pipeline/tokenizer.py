@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.frames import spread_partitions
 from ..operators.corpus import train_bpe_merge_list

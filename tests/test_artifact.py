@@ -11,7 +11,9 @@ artifacts wherever a case applies:
   previous manifest readable (an append) or none at all (a rebuild,
   which invalidated it first) — never a truncated file.
 
-Plus the plain-manifest writers' rerun contract (shards)."""
+Plus the plain-manifest writers' rerun contract (shards), and the
+extraction job's per-run manifest part: a crash before its rename, and
+parts of both writers mixed in one `_checkpoints/`."""
 
 import json
 import os
@@ -219,3 +221,79 @@ def test_shards_rerun_crashing_in_data_write_leaves_no_manifest(spark,
         write_training_shards(spark, _poisoned(docs, "text"), out,
                               n_shards=4)
     assert not os.path.exists(os.path.join(out, "manifest.json"))
+
+
+def _part_files(d):
+    """The readable (not `_`/`.`-prefixed) parquet part files under d."""
+    return [f for f in os.listdir(d) if not f.startswith(("_", "."))
+            and f.endswith(".parquet")] if os.path.isdir(d) else []
+
+
+def test_extract_manifest_part_crash_before_rename_then_resume(
+        spark, tmp_path, monkeypatch):
+    """run_extract_job commits its per-bucket manifest as one parquet part
+    (artifact.commit_part). A crash before the part's rename leaves no
+    readable manifest row, only orphan data; a resume then replaces those
+    buckets' data instead of appending to it."""
+    from ocr_spark.pipeline.extract import run_extract_job
+    from ocr_spark.sources.synthetic import synthesize_transcripts
+    out = str(tmp_path / "extract")
+    t = synthesize_transcripts(spark, 12, 4).where(
+        "conv_id != 'conv-000000'")   # no hot conversation: 44 turns
+    n = t.count()
+    real = os.replace
+
+    def replace(src, dst):
+        if str(src).endswith(".parquet.tmp"):
+            raise _Crash("simulated crash before the manifest part rename")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(_Crash):
+        run_extract_job(spark, t, out, run_id="r1", salt_partitions=2,
+                        n_buckets=4)
+    monkeypatch.undo()
+    mdir = os.path.join(out, "_checkpoints")
+    assert _part_files(mdir) == []
+    data = os.path.join(out, "extracted_turns")
+    assert spark.read.parquet(data).count() == n   # orphan data
+
+    m = run_extract_job(spark, t, out, run_id="r2", resume=True,
+                        salt_partitions=2, n_buckets=4)
+    assert m["buckets_skipped"] == 0
+    assert m["rows_in"] == m["rows_out"] == n
+    assert spark.read.parquet(data).count() == n, \
+        "orphan buckets must be replaced, not appended"
+    assert len(_part_files(mdir)) == 1
+    manifest = spark.read.parquet(mdir).collect()
+    assert {r.run_id for r in manifest} == {"r2"}
+    assert sum(r.rows_out for r in manifest) == n
+
+
+def test_extract_manifest_mixes_spark_written_and_committed_parts(
+        spark, tmp_path):
+    """A `_checkpoints/` holding parts an older Spark append wrote and
+    parts artifact.commit_part wrote reads back as MANIFEST_SCHEMA, and
+    the run catalog aggregates both."""
+    from datetime import datetime
+
+    from ocr_spark.pipeline.extract import (MANIFEST_SCHEMA, list_runs,
+                                            run_extract_job)
+    from ocr_spark.sources.synthetic import synthesize_transcripts
+    out = str(tmp_path / "mixed")
+    mdir = os.path.join(out, "_checkpoints")
+    spark.createDataFrame(
+        [("20260101_old", "", b, 5, 5, 1, "0.0.9", 10, datetime(2026, 1, 1))
+         for b in range(2)], MANIFEST_SCHEMA).write.mode("append").parquet(mdir)
+    t = synthesize_transcripts(spark, 12, 4).where(
+        "conv_id != 'conv-000000'")
+    m = run_extract_job(spark, t, out, run_id="20260102_new",
+                        salt_partitions=2, n_buckets=4)
+    assert len(_part_files(mdir)) > 1
+    assert spark.read.parquet(mdir).schema == MANIFEST_SCHEMA
+    runs = list_runs(spark, out).collect()
+    assert [r.run_id for r in runs] == ["20260102_new", "20260101_old"]
+    assert (runs[0].n_buckets, runs[0].rows_in, runs[0].rows_out) == \
+        (m["buckets_written"], m["rows_in"], m["rows_out"])
+    assert (runs[1].n_buckets, runs[1].rows_in, runs[1].rows_rejected) == \
+        (2, 10, 2)

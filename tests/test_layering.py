@@ -141,9 +141,6 @@ KEPT_UNREACHED = {
     "ocr_spark.kernels.readability._link_len_of":
         "naive reference the fast tree feed's link-length accumulator "
         "is fuzzed against",
-    "ocr_spark.pipeline.extract.list_runs":
-        "run catalog, to be wired into jobs/extract_job.py output with "
-        "the measured per-bucket manifests",
     "ocr_spark.sources.ingest.ingest_zip":
         "zip-archive ingest (SURVEY S4)",
     "ocr_spark.sources.ingest._name_is_junk":
@@ -223,6 +220,46 @@ def test_every_def_reached_or_kept_on_purpose():
         + "\n".join(sorted(unreached - set(KEPT_UNREACHED)))
         + "\nkept names that are reached now or gone:\n"
         + "\n".join(sorted(set(KEPT_UNREACHED) - unreached)))
+
+
+def unused_imports() -> list[str]:
+    """`path:line: name` for every import in ocr_spark/, jobs/ and tools/
+    whose bound name the module never loads. Skipped: `__future__`
+    imports, lines marked `# noqa: F401`, a package __init__'s top-level
+    imports (its re-exported API) and names listed in `__all__`."""
+    found = []
+    for d in ("ocr_spark", "jobs", "tools"):
+        for path in sorted((ROOT / d).rglob("*.py")):
+            src = path.read_text()
+            lines, tree = src.splitlines(), ast.parse(src)
+            used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+            for n in ast.walk(tree):
+                if isinstance(n, ast.Assign) and any(
+                        isinstance(t, ast.Name) and t.id == "__all__"
+                        for t in n.targets):
+                    used |= {c.value for c in ast.walk(n.value)
+                             if isinstance(c, ast.Constant)}
+            for n in ast.walk(tree):
+                if not isinstance(n, (ast.Import, ast.ImportFrom)):
+                    continue
+                if isinstance(n, ast.ImportFrom) and n.module == "__future__":
+                    continue
+                if path.name == "__init__.py" and n in tree.body:
+                    continue
+                if any("noqa: F401" in lines[i - 1]
+                       for i in range(n.lineno, n.end_lineno + 1)):
+                    continue
+                for a in n.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    if a.name != "*" and bound not in used:
+                        found.append(f"{path.relative_to(ROOT)}:{n.lineno}: "
+                                     f"{bound}")
+    return found
+
+
+def test_no_unused_imports():
+    found = unused_imports()
+    assert not found, "imports never used:\n" + "\n".join(found)
 
 
 def test_registry_assembled_only_in_operators_package():

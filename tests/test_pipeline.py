@@ -153,6 +153,31 @@ def test_resume_replaces_orphan_buckets(spark, tmp_path):
     assert manifest.select("bucket").distinct().count() == 8
 
 
+def test_rerun_manifest_counts_only_this_runs_buckets(spark, tmp_path):
+    """Lineage is measured per run: a non-resume rerun of 12 turns into
+    a directory that already holds a 636-turn run must record its own 12
+    rows in at most 3 buckets, not the 636 rows of the whole directory
+    (a manifest read back from the output recorded 636 rows across 40
+    buckets)."""
+    out = str(tmp_path / "rerun")
+    t = synthesize_transcripts(spark, 60, 4)   # 400-turn hot conv + 59 x 4
+    m1 = run_extract_job(spark, t, out, run_id="r1", salt_partitions=4)
+    assert m1["rows_in"] == m1["rows_out"] == t.count() == 636
+    assert m1["buckets_written"] == 40
+
+    small = t.where(F.col("conv_id").isin(
+        "conv-000001", "conv-000002", "conv-000003"))
+    m2 = run_extract_job(spark, small, out, run_id="r2", salt_partitions=4)
+    assert m2["rows_in"] == m2["rows_out"] == 12
+    assert m2["buckets_written"] <= 3
+    rows = spark.read.parquet(m2["manifest"]).where("run_id = 'r2'").collect()
+    assert sum(r.rows_in for r in rows) == sum(r.rows_out for r in rows) == 12
+    assert len(rows) == m2["buckets_written"]
+    assert {r.bucket for r in rows} == {
+        stable_bucket_py(c, 64)
+        for c in ("conv-000001", "conv-000002", "conv-000003")}
+
+
 def test_salting_splits_hot_conversations(spark, tmp_path):
     """The engine's shuffle key (range on bucket, conv_id, turn_idx//64)
     must spread a hot conversation's turns over many partitions, keep the
