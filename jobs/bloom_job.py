@@ -43,7 +43,7 @@ def main() -> None:
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .getOrCreate())
 
-    from ocr_spark.operators.corpus import BLOOM_EXTRA_BITS
+    from ocr_spark.functions.hashing import BLOOM_EXTRA_BITS
     from ocr_spark.pipeline.bloom_filter import (append_batch,
                                                  build_bloom_filter,
                                                  check_batch)

@@ -45,7 +45,7 @@ def main() -> None:
         if args.mode == "train":
             from ocr_spark.pipeline.classifier import train_classifier
             if args.builtin_corpus:
-                from ocr_spark.operators.classifier import training_corpus
+                from ocr_spark.functions.classifier import training_corpus
                 labeled = spark.createDataFrame(
                     training_corpus(), "text string, label int")
             elif args.labeled:

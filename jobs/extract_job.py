@@ -48,7 +48,9 @@ def main() -> None:
                     help="file count for --input-parquet staging")
     ap.add_argument("--repeats", type=int, default=1,
                     help="timed repetitions; median is reported")
-    ap.add_argument("--run-id", default="bench")
+    ap.add_argument("--run-id", default="bench",
+                    help="manifest run id; with --repeats > 1, repetition "
+                         "i runs as <run-id>-<i>")
     args = ap.parse_args()
 
     from pyspark import StorageLevel
@@ -105,11 +107,13 @@ def main() -> None:
     salt = args.salt
 
     walls = []
-    for _ in range(max(1, args.repeats)):
+    for i in range(max(1, args.repeats)):
         t0 = time.time()
         if args.output:
+            run_id = (args.run_id if args.repeats <= 1
+                      else f"{args.run_id}-{i}")
             metrics = run_extract_job(spark, t, args.output,
-                                      run_id=args.run_id,
+                                      run_id=run_id,
                                       resume=args.resume,
                                       salt_partitions=salt)
             rows = metrics["rows_out"]

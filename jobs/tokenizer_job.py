@@ -58,7 +58,7 @@ def main() -> None:
                 "wall_ms": int((time.time() - t0) * 1000),
             }, sort_keys=True))
         else:
-            from ocr_spark.operators.quality import PACK_SEQ_LEN
+            from ocr_spark.functions.frames import PACK_SEQ_LEN
             from ocr_spark.pipeline.tokenizer import pack_with_tokenizer
             t0 = time.time()
             agg = (pack_with_tokenizer(spark, args.tokenizer, docs)

@@ -27,12 +27,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from ..functions.frames import array_dot, spread_partitions
-from ..functions.hashing import md5_long
+from ..functions.frames import (N_LSH_MULTIPROBE, N_LSH_TOPK_PLANES,
+                                array_dot, len_bucket, lsh_code_frame,
+                                lsh_topk_planes, min_label_components,
+                                spread_partitions)
+from ..functions.hashing import (BLOOM_EXTRA_BITS, BLOOM_K, bloom_pos_explode,
+                                 content_md5, md5_long)
 from ..functions.minhash import (MAX_LSH_BUCKET, MINHASH_CTES, N_MINHASH,
                                  lsh_candidate_pairs, minhash_bands,
                                  minhash_sig_stage)
-from ..functions.text import LANG_MARKERS
+from ..functions.quality import floor_bp
+from ..functions.text import (LANG_MARKERS, lang_argmax_column,
+                              lang_hit_columns)
 
 
 def _docs(spark, sf_dir):
@@ -49,16 +55,6 @@ def _emb(spark, sf_dir):
                    & F.col("embedding").isNotNull()))
 
 
-def len_bucket(n_tok):
-    """Floor-log2 token-length bucket — length(bin(n)), exact integer on
-    both engines, 0 for empty docs. THE shared bucket definition across
-    dd_dup_rate_by_length, quality.len_bucket_frame (txt_drift_tvd) and
-    the corpus-stats snapshot artifact: a snapshot built yesterday must
-    bucket exactly like a profile computed today."""
-    return (F.when(n_tok > 0, F.length(F.bin(n_tok)))
-            .otherwise(F.lit(0)).cast("int"))
-
-
 # ---------------------------------------------------------------------------
 # Deduplication
 # ---------------------------------------------------------------------------
@@ -68,7 +64,7 @@ def dd_exact_dup(spark, sf_dir):
     groupBy hash, keep min(doc_id) as canonical. Map-side combine makes the
     shuffle carry one row per distinct hash per partition."""
     docs = _docs(spark, sf_dir)
-    norm = F.md5(F.regexp_replace(F.lower(F.col("text")), r"[ \t\n\x0b\f\r]+", " "))
+    norm = content_md5(F.col("text"))
     return (
         docs.withColumn("text_hash", norm)
         .groupBy("text_hash")
@@ -101,8 +97,7 @@ def dd_soft_dedup(spark, sf_dir):
     groupBy(text_hash) over the normalized-md5 key plus the hash-keyed
     join back; the weight projection is map-only."""
     docs = _docs(spark, sf_dir)
-    norm = F.md5(F.regexp_replace(F.lower(F.col("text")),
-                                  r"[ \t\n\x0b\f\r]+", " "))
+    norm = content_md5(F.col("text"))
     per_doc = docs.select("doc_id", norm.alias("text_hash"))
     clusters = (per_doc.groupBy("text_hash")
                 .agg(F.count("*").cast("long").alias("n_copies")))
@@ -176,8 +171,7 @@ def smp_soft_budget(spark, sf_dir):
     One window over the normalized-text hash + one tiny
     groupBy(source)."""
     docs = _docs(spark, sf_dir)
-    norm = F.md5(F.regexp_replace(F.lower(F.col("text")),
-                                  r"[ \t\n\x0b\f\r]+", " "))
+    norm = content_md5(F.col("text"))
     n_tok = F.size(F.filter(
         F.split(F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))),
                 r"[ \t\n\x0b\f\r]+"),
@@ -229,8 +223,7 @@ def dd_dup_rate_by_length(spark, sf_dir):
     runs anyway) + one tiny groupBy(bucket); buckets via bin-length
     (exact on both engines)."""
     docs = _docs(spark, sf_dir)
-    norm = F.md5(F.regexp_replace(F.lower(F.col("text")),
-                                  r"[ \t\n\x0b\f\r]+", " "))
+    norm = content_md5(F.col("text"))
     n_tok = F.size(F.filter(
         F.split(F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))),
                 r"[ \t\n\x0b\f\r]+"),
@@ -560,9 +553,7 @@ def dd_dup_rate_by_source(spark, sf_dir):
     it as one sort-merge exchange pair, the text payload never moves.
     All shares are integer basis points."""
     docs = _docs(spark, sf_dir)
-    key = F.md5(F.regexp_replace(F.lower(F.coalesce(_synd_text(),
-                                                    F.lit(""))),
-                                 r"[ \t\n\x0b\f\r]+", " "))
+    key = content_md5(F.coalesce(_synd_text(), F.lit("")))
     per = docs.select("doc_id", "source", key.alias("text_hash")).persist()
     stats = (per.groupBy("text_hash")
              .agg(F.count_distinct("source").alias("n_sources")))
@@ -710,8 +701,7 @@ def dd_prefix_dup(spark, sf_dir):
     per_doc = docs.select(
         "doc_id",
         md5_long(prefix).alias("prefix_key"),
-        F.md5(F.regexp_replace(F.lower(text), r"[ \t\n\x0b\f\r]+", " "))
-        .alias("full_hash"))
+        content_md5(text).alias("full_hash"))
     return (per_doc.groupBy("prefix_key")
             .agg(F.count("*").cast("long").alias("n_docs"),
                  F.count_distinct("full_hash").cast("long")
@@ -834,62 +824,6 @@ FROM (SELECT doc_id,
 LEFT JOIN corpus_idx c USING (text_hash)
 ORDER BY b.doc_id
 """
-
-
-BLOOM_K = 4           # hash functions per inserted key
-BLOOM_EXTRA_BITS = 3  # m = 2^(bit_length(n)+3)  →  8n < m ≤ 16n bits
-
-
-def content_md5(c):
-    """Whitespace-normalized lowercase content hash (md5 hex) — the
-    exact-dedup key shared by the incremental family and the Bloom
-    filter."""
-    return F.md5(F.regexp_replace(F.lower(c), r"[ \t\n\x0b\f\r]+", " "))
-
-
-def bloom_pos_explode():
-    """Explode column yielding the BLOOM_K probe positions of one
-    content hash; expects columns `text_hash` (md5 hex) and `m`
-    (BIGINT) in scope. Positions are pmod(md5_long(hash||':'||j), m) —
-    the repo's ONE md5-to-int64 bridge composed with the sign-safe mod,
-    identical on DuckDB via the UBIGINT bridge and `((x % m) + m) % m`.
-    j rides as a literal suffix so the Spark concat and the SQL
-    `|| ':' || CAST(j AS VARCHAR)` render the same preimage bytes."""
-    return F.explode(F.array(*[
-        F.pmod(md5_long(F.concat(F.col("text_hash"), F.lit(f":{j}"))),
-               F.col("m"))
-        for j in range(BLOOM_K)]))
-
-
-def bloom_probe_frame(docs: DataFrame, m: int) -> DataFrame:
-    """(doc_id, pos) probe positions of a documents frame against an
-    m-bit filter — THE shared probe projection of the Bloom artifact's
-    build, batch-check and append paths (one builder, so a preimage
-    change cannot drift between them). NULL text is coalesced to ''
-    (the sim_bm25 discipline): hashing NULL would probe NULL positions
-    that join nothing and break the artifact's no-false-negatives
-    contract."""
-    return (docs.select(
-                "doc_id",
-                content_md5(F.coalesce(F.col("text"), F.lit("")))
-                .alias("text_hash"),
-                F.lit(int(m)).cast("long").alias("m"))
-            .select("doc_id", bloom_pos_explode().alias("pos")))
-
-
-def bloom_bits_build(corpus_docs: DataFrame,
-                     extra_bits: int = BLOOM_EXTRA_BITS):
-    """Materialize the Bloom filter of a corpus's content hashes for
-    serving: returns
-    (bits DataFrame of distinct positions, m, n_keys). m is fixed
-    driver-side from ONE count (n_keys reuses it — no second input
-    scan, and the manifest's sizing claim can never disagree with its
-    own n_keys field)."""
-    n = corpus_docs.count()
-    m = 1 << (max(int(n), 1).bit_length() + extra_bits)
-    bits = (bloom_probe_frame(corpus_docs, m)
-            .select("pos").distinct())
-    return bits, m, int(n)
 
 
 def _bloom_hashed_frames(spark, sf_dir):
@@ -2111,8 +2045,8 @@ def sim_bm25_topk(spark, sf_dir):
                 r"[ \t\n\x0b\f\r]+"),
         lambda x: x != "")
     # bigram terms via zip_with(t, t[1:]) — lambda-var-only discipline
-    # (see quality.with_repetition_signals); the trailing NULL from the
-    # slice length mismatch is filtered out
+    # (see functions/quality.with_repetition_signals); the trailing NULL
+    # from the slice length mismatch is filtered out
     bg_arr = F.filter(
         F.zip_with(tok_arr, F.slice(tok_arr, 2, F.size(tok_arr)),
                    lambda a, b: F.concat(a, F.lit(" "), b)),
@@ -2501,27 +2435,6 @@ FROM documents ORDER BY doc_id
 """
 
 
-def lang_hit_columns(text_col):
-    """Per-language stopword-marker hit counts for a text Column (the
-    txt_langid heuristic's scoring half, reusable by pipelines)."""
-    tokens = F.split(F.lower(text_col), r"[ \t\n\x0b\f\r]+")
-    return [
-        F.size(F.filter(tokens, lambda t: t.isin(*words))).alias(f"hits_{lang}")
-        for lang, words in LANG_MARKERS.items()
-    ]
-
-
-def lang_argmax_column():
-    """Argmax over the hits_<lang> columns with deterministic tie order
-    (earlier markers win); 'unk' when nothing matched."""
-    best = F.greatest(*[F.col(f"hits_{lang}") for lang in LANG_MARKERS])
-    pred = F.lit("unk")
-    for lang in reversed(list(LANG_MARKERS)):  # earlier langs win ties
-        pred = F.when((F.col(f"hits_{lang}") == best) & (best > 0),
-                      F.lit(lang)).otherwise(pred)
-    return pred
-
-
 # the DuckDB mirrors of lang_hit_columns / lang_argmax_column, GENERATED
 # from the same LANG_MARKERS dict (three hand-maintained transcriptions
 # of the marker lists would drift silently); shared by TXT_LANGID_SQL and
@@ -2766,65 +2679,10 @@ def bpe_train_merges(spark, sf_dir):
     exact-equality with a pure-Python reference trainer is pinned by
     tests/test_operators.py::test_bpe_train_matches_reference (count
     desc, then lexicographic (left, right) tie order on both sides)."""
+    from ..pipeline.tokenizer import train_bpe_merge_list
     merges = train_bpe_merge_list(_docs(spark, sf_dir), BPE_TRAIN_MERGES)
     return spark.createDataFrame(
         merges, "merge_rank INT, left STRING, right STRING, pair_count BIGINT")
-
-
-def train_bpe_merge_list(docs: DataFrame,
-                         n_merges: int) -> list[tuple[int, str, str, int]]:
-    """The bpe_train_merges training loop over an arbitrary documents
-    frame, returning the ordered merge list — shared by the registry
-    query and the persisted tokenizer artifact (pipeline/tokenizer.py);
-    two copies of the argmax/tie/rewrite rules would drift."""
-    vocab = (docs.select(F.explode(F.split(F.lower(
-                 F.coalesce(F.col("text"), F.lit(""))), r"[ \t\n\x0b\f\r]+")).alias("w"))
-             .where(F.col("w") != "")
-             .groupBy("w").agg(F.count("*").cast("long").alias("freq"))
-             .select(F.split("w", "").alias("syms"), "freq")
-             .localCheckpoint(eager=True))
-
-    merges = []
-    for rank in range(1, n_merges + 1):
-        lhs = F.slice(F.col("syms"), 1, F.size("syms") - 1)
-        rhs = F.slice(F.col("syms"), 2, F.size("syms") - 1)
-        best = (vocab.where(F.size("syms") >= 2)
-                .select("freq",
-                        F.explode(F.zip_with(
-                            lhs, rhs,
-                            lambda a, b: F.struct(a.alias("l"),
-                                                  b.alias("r")))).alias("p"))
-                .groupBy("p.l", "p.r")
-                .agg(F.sum("freq").alias("n"))
-                .orderBy(F.desc("n"), "l", "r")
-                .limit(1).collect())
-        if not best:
-            break
-        bl, br, bn = best[0]["l"], best[0]["r"], int(best[0]["n"])
-        merges.append((rank, bl, br, bn))
-
-        def _merge_batch(batches, bl=bl, br=br):
-            for pdf in batches:
-                out = []
-                for syms in pdf["syms"]:
-                    s = list(syms)
-                    i, acc = 0, []
-                    while i < len(s):
-                        if i + 1 < len(s) and s[i] == bl and s[i + 1] == br:
-                            acc.append(bl + br)
-                            i += 2
-                        else:
-                            acc.append(s[i])
-                            i += 1
-                    out.append(acc)
-                pdf = pdf.copy()
-                pdf["syms"] = out
-                yield pdf
-
-        vocab = (vocab.mapInPandas(_merge_batch, schema=vocab.schema)
-                 .localCheckpoint(eager=True))
-
-    return merges
 
 
 def txt_fingerprint(spark, sf_dir):
@@ -2835,8 +2693,7 @@ def txt_fingerprint(spark, sf_dir):
     return (
         docs.select(
             "doc_id",
-            F.md5(F.regexp_replace(F.lower(F.col("text")), r"[ \t\n\x0b\f\r]+", " "))
-            .alias("fingerprint"))
+            content_md5(F.col("text")).alias("fingerprint"))
         .orderBy("doc_id")
     )
 
@@ -3265,52 +3122,6 @@ def dd_semantic_dup(spark, sf_dir):
             .orderBy("vec_id"))
 
 
-N_LSH_TOPK_PLANES = 6   # 64 buckets
-N_LSH_MULTIPROBE = 2    # probe all codes within hamming<=2 (22/64 buckets)
-
-
-def _lsh_topk_planes():
-    """The 64 × N_LSH_TOPK_PLANES hyperplane matrix for sim_lsh_topk —
-    fixed-seed PCG64, shared by the numpy code stage and (as repr-exact
-    float literals) the generated oracle SQL."""
-    import numpy as np
-    return np.random.default_rng(7).standard_normal((64, N_LSH_TOPK_PLANES))
-
-
-def lsh_code_frame(emb):
-    """(vec_id, embedding) → (vec_id, code, vec, norm): the shared 6-bit
-    hyperplane sign-code stage behind sim_lsh_topk AND the persisted
-    index build (pipeline/ann_index.py). Map-only numpy Arrow stage;
-    the dot products accumulate dimension-sequentially (strict
-    left-to-right fold, vectorized over rows) so the sign bits match the
-    oracle SQL's `+` chain bit-for-bit — BLAS `m @ planes` pairwise-sums
-    in a different order, which could flip a sign bit at |dot| ~ 1e-13."""
-    import numpy as np
-    import pandas as pd
-
-    e = (emb.select("vec_id",
-                    F.col("embedding").cast("array<double>").alias("vec"))
-         .withColumn("norm", F.sqrt(array_dot(F.col("vec"), F.col("vec")))))
-    planes = _lsh_topk_planes()
-    weights = (1 << np.arange(N_LSH_TOPK_PLANES)).astype(np.int64)
-
-    def _code_stage(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["vec"]])
-            acc = np.zeros((m.shape[0], N_LSH_TOPK_PLANES))
-            for j in range(m.shape[1]):
-                acc += m[:, j:j + 1] * planes[j]
-            code = (acc >= 0) @ weights
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "code": code,
-                                "vec": pdf["vec"], "norm": pdf["norm"]})
-
-    return spread_partitions(e).mapInPandas(
-        _code_stage, "vec_id long, code long, vec array<double>, norm double")
-
-
 def sim_lsh_topk(spark, sf_dir):
     """LSH-bucketed ANN top-k — the second scale path beside IVF
     (task brief: "an IVF or LSH-bucketed variant"): corpus vectors get a
@@ -3372,7 +3183,7 @@ def _lsh_coded_cte() -> str:
     as repr-exact double literals, the 6-bit sign code, and the norm as
     a strict left-to-right `+` chain — one generator, so a change to
     EMB_DIM / the plane seed cannot diverge the oracles."""
-    planes = _lsh_topk_planes()
+    planes = lsh_topk_planes()
     code_expr = " + ".join(
         "(CASE WHEN ("
         + " + ".join(f"e[{j + 1}] * {float(planes[j][p])!r}"
@@ -3860,153 +3671,6 @@ def sim_pq_topk(spark, sf_dir):
             .orderBy("query_id", "rank"))
 
 
-# candidate-pair graphs at or below this many pairs are finished on the
-# driver with union-find instead of the distributed label loop: the
-# collect is ~16 bytes/pair (bounded by construction), and it replaces
-# 2*log(diameter) shuffle rounds with one action. At 100 TB the pair
-# set from banded LSH + exact dedup is still far smaller than the
-# corpus but can exceed this, so the distributed loop stays the
-# general path.
-SMALL_GRAPH_MAX_PAIRS = 200_000
-
-
-def _union_find_min_labels(pairs):
-    """Driver-side connected components over an iterable of (a, b) pairs:
-    union-find with union-by-min root + path compression, so each
-    component's root IS its minimum doc_id — the same fixpoint
-    _propagate_min_labels converges to (equivalence pinned in
-    tests/test_operators.py::test_dup_clusters_match_union_find).
-    Returns [(doc_id, label)] over every edge-touched vertex."""
-    parent = {}
-    vertices = set()
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in pairs:
-        vertices.add(a)
-        vertices.add(b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    return [(v, find(v)) for v in sorted(vertices)]
-
-
-def _propagate_min_labels(edges, max_rounds=50):
-    """Connected components over a symmetric, persisted (src, dst) edge
-    frame: iterative min-label propagation with pointer doubling.
-    Returns (labels DataFrame (doc_id, label), rounds, converged).
-
-    Each round: (1) neighbor-min — propagate min(label) across edges,
-    one keyed shuffle; (2) pointer doubling — label <- label of label,
-    one keyed self-join — so convergence is O(log diameter) rounds, not
-    O(diameter). Every label value is itself an edge-touched doc_id
-    (labels start as self-ids and only ever take on other vertices'
-    ids), so the label->label-of-label lookup is total. Labels only
-    ever decrease, so an unchanged SUM(label) (one aggregate action per
-    round) certifies the fixpoint, which equals per-vertex MIN over the
-    transitive closure. Lineage is truncated with localCheckpoint each
-    round: the plan references the previous frame several times, so
-    persist() alone leaves the logical plan growing exponentially with
-    rounds and deep iterations OOM the driver in plan analysis before
-    any task runs."""
-    # only edge-touched vertices can ever change label: singleton docs
-    # (the overwhelming majority of a real corpus) never enter the loop
-    labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-              .withColumn("label", F.col("doc_id")).persist())
-    prev_sum = None
-    rounds = 0
-    converged = False
-    for _ in range(max_rounds):
-        rounds += 1
-        prop = (edges.join(labels, edges.src == labels.doc_id)
-                .groupBy(F.col("dst").alias("doc_id"))
-                .agg(F.min("label").alias("nbr_label")))
-        step = (labels.join(prop, "doc_id", "left")
-                .select("doc_id",
-                        F.least(F.col("label"),
-                                F.coalesce("nbr_label", "label"))
-                        .alias("label")))
-        hop = step.select(F.col("doc_id").alias("label"),
-                          F.col("label").alias("label2"))
-        new_labels = (step.join(hop, "label", "left")
-                      .select("doc_id",
-                              F.least(F.col("label"),
-                                      F.coalesce("label2", "label"))
-                              .alias("label"))
-                      .localCheckpoint(eager=True))
-        cur_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    return labels, rounds, converged
-
-
-def min_label_components(spark, pairs: DataFrame,
-                         warn_tag: str = "min_label_components") -> DataFrame:
-    """Connected components over a (src, dst) pair frame → (doc_id,
-    label) for every edge-touched vertex, label = the component's MIN
-    vertex. Works for any orderable vertex type (long doc_ids, string
-    conv_ids). Two paths on the same fixpoint: pair sets that fit on the
-    driver (<= SMALL_GRAPH_MAX_PAIRS — dedup pair sets are bounded by
-    the star-capped LSH buckets and orders of magnitude smaller than the
-    corpus) finish with one collect + union-find; larger graphs run
-    distributed min-label propagation with pointer doubling
-    (_propagate_min_labels). Shared by dd_dup_clusters (doc grain) and
-    the conversation-grain near-dup gate (pipeline/curate_convs.py)."""
-    pairs = pairs.persist()
-    n_pairs = pairs.count()
-
-    if n_pairs <= SMALL_GRAPH_MAX_PAIRS:
-        vtype = pairs.schema["src"].dataType.simpleString()
-        labels = spark.createDataFrame(
-            _union_find_min_labels(
-                (r.src, r.dst) for r in pairs.collect()),
-            f"doc_id {vtype}, label {vtype}")
-        pairs.unpersist()
-        return labels
-
-    # symmetrize with a single-pass explode, NOT a self-union: a union
-    # with the transpose references each pair source twice, and before
-    # the persist materializes that recomputes the whole upstream
-    # pipeline a second time (measured 2x the edge-build wall)
-    edges = (pairs.select(F.explode(F.array(
-                 F.struct(F.col("src"), F.col("dst")),
-                 F.struct(F.col("dst").alias("src"),
-                          F.col("src").alias("dst")))).alias("e"))
-             .select("e.src", "e.dst")
-             .distinct()
-             .persist())
-    # materialize edges BEFORE releasing pairs: persist() is lazy, and
-    # dropping the pair cache first would make edges' first action
-    # recompute the whole upstream pair pipeline (MinHash banding +
-    # candidate join) a second time
-    edges.count()
-    pairs.unpersist()
-
-    # hard safety cap only — iterate to the FIXPOINT. With pointer
-    # doubling the cap is ~2^50 diameter, unreachable; stopping early
-    # would silently split one real cluster into several.
-    labels, _rounds, converged = _propagate_min_labels(edges, max_rounds=50)
-    edges.unpersist()
-    if not converged:
-        import warnings
-        warnings.warn(f"{warn_tag}: label propagation hit the 50-round "
-                      "safety cap before the fixpoint — clusters may be "
-                      "split; raise the cap for this corpus")
-    return labels
-
-
 def dd_dup_clusters(spark, sf_dir):
     """Duplicate CLUSTERS from candidate pairs: connected components via
     iterative min-label propagation (the step after pair generation every
@@ -4030,7 +3694,7 @@ def dd_dup_clusters(spark, sf_dir):
     (md5-reproducible) edge set; pytest additionally verifies against a
     driver-side union-find at test scale."""
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    norm = F.md5(F.regexp_replace(F.lower(F.col("text")), r"[ \t\n\x0b\f\r]+", " "))
+    norm = content_md5(F.col("text"))
     exact = (docs.withColumn("h", norm)
              .withColumn("keep", F.min("doc_id").over(Window.partitionBy("h")))
              .where(F.col("doc_id") != F.col("keep"))
@@ -4061,7 +3725,7 @@ def dd_effective_tokens(spark, sf_dir):
     anyway) + one tiny groupBy(source); token counts are exact integers
     on both engines."""
     docs = _docs(spark, sf_dir)
-    norm = F.md5(F.regexp_replace(F.lower(F.col("text")), r"[ \t\n\x0b\f\r]+", " "))
+    norm = content_md5(F.col("text"))
     toks = F.size(F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                           r"[ \t\n\x0b\f\r]+")).cast("long")
     d = (docs.select("doc_id", "source", norm.alias("h"),
@@ -4120,7 +3784,7 @@ def dd_cluster_canonical(spark, sf_dir):
     corpus, so the extra ranking shuffle is on the small side. Token
     count is an exact integer on both engines (no float argmax)."""
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    norm = F.md5(F.regexp_replace(F.lower(F.col("text")), r"[ \t\n\x0b\f\r]+", " "))
+    norm = content_md5(F.col("text"))
     exact = (docs.withColumn("h", norm)
              .withColumn("keep", F.min("doc_id").over(Window.partitionBy("h")))
              .where(F.col("doc_id") != F.col("keep"))
@@ -4335,9 +3999,7 @@ def dd_syndication_matrix(spark, sf_dir):
     C(n_sources, 2) BY CONSTRUCTION (source cardinality, not corpus
     size), so no hot text ever explodes — and a tiny pair rollup."""
     docs = _docs(spark, sf_dir)
-    key = F.md5(F.regexp_replace(F.lower(F.coalesce(_synd_text(),
-                                                    F.lit(""))),
-                                 r"[ \t\n\x0b\f\r]+", " "))
+    key = content_md5(F.coalesce(_synd_text(), F.lit("")))
     per = (docs.select(key.alias("h"), "source").distinct().persist())
     a, b = per.alias("a"), per.alias("b")
     pairs = a.join(b, (F.col("a.h") == F.col("b.h"))
@@ -4396,9 +4058,7 @@ def dd_novelty_by_source(spark, sf_dir):
                  F.sum("n_sh").cast("long").alias("n_shingles"),
                  F.sum("n_novel").cast("long").alias("n_novel"))
             .withColumn("novelty_bp",
-                        F.floor(F.col("n_novel").cast("double")
-                                / F.col("n_shingles") * 10000)
-                        .cast("long"))
+                        floor_bp("n_novel", "n_shingles").cast("long"))
             .orderBy("source"))
 
 

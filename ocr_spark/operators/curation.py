@@ -6,27 +6,23 @@ The funnels compose the pipeline's flag plans, so each query imports its
 pipeline inside the function body: importing the operator layer never
 loads pipeline/ (the extraction queries call extract_turns the same
 way). The thresholds both the Spark plan and the oracle SQL embed live
-here, and the pipelines import them.
+in functions/quality.py, which the pipelines import too.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.hashing import smp_threshold_u64
+from ..functions.classifier import CLS_THRESHOLD, classifier_score_sql
+from ..functions.hashing import SMP_RATES, smp_threshold_u64
 from ..functions.minhash import MINHASH_CTES
+from ..functions.quality import (BENCH_MOD, CONTAM_NGRAM, CONV_BENCH_RATE,
+                                 CONV_KEEP_RATE, DEGEN_DUP_BP,
+                                 MAX_DUP_BIGRAM_BP, MAX_SHARED_CHUNK_BP,
+                                 MAX_TOP_TOKEN_BP, MIN_CONV_CHARS, MIN_TOKENS)
+from ..functions.text import CHUNK_TOKENS
 from ..sources.synthetic import agent_transcripts, agent_transcripts_sql
-from .classifier import CLS_THRESHOLD, classifier_score_sql
-from .extraction import DEGEN_DUP_BP, degen_turns_ctes
-from .quality import (BENCH_MOD, CHUNK_TOKENS, CONTAM_NGRAM,
-                      MAX_DUP_BIGRAM_BP, MAX_TOP_TOKEN_BP, MIN_TOKENS,
-                      SMP_RATES)
-
-MAX_SHARED_CHUNK_BP = 5000  # C4: ≥ half the chunks shared → near-dup drop
-
-MIN_CONV_CHARS = 100     # assembled-conversation char floor
-CONV_KEEP_RATE = 0.8     # deterministic sampling keep rate
-CONV_BENCH_RATE = 0.125  # md5 slice of convs that plays the eval suite
+from .extraction import degen_turns_ctes
 
 
 def curate_funnel(spark, sf_dir) -> DataFrame:

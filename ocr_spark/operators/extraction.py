@@ -11,10 +11,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.hashing import md5_long
+from ..functions.frames import len_bucket
+from ..functions.hashing import content_md5, md5_long
 from ..functions.minhash import (MINHASH_CTES, lsh_candidate_pairs,
                                  minhash_bands, minhash_sig_stage)
-from ..functions.text import REFUSAL_MARKS, TOKENS_EXPR
+from ..functions.quality import (DEGEN_DUP_BP, DEGEN_MIN_TOKENS,
+                                 with_repetition_signals)
+from ..functions.text import (REFUSAL_MARKS, TOKENS_EXPR, lang_argmax_column,
+                              lang_hit_columns)
 from ..sources.synthetic import (BASE_EPOCH, agent_transcripts,
                                  agent_transcripts_sql)
 
@@ -1125,8 +1129,7 @@ def conv_turn_dedup(spark, sf_dir):
                  (ln % 3).cast("string"), F.lit(")"))
     ).otherwise(F.col("text"))
     asst = t.where(F.col("role") == "assistant").select(
-        F.md5(F.regexp_replace(F.lower(turn_text), r"[ \t\n\x0b\f\r]+", " "))
-        .alias("text_hash"),
+        content_md5(turn_text).alias("text_hash"),
         "conv_id",
         F.format_string("%s#%010d", F.col("conv_id"), F.col("turn_idx"))
         .alias("loc"))
@@ -1379,7 +1382,6 @@ def conv_lang_mix(spark, sf_dir):
     a window over the per-(conv, lang) count frame — rows bounded by
     conversations × 5 labels, not by turns. Dominant share is integer
     basis points (exact on both engines)."""
-    from .corpus import lang_argmax_column, lang_hit_columns
     t = agent_transcripts(spark, sf_dir)
     pred = (t.select("conv_id", *lang_hit_columns(F.col("text")))
             .withColumn("pred_lang", lang_argmax_column())
@@ -1445,13 +1447,6 @@ ORDER BY a.conv_id
 """
 
 
-# dup-bigram share (basis points) at or above which an assistant turn is
-# flagged as degenerate decoding (Gopher gates documents near 0.2; looping
-# generations sit far above it)
-DEGEN_DUP_BP = 2000
-DEGEN_MIN_TOKENS = 20
-
-
 def conv_degenerate_scan(spark, sf_dir):
     """Degenerate-decoding scan over assistant turns — the screen a
     transcript-curation pipeline runs for looping generations (an
@@ -1462,12 +1457,11 @@ def conv_degenerate_scan(spark, sf_dir):
     turns and the worst share.
 
     Scale shape: the per-turn signal is the map-only sort-run fold of
-    quality.with_repetition_signals — turn-local, zero corpus shuffle;
+    with_repetition_signals — turn-local, zero corpus shuffle;
     only (conv_id, dup_bp) rows reach the one keyed aggregation. The
     DuckDB oracle recomputes the same numbers via the keyed
     explode + GROUP BY form (differential across two algorithms, like
     txt_repetition). Share is integer basis points — exact."""
-    from .quality import with_repetition_signals
     t = agent_transcripts(spark, sf_dir)
     asst = (t.where(F.col("role") == "assistant")
             .selectExpr("conv_id", f"{TOKENS_EXPR} AS t")
@@ -1677,7 +1671,6 @@ def conv_system_templates(spark, sf_dir):
     conversations (including system-less ones, which group under the
     empty-concat hash like any other template). Uses conv_mod=25 (the
     role-mixing surface)."""
-    from .corpus import content_md5
     t = agent_transcripts(spark, sf_dir, conv_mod=25)
     # persist: the counts branch AND the n_convs total both read the
     # transcript-assembly aggregation (the two-branch persist convention)
@@ -1733,13 +1726,13 @@ def conv_turn_profile(spark, sf_dir):
     drift baseline (the corpus-stats artifact's bucket definition at the
     role grain): how long are user prompts vs assistant replies vs tool
     outputs, as a bucketed histogram with integer shares. Uses the
-    SHARED len_bucket definition (corpus.len_bucket — a snapshot built
-    yesterday must bucket exactly like a profile computed today) over
-    character lengths, and conv_mod=25 so every role appears.
+    SHARED len_bucket definition (functions/frames.len_bucket — a
+    snapshot built yesterday must bucket exactly like a profile computed
+    today) over character lengths, and conv_mod=25 so every role
+    appears.
 
     Scale shape: one keyed (role, bucket) count with map-side combine +
     a tiny per-role total joined back (broadcast — roles are four)."""
-    from .corpus import len_bucket
     t = agent_transcripts(spark, sf_dir, conv_mod=25)
     binned = t.select(
         "role",

@@ -29,83 +29,25 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from ..functions.hashing import md5_long, smp_threshold_u64
-from ..functions.text import TOKENS_EXPR, URL_RE
+from ..functions.classifier import (CLS_THRESHOLD, classifier_score_expr,
+                                    classifier_score_sql)
+from ..functions.frames import (PACK_SEQ_LEN, len_bucket, len_bucket_frame,
+                                pack_placement_from, sharded_prefix_sum)
+from ..functions.hashing import (N_TRAIN_SHARDS, SMP_RATES, content_md5,
+                                 md5_long, shard_key_column, smp_threshold_u64,
+                                 stratified_keep)
+from ..functions.quality import (BENCH_MOD, BIGINT_ONE, BIGINT_ZERO,
+                                 CONTAM_NGRAM, MAX_DUP_BIGRAM_BP,
+                                 MAX_TOP_TOKEN_BP, MIN_TOKENS, floor_bp,
+                                 gopher_fail, with_repetition_signals)
+from ..functions.text import (CHUNK_TOKENS, TOKENS_EXPR, URL_RE,
+                              token_chunks_expr)
 from ..sources.synthetic import agent_transcripts, agent_transcripts_sql
-from .corpus import _STOPWORDS_EN, _URL_KEYED_CTES, _docs, len_bucket
+from .corpus import _STOPWORDS_EN, _URL_KEYED_CTES, _docs
 
 # ---------------------------------------------------------------------------
 # Repetition signals (Gopher-style quality filters)
 # ---------------------------------------------------------------------------
-
-# Gopher-style gate thresholds (shared by txt_gate_agreement and the
-# curation funnel, which imports them from here — defining them in the
-# pipeline layer would make quality -> curate circular)
-MIN_TOKENS = 10            # token floor
-MAX_TOP_TOKEN_BP = 2000    # most-frequent token <= 20% of doc
-MAX_DUP_BIGRAM_BP = 3000   # <= 30% of bigram instances repeated
-
-
-_ONE = "CAST(1 AS BIGINT)"
-_ZERO = "CAST(0 AS BIGINT)"
-# run-length fold state over a SORTED gram array: prev element, current
-# run length, longest run seen (= max multiplicity), instances belonging
-# to runs of length ≥ 2 (= instances whose gram repeats in the doc).
-# The second member of a run credits both itself and the run opener.
-_RUN_ZERO = (f"named_struct('prev', CAST(NULL AS STRING), 'run', {_ZERO}, "
-             f"'best', {_ZERO}, 'dup', {_ZERO})")
-_RUN_STEP = (f"(a, x) -> IF(x <=> a.prev, "
-             f"named_struct('prev', x, 'run', a.run + {_ONE}, "
-             f"'best', greatest(a.best, a.run + {_ONE}), "
-             f"'dup', a.dup + IF(a.run = {_ONE}, {_ONE} + {_ONE}, {_ONE})), "
-             f"named_struct('prev', x, 'run', {_ONE}, "
-             f"'best', greatest(a.best, {_ONE}), 'dup', a.dup))")
-
-
-def _run_fold(sorted_arr: str, finish: str) -> str:
-    """One O(n) element-wise fold over an already-sorted gram array.
-
-    CRITICAL: the lambda references ONLY its own variables (a, x). A
-    lambda that touches an outer computed column (e.g. `_bg[i]` over an
-    index sequence) re-evaluates that column's FULL defining expression
-    on every iteration after Catalyst collapses the projections —
-    measured 273 s for 494 small docs (the tokenizer regex re-ran per
-    gram per step). With element folds the array argument is evaluated
-    once per row and iteration is pure accumulator work."""
-    return f"aggregate({sorted_arr}, {_RUN_ZERO}, {_RUN_STEP}, a -> {finish})"
-
-
-def with_repetition_signals(df, tcol: str = "t"):
-    """Append the per-doc gram-multiplicity signals (n_tok, max_tok,
-    max_bg, n_bg, dup_bg — NULL when the doc has < 2 tokens, mirroring
-    the keyed form's absent-row semantics) as MAP-ONLY column
-    expressions over the token-array column `tcol`.
-
-    Per-doc statistics never need a corpus-wide shuffle: sorting the
-    doc's own gram array makes max multiplicity a run-length fold and
-    "this instance's gram repeats" a run-length-≥-2 count, O(n log n)
-    per doc inside one projection. The explode + groupBy(doc_id, gram)
-    twin computes the same numbers but shuffles ~every distinct
-    (doc, gram) pair in the corpus — at 100 TB that is a full-corpus
-    exchange for a doc-local answer. The keyed form survives as the
-    differential reference (tests/test_quality_ops.py rebuilds it
-    inline; the DuckDB oracles replay it in SQL), so the two
-    implementations keep checking each other."""
-    few = f"size({tcol}) < 2"
-    # bigrams via zip_with(t, t[1:]) — index-free, so the lambda never
-    # touches an outer column (see _run_fold); the trailing NULL from
-    # the length mismatch is filtered by a lambda-var-only predicate
-    bgs = (f"array_sort(filter(zip_with({tcol},"
-           f" slice({tcol}, 2, size({tcol})), (p, q) -> concat(p, ' ', q)),"
-           f" x -> x IS NOT NULL))")
-    return df.selectExpr(
-        "*",
-        f"IF({few}, NULL, CAST(size({tcol}) AS BIGINT)) AS n_tok",
-        f"IF({few}, NULL, {_run_fold(f'array_sort({tcol})', 'a.best')})"
-        " AS max_tok",
-        f"IF({few}, NULL, {_run_fold(bgs, 'a.best')}) AS max_bg",
-        f"IF({few}, NULL, CAST(size({tcol}) - 1 AS BIGINT)) AS n_bg",
-        f"IF({few}, NULL, {_run_fold(bgs, 'a.dup')}) AS dup_bg")
 
 
 def txt_repetition(spark, sf_dir):
@@ -119,16 +61,12 @@ def txt_repetition(spark, sf_dir):
     driver compare is differential across both algorithms."""
     docs = _docs(spark, sf_dir).selectExpr(
         "doc_id", f"{TOKENS_EXPR} AS t").where("size(t) >= 2")
-
-    def _bp(a, b):
-        return F.floor(F.col(a).cast("double") / F.col(b) * 10000)
-
     return (with_repetition_signals(docs)
             .select("doc_id",
                     F.col("n_tok").cast("long").alias("n_tokens_b"),
-                    _bp("max_tok", "n_tok").alias("top_token_bp"),
-                    _bp("max_bg", "n_bg").alias("top_bigram_bp"),
-                    _bp("dup_bg", "n_bg").alias("dup_bigram_bp"))
+                    floor_bp("max_tok", "n_tok").alias("top_token_bp"),
+                    floor_bp("max_bg", "n_bg").alias("top_bigram_bp"),
+                    floor_bp("dup_bg", "n_bg").alias("dup_bigram_bp"))
             .orderBy("doc_id"))
 
 
@@ -167,8 +105,6 @@ ORDER BY uni.doc_id
 # Cross-doc duplicate chunks (C4 line-level dedup analog)
 # ---------------------------------------------------------------------------
 
-CHUNK_TOKENS = 10
-
 
 def dd_chunk_dup(spark, sf_dir):
     """C4-style line-level dedup signal on token chunks (the transcripts
@@ -180,10 +116,7 @@ def dd_chunk_dup(spark, sf_dir):
         _docs(spark, sf_dir).selectExpr("doc_id", f"{TOKENS_EXPR} AS t")
         .selectExpr(
             "doc_id",
-            f"explode(transform("
-            f" sequence(0, cast(ceil(size(t) / {CHUNK_TOKENS}.0) AS int) - 1),"
-            f" i -> array_join(slice(t, i * {CHUNK_TOKENS} + 1,"
-            f" {CHUNK_TOKENS}), ' '))) AS chunk")
+            f"explode({token_chunks_expr('t')}) AS chunk")
         .select("doc_id", md5_long(F.col("chunk")).alias("chunk_hash")))
     stats = (chunks.groupBy("chunk_hash")
              .agg(F.countDistinct("doc_id").alias("n_docs")))
@@ -193,8 +126,7 @@ def dd_chunk_dup(spark, sf_dir):
                  F.sum(F.when(F.col("n_docs") >= 2, 1).otherwise(0))
                  .cast("long").alias("n_shared"))
             .select("doc_id", "n_chunks", "n_shared",
-                    F.floor(F.col("n_shared").cast("double")
-                            / F.col("n_chunks") * 10000).alias("shared_bp"))
+                    floor_bp("n_shared", "n_chunks").alias("shared_bp"))
             .orderBy("doc_id"))
 
 
@@ -247,10 +179,7 @@ def dd_chunk_dedup_strip(spark, sf_dir):
             "doc_id",
             f"CAST(ceil(size(t) / {CHUNK_TOKENS}.0) AS BIGINT)"
             " AS n_chunks_in",
-            f"posexplode(transform("
-            f" sequence(0, cast(ceil(size(t) / {CHUNK_TOKENS}.0) AS int) - 1),"
-            f" i -> array_join(slice(t, i * {CHUNK_TOKENS} + 1,"
-            f" {CHUNK_TOKENS}), ' '))) AS (idx, chunk)"))
+            f"posexplode({token_chunks_expr('t')}) AS (idx, chunk)"))
     wk = Window.partitionBy("chunk").orderBy("doc_id", "idx")
     kept = (chunks.withColumn("rk", F.row_number().over(wk))
             .where(F.col("rk") == 1))
@@ -363,10 +292,8 @@ def dd_substring_dup(spark, sf_dir):
                     F.coalesce("n_fps", F.lit(0)).cast("long").alias("n_fps"),
                     F.coalesce("n_shared", F.lit(0)).cast("long")
                     .alias("n_shared"),
-                    F.coalesce(
-                        F.floor(F.col("n_shared").cast("double")
-                                / F.col("n_fps") * 10000),
-                        F.lit(0)).cast("long").alias("shared_bp"))
+                    F.coalesce(floor_bp("n_shared", "n_fps"),
+                               F.lit(0)).cast("long").alias("shared_bp"))
             .orderBy("doc_id"))
 
 
@@ -411,9 +338,6 @@ ORDER BY d.doc_id
 # ---------------------------------------------------------------------------
 # Benchmark contamination (n-gram overlap against a held-out set)
 # ---------------------------------------------------------------------------
-
-BENCH_MOD = 97        # doc_id % 97 == 0 plays the benchmark/eval set
-CONTAM_NGRAM = 5
 
 
 def txt_contamination(spark, sf_dir):
@@ -543,17 +467,6 @@ FROM p ORDER BY doc_id
 BLOCK_PHRASES = ("click here", "lorem ipsum", "subscribe now")
 
 
-def blocklist_reason_col(text_col):
-    """Block-reason Column for any text Column: the FIRST matching
-    BLOCK_PHRASES entry in list order, else 'kept'. Pure expression."""
-    low = F.lower(F.coalesce(text_col, F.lit("")))
-    reason = F.lit("kept")
-    for phrase in reversed(BLOCK_PHRASES):  # earlier phrases win
-        reason = F.when(low.contains(phrase),
-                        F.lit(phrase)).otherwise(reason)
-    return reason
-
-
 def txt_blocklist_filter(spark, sf_dir):
     """Phrase-blocklist gate (the C4 badwords/boilerplate filter shape):
     a document is blocked when its lowercased text contains any blocklist
@@ -572,8 +485,12 @@ def txt_blocklist_filter(spark, sf_dir):
                F.lit(" Lorem Ipsum dolor sit")).otherwise(F.lit("")),
         F.when(F.col("doc_id") % 13 == 11,
                F.lit(" SUBSCRIBE NOW friends")).otherwise(F.lit("")))
-    return (docs.select("source",
-                        blocklist_reason_col(payload).alias("block_reason"))
+    low = F.lower(F.coalesce(payload, F.lit("")))
+    reason = F.lit("kept")
+    for phrase in reversed(BLOCK_PHRASES):  # earlier phrases win
+        reason = F.when(low.contains(phrase),
+                        F.lit(phrase)).otherwise(reason)
+    return (docs.select("source", reason.alias("block_reason"))
             .groupBy("source", "block_reason")
             .agg(F.count("*").cast("long").alias("n_docs"))
             .orderBy("source", "block_reason"))
@@ -607,11 +524,6 @@ FROM p GROUP BY 1, 2 ORDER BY source, block_reason
 # Sampling / data mixing
 # ---------------------------------------------------------------------------
 
-# per-language keep rates (downsample the head language, keep the tail) —
-# the thresholds are embedded as exact integer literals in BOTH engines,
-# so the sampling decision is bit-identical regardless of float handling
-SMP_RATES = {"en": 0.3, "de": 1.0, "fr": 1.0, "es": 1.0, "zh": 0.5}
-
 
 def smp_stratified(spark, sf_dir):
     """Deterministic stratified sampling for data mixing: a doc is kept
@@ -620,12 +532,7 @@ def smp_stratified(spark, sf_dir):
     same fate on any cluster, any partitioning, any engine — the property
     that makes corpus sampling reproducible and resumable at 100 TB."""
     docs = _docs(spark, sf_dir)
-    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":strat")))
-    kept = F.lit(False)
-    for lang, rate in SMP_RATES.items():
-        thr = smp_threshold_u64(rate) - 2**63  # signed-space threshold
-        kept = F.when(F.col("lang") == lang,
-                      h < F.lit(thr)).otherwise(kept)
+    kept = stratified_keep(SMP_RATES)
     return (docs.select("lang", kept.cast("int").alias("k"))
             .groupBy("lang")
             .agg(F.count("*").cast("long").alias("n_total"),
@@ -684,112 +591,6 @@ SELECT doc_id, lang,
 FROM documents WHERE doc_id IS NOT NULL
 ORDER BY lang, doc_id
 """
-
-
-PACK_SEQ_LEN = 512  # tokens per packed training sequence
-
-
-def token_shingle_expr(arr_col: str, n: int) -> str:
-    """SQL expression producing the DISTINCT n-token shingles of a STORED
-    token-array column. The index lambda is only safe on a materialized
-    array column — over a computed column it re-evaluates the tokenizer
-    per element (the HOF trap, CLAUDE.md) — so callers must ensure
-    arr_col is a plain stored column (persisted or read from disk)."""
-    joined = ", ".join(f"{arr_col}[i + {j}]" for j in range(n))
-    return (f"array_distinct(transform(sequence(0, size({arr_col}) - {n}),"
-            f" i -> concat_ws(' ', {joined})))")
-
-
-# coarse-bucket width for the distributed prefix sum: doc_id >> 52 is a
-# MONOTONE bucketing (arithmetic shift == floor-div by 2^52) cutting the
-# signed-64 id space into 4096 ordered buckets. Production doc ids are
-# md5-long surrogates (uniform over int64), so the stream splits evenly
-# across all 4096 buckets and the big per-shard windows parallelize
-# 4096-way; tiny dense test ids collapse into one bucket, degrading
-# gracefully to the single-window plan.
-PACK_BUCKET_SHIFT = 52
-
-
-def sharded_prefix_sum(df: DataFrame, shard_cols: list[str],
-                       value_col: str, out_col: str) -> DataFrame:
-    """Inclusive running sum of value_col over doc_id order within each
-    shard, as the classic DISTRIBUTED two-level scan — not one window per
-    shard (a shard is a whole language at 100 TB; a single window
-    partition would serialize it through one task):
-      1. per-(shard, coarse id bucket) subtotals — one keyed aggregation
-         with map-side combine;
-      2. running offsets across the ≤4096 buckets of each shard — a
-         window over the tiny subtotal frame;
-      3. intra-bucket running sums — windows keyed by (shard, bucket),
-         parallel across buckets;
-      4. out = bucket offset + intra-bucket prefix.
-    Bit-identical to the naive per-shard window (pinned in tests), so
-    window-form SQL oracles are unchanged."""
-    bucketed = df.withColumn(
-        "_id_bucket", F.shiftright(F.col("doc_id"), PACK_BUCKET_SHIFT))
-    wb = (Window.partitionBy(*shard_cols).orderBy("_id_bucket")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    # the offsets join keys are NULL-SAFE: a NULL shard value (e.g. a
-    # null lang) is one partition to the window-form oracle's PARTITION
-    # BY, so an equi-join here would silently drop those rows
-    o_cols = [F.col(c).alias(f"_o_{c}") for c in shard_cols]
-    offsets = (bucketed.groupBy(*shard_cols, "_id_bucket")
-               .agg(F.sum(value_col).alias("_bucket_total"))
-               .withColumn("_bucket_offset",
-                           F.sum("_bucket_total").over(wb)
-                           - F.col("_bucket_total"))
-               .select(*o_cols, F.col("_id_bucket").alias("_o_bucket"),
-                       "_bucket_offset"))
-    cond = F.col("_id_bucket").eqNullSafe(F.col("_o_bucket"))
-    for c in shard_cols:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"_o_{c}"))
-    wi = (Window.partitionBy(*shard_cols, "_id_bucket")
-          .orderBy("doc_id")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (bucketed
-            .withColumn("_intra", F.sum(value_col).over(wi))
-            .join(offsets, cond)
-            .withColumn(out_col, F.col("_bucket_offset") + F.col("_intra"))
-            .drop("_id_bucket", "_intra", "_bucket_offset", "_o_bucket",
-                  *[f"_o_{c}" for c in shard_cols]))
-
-
-def pack_placement_from(docs: DataFrame,
-                        token_col: str | None = None) -> DataFrame:
-    """Packing placement over any (doc_id, lang, source, text) frame:
-    where each document lands in its (lang, source) shard's fixed-length
-    token stream (tok_start = exclusive prefix via the distributed
-    sharded_prefix_sum). The shared core of smp_pack_sequences /
-    smp_pack_assembly and the end-to-end corpus pipeline's pack stage.
-
-    token_col: pack on a precomputed per-doc token count (e.g. the
-    persisted BPE tokenizer's n_bpe_tokens — pipeline/tokenizer.
-    pack_with_tokenizer) instead of the whitespace proxy."""
-    if token_col is None:
-        docs = docs.selectExpr(
-            "doc_id", "lang", "source",
-            f"CAST(size({TOKENS_EXPR}) AS BIGINT) AS n_tokens_b")
-    else:
-        docs = docs.selectExpr(
-            "doc_id", "lang", "source",
-            f"CAST({token_col} AS BIGINT) AS n_tokens_b")
-    return (sharded_prefix_sum(docs, ["lang", "source"], "n_tokens_b",
-                               "_cum")
-            .withColumn("tok_start", F.col("_cum") - F.col("n_tokens_b"))
-            .withColumn("first_seq",
-                        F.expr(f"tok_start DIV {PACK_SEQ_LEN}"))
-            .withColumn("seq_offset",
-                        F.expr(f"tok_start % {PACK_SEQ_LEN}"))
-            # a zero-token doc (reachable only via token_col — the
-            # whitespace path's split('') = [''] guarantees >= 1)
-            # occupies NO sequence; the raw formula would claim 1 or 0
-            # depending on position (DIV truncates toward zero, so
-            # (tok_start - 1) DIV L != floor division at tok_start = 0)
-            .withColumn("n_seqs", F.expr(
-                f"CASE WHEN n_tokens_b = 0 THEN CAST(0 AS BIGINT) ELSE "
-                f"(tok_start + n_tokens_b - 1) DIV {PACK_SEQ_LEN}"
-                f" - first_seq + 1 END"))
-            .drop("_cum"))
 
 
 def _pack_placement(spark, sf_dir):
@@ -1350,11 +1151,13 @@ GROUP BY doc_id ORDER BY doc_id
 # length 2 (multi-occurrence types); hapax = distinct types - multi.
 # Lambdas touch only lambda variables (see _run_fold).
 _MULTI_ZERO = (f"named_struct('prev', CAST(NULL AS STRING), "
-               f"'run', {_ZERO}, 'multi', {_ZERO})")
+               f"'run', {BIGINT_ZERO}, 'multi', {BIGINT_ZERO})")
 _MULTI_STEP = (f"(a, x) -> IF(x <=> a.prev, "
-               f"named_struct('prev', x, 'run', a.run + {_ONE}, "
-               f"'multi', a.multi + IF(a.run = {_ONE}, {_ONE}, {_ZERO})), "
-               f"named_struct('prev', x, 'run', {_ONE}, 'multi', a.multi))")
+               f"named_struct('prev', x, 'run', a.run + {BIGINT_ONE}, "
+               f"'multi', a.multi + IF(a.run = {BIGINT_ONE}, {BIGINT_ONE}, "
+               f"{BIGINT_ZERO})), "
+               f"named_struct('prev', x, 'run', {BIGINT_ONE}, "
+               f"'multi', a.multi))")
 
 
 def txt_ttr(spark, sf_dir):
@@ -1879,17 +1682,6 @@ GROUP BY source ORDER BY source
 # Training-shard assignment (deterministic global shuffle)
 # ---------------------------------------------------------------------------
 
-N_TRAIN_SHARDS = 16
-
-
-def shard_key_column():
-    """The canonical training-shuffle key: md5 long of doc_id||':shard'.
-    pipeline/shards.py derives shard membership AND within-shard order
-    from this same column, so the stats view below audits exactly the
-    placement the export writes."""
-    return md5_long(F.concat(F.col("doc_id").cast("string"),
-                             F.lit(":shard")))
-
 
 def smp_shard_assign(spark, sf_dir):
     """Per-shard audit of the deterministic training shuffle
@@ -2256,15 +2048,8 @@ def txt_chunk_windows(spark, sf_dir):
     the embedding stage consumes; nothing shuffles. Engine-exact: token
     split, slice, and join are pure string ops; the hash is the repo's
     md5-fold bridge."""
-    return (chunk_windows_from(_docs(spark, sf_dir))
-            .orderBy("doc_id", "chunk_idx"))
-
-
-def chunk_windows_from(docs: DataFrame) -> DataFrame:
-    """The chunking projection itself, unordered — a stateless map-only
-    plan (split → explode → slice)."""
     w, s = CHUNK_WINDOW, CHUNK_STRIDE
-    return (docs.selectExpr(
+    return (_docs(spark, sf_dir).selectExpr(
         "doc_id", "split(coalesce(text, ''), '[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+') AS tk")
         .selectExpr("doc_id", "tk", "CAST(size(tk) AS BIGINT) AS n")
         .selectExpr(
@@ -2279,7 +2064,8 @@ def chunk_windows_from(docs: DataFrame) -> DataFrame:
             "doc_id", "chunk_idx",
             "CAST(size(ck) AS BIGINT) AS n_tok_c",
             "array_join(ck, ' ') AS chunk_text")
-        .withColumn("chunk_hash", md5_long(F.col("chunk_text"))))
+        .withColumn("chunk_hash", md5_long(F.col("chunk_text")))
+        .orderBy("doc_id", "chunk_idx"))
 
 
 TXT_CHUNK_SQL = f"""
@@ -2334,10 +2120,7 @@ def dd_boilerplate_topk(spark, sf_dir):
         _docs(spark, sf_dir).selectExpr("doc_id", f"{TOKENS_EXPR} AS t")
         .selectExpr(
             "doc_id",
-            f"explode(transform("
-            f" sequence(0, cast(ceil(size(t) / {CHUNK_TOKENS}.0) AS int) - 1),"
-            f" i -> array_join(slice(t, i * {CHUNK_TOKENS} + 1,"
-            f" {CHUNK_TOKENS}), ' '))) AS chunk"))
+            f"explode({token_chunks_expr('t')}) AS chunk"))
     return (chunks.groupBy("chunk")
             .agg(F.count("*").cast("long").alias("n_occ"),
                  F.countDistinct("doc_id").cast("long").alias("n_docs"))
@@ -2563,20 +2346,14 @@ def txt_gate_agreement(spark, sf_dir):
     verdicts ride the same single scan (map-only signals + the foldable
     classifier expression), one keyed aggregation — no corpus shuffle
     beyond the final tiny group."""
-    from .classifier import CLS_THRESHOLD, classifier_score_expr
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .where(F.col("doc_id").isNotNull())
             .selectExpr("doc_id", "lang", f"{TOKENS_EXPR} AS t"))
     sig = with_repetition_signals(docs)
-    bp = lambda a, b: F.floor(F.col(a).cast("double") / F.col(b) * 10000)  # noqa: E731
-    gopher_fail = (F.col("n_tok").isNull()
-                   | (F.col("n_tok") < MIN_TOKENS)
-                   | (bp("max_tok", "n_tok") > MAX_TOP_TOKEN_BP)
-                   | (bp("dup_bg", "n_bg") > MAX_DUP_BIGRAM_BP))
     cls_pass = F.expr(classifier_score_expr("t")) > CLS_THRESHOLD
     return (sig
             .select("lang",
-                    (~gopher_fail).cast("int").alias("gopher_pass"),
+                    (~gopher_fail()).cast("int").alias("gopher_pass"),
                     cls_pass.cast("int").alias("cls_pass"))
             .groupBy("lang", "gopher_pass", "cls_pass")
             .agg(F.count("*").cast("long").alias("n_docs"))
@@ -2584,7 +2361,6 @@ def txt_gate_agreement(spark, sf_dir):
 
 
 def _txt_gate_agreement_sql() -> str:
-    from .classifier import CLS_THRESHOLD, classifier_score_sql
     return f"""
 WITH docs AS (
   SELECT doc_id, lang,
@@ -2631,23 +2407,6 @@ FROM verdicts GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 # ---------------------------------------------------------------------------
 # Corpus drift monitoring: batch-over-batch distribution shift
 # ---------------------------------------------------------------------------
-
-def len_bucket_frame(docs):
-    """Per-doc (doc_id, source, bucket, n_tok) where bucket is the
-    floor-log2 token-length bucket (length(bin(n)) — exact integer on
-    both engines; 0 for empty docs). ONE shared definition for the
-    txt_drift_tvd read and the persisted corpus-stats snapshot artifact
-    (pipeline/corpus_stats.py), so a snapshot built yesterday stays
-    comparable to a profile computed today."""
-    tok_arr = F.filter(
-        F.split(F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))),
-                r"[ \t\n\x0b\f\r]+"),
-        lambda x: x != "")
-    n_tok = F.size(tok_arr).cast("long")
-    return docs.select(
-        "doc_id", "source",
-        len_bucket(n_tok).alias("bucket"),
-        n_tok.alias("n_tok"))
 
 
 def txt_drift_tvd(spark, sf_dir):
@@ -2810,33 +2569,17 @@ FROM per_doc GROUP BY bucket_size ORDER BY bucket_size
 # transcendental in the oracle pair. The zero accumulator carries n
 # (evaluated once per row); the lambda touches ONLY (a, x) per the
 # _run_fold discipline.
-_ENT_ZERO = (f"named_struct('prev', CAST(NULL AS STRING), 'run', {_ZERO}, "
-             "'n', CAST(size(t) AS BIGINT), 'acc', " + _ZERO + ")")
+_ENT_ZERO = ("named_struct('prev', CAST(NULL AS STRING), "
+             f"'run', {BIGINT_ZERO}, "
+             "'n', CAST(size(t) AS BIGINT), 'acc', " + BIGINT_ZERO + ")")
 _ENT_FLUSH = ("a.acc + IF(a.run > {one}, "
               "a.run * CAST(length(bin(a.n DIV a.run)) - 1 AS BIGINT), "
-              "{zero})").format(one=_ZERO, zero=_ZERO)
+              "{zero})").format(one=BIGINT_ZERO, zero=BIGINT_ZERO)
 _ENT_STEP = (f"(a, x) -> IF(x <=> a.prev, "
-             f"named_struct('prev', x, 'run', a.run + {_ONE}, "
+             f"named_struct('prev', x, 'run', a.run + {BIGINT_ONE}, "
              f"'n', a.n, 'acc', a.acc), "
-             f"named_struct('prev', x, 'run', {_ONE}, "
+             f"named_struct('prev', x, 'run', {BIGINT_ONE}, "
              f"'n', a.n, 'acc', {_ENT_FLUSH}))")
-
-
-def with_entropy_bits(df: DataFrame) -> DataFrame:
-    """Append (n_tokens, ent_bits, bpt_bp) to a frame with a `text`
-    column — the map-only integer-bits entropy fold of txt_entropy.
-    Rows whose token array is empty/NULL are dropped (entropy
-    undefined)."""
-    fold = (f"aggregate(array_sort(t), {_ENT_ZERO}, {_ENT_STEP}, "
-            f"a -> {_ENT_FLUSH})")
-    return (df.selectExpr("*", f"filter({TOKENS_EXPR}, x -> x <> '') AS t")
-            .where("size(t) >= 1")
-            .selectExpr("* EXCEPT (t)",
-                        "CAST(size(t) AS BIGINT) AS n_tokens",
-                        f"{fold} AS ent_bits")
-            .selectExpr("*",
-                        "CAST((ent_bits * 10000) DIV n_tokens AS BIGINT)"
-                        " AS bpt_bp"))
 
 
 def txt_entropy(spark, sf_dir):
@@ -2853,8 +2596,17 @@ def txt_entropy(spark, sf_dir):
     shuffles. The DuckDB oracle recomputes the same integers via the
     keyed explode + GROUP BY form, so the compare is differential across
     two algorithms."""
-    return (with_entropy_bits(_docs(spark, sf_dir).select("doc_id", "text"))
-            .select("doc_id", "n_tokens", "ent_bits", "bpt_bp")
+    fold = (f"aggregate(array_sort(t), {_ENT_ZERO}, {_ENT_STEP}, "
+            f"a -> {_ENT_FLUSH})")
+    return (_docs(spark, sf_dir)
+            .selectExpr("doc_id",
+                        f"filter({TOKENS_EXPR}, x -> x <> '') AS t")
+            .where("size(t) >= 1")
+            .selectExpr("doc_id", "CAST(size(t) AS BIGINT) AS n_tokens",
+                        f"{fold} AS ent_bits")
+            .selectExpr("*",
+                        "CAST((ent_bits * 10000) DIV n_tokens AS BIGINT)"
+                        " AS bpt_bp")
             .orderBy("doc_id"))
 
 
@@ -3055,7 +2807,6 @@ def dd_dup_rate_by_gate(spark, sf_dir):
     the final rollup is two rows. The DuckDB oracle recomputes the gate
     via the keyed explode+GROUP BY form — differential across the two
     signal algorithms, like txt_repetition."""
-    from .corpus import content_md5
     docs = _docs(spark, sf_dir).selectExpr(
         "doc_id", "text", f"{TOKENS_EXPR} AS t")
     sig = with_repetition_signals(docs)
@@ -3065,13 +2816,7 @@ def dd_dup_rate_by_gate(spark, sf_dir):
     gated = sig.select(
         "doc_id",
         content_md5(F.coalesce(F.col("text"), F.lit(""))).alias("h"),
-        (F.coalesce(
-            (F.col("n_tok") >= MIN_TOKENS)
-            & (F.floor(F.col("max_tok").cast("double")
-                       / F.col("n_tok") * 10000) <= MAX_TOP_TOKEN_BP)
-            & (F.floor(F.col("dup_bg").cast("double")
-                       / F.col("n_bg") * 10000) <= MAX_DUP_BIGRAM_BP),
-            F.lit(False)).alias("gate_pass"))).persist()
+        (~gopher_fail()).alias("gate_pass")).persist()
     dup_counts = gated.groupBy("h").agg(F.count("*").alias("n_h"))
     return (gated.join(dup_counts, "h")
             .groupBy("gate_pass")
@@ -3245,7 +2990,7 @@ def smp_eval_holdout(spark, sf_dir):
     decision to be stable."""
     docs = _docs(spark, sf_dir)
     h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":eval")))
-    # strata = THE shared len_bucket definition (corpus.len_bucket) over
+    # strata = THE shared len_bucket definition (functions/frames) over
     # the non-empty token count, so the holdout's length match can never
     # drift from the drift-baseline buckets (txt_drift_tvd, corpus-stats)
     n_tok = F.expr(f"CAST(size(filter({TOKENS_EXPR}, x -> x <> '')) AS BIGINT)")

@@ -19,9 +19,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from ..functions.frames import array_dot
-from ..operators.corpus import (N_LSH_MULTIPROBE, N_LSH_TOPK_PLANES,
-                                lsh_code_frame)
+from ..functions.frames import (N_LSH_MULTIPROBE, N_LSH_TOPK_PLANES,
+                                array_dot, lsh_code_frame)
 from . import artifact
 
 INDEX_VERSION = 1

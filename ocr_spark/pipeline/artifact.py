@@ -64,6 +64,21 @@ def commit_part(out_dir: str, table) -> None:
     os.replace(tmp, os.path.join(out_dir, name))
 
 
+def read_part_column(out_dir: str, column: str) -> set:
+    """The distinct values of one column over the committed parquet parts
+    at out_dir, read with pyarrow (no Spark job). Empty when nothing is
+    committed: no directory, or only `_`/`.`-prefixed files (a crashed
+    commit_part's tmp). An unreadable part raises pyarrow's ArrowInvalid,
+    a ValueError naming the file."""
+    if not os.path.isdir(out_dir):
+        return set()
+    import pyarrow.dataset as ds
+    parts = ds.dataset(out_dir, format="parquet")
+    if not parts.files:
+        return set()
+    return set(parts.to_table(columns=[column]).column(column).to_pylist())
+
+
 def read(out_dir: str, name: str = MANIFEST):
     """The committed manifest, or None when there is none."""
     path = os.path.join(out_dir, name)

@@ -14,7 +14,7 @@ never in series. This module is the seventh artifact in the layer (ann,
 dedup, tokenizer, classifier, compaction, corpus-stats):
 
 - build_bloom_filter: size m from the corpus count
-  (corpus.bloom_bits_build: m = 2^(bit_length(n)+extra), 8n < m ≤ 16n),
+  (bloom_bits_build: m = 2^(bit_length(n)+extra), 8n < m ≤ 16n),
   fold every content hash's BLOOM_K positions, commit the distinct
   position set + manifest. m is FROZEN in the manifest — every later
   probe and append must use the build-time modulus or the bits are
@@ -37,8 +37,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.corpus import (BLOOM_EXTRA_BITS, BLOOM_K,
-                                bloom_bits_build, bloom_probe_frame)
+from ..functions.hashing import (BLOOM_EXTRA_BITS, BLOOM_K,
+                                 bloom_probe_frame)
 from . import artifact
 
 BLOOM_VERSION = 1
@@ -59,6 +59,21 @@ def _bits_set(spark: SparkSession, data_dir: str) -> int:
 
 def _fill_bp(n_bits_set: int, m: int) -> int:
     return (n_bits_set * 10000) // m
+
+
+def bloom_bits_build(corpus_docs: DataFrame,
+                     extra_bits: int = BLOOM_EXTRA_BITS):
+    """Materialize the Bloom filter of a corpus's content hashes for
+    serving: returns
+    (bits DataFrame of distinct positions, m, n_keys). m is fixed
+    driver-side from ONE count (n_keys reuses it — no second input
+    scan, and the manifest's sizing claim can never disagree with its
+    own n_keys field)."""
+    n = corpus_docs.count()
+    m = 1 << (max(int(n), 1).bit_length() + extra_bits)
+    bits = (bloom_probe_frame(corpus_docs, m)
+            .select("pos").distinct())
+    return bits, m, int(n)
 
 
 def build_bloom_filter(spark: SparkSession, docs: DataFrame,

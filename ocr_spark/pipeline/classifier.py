@@ -1,14 +1,15 @@
 """Persisted quality-classifier artifact: train once, gate every crawl.
 
-The registry query (operators/classifier.txt_classifier_score) ships an
-in-module model trained at import on the deterministic built-in corpus;
-this module is the artifact around the same trainer — the shape a real
-deployment runs: train integer averaged-perceptron weights on ITS OWN
-bounded labeled sample (driver-side, like the IVF/PQ codebooks), commit
-the weight table + manifest, then score any corpus with a map-only
-projection GENERATED from the committed constants by the exact
-expression builder the oracle-paired query uses
-(operators/classifier.classifier_score_expr — shared provenance, so an
+The registry query (operators/classifier.txt_classifier_score) scores
+with the shipped model (functions/classifier.py), trained on the
+deterministic built-in corpus; this module is the artifact around the
+same trainer — the shape a real deployment runs: train integer
+averaged-perceptron weights on ITS OWN bounded labeled sample
+(driver-side, like the IVF/PQ codebooks), commit the weight table +
+manifest, then score any corpus with a map-only projection GENERATED
+from the committed constants by the exact expression builder the
+oracle-paired query uses
+(functions/classifier.classifier_score_expr — shared provenance, so an
 artifact score is engine-exact by the same argument).
 
 Scoring is the 100 TB side: the weights ride into one foldable literal
@@ -22,8 +23,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.classifier import (CLS_DIM, CLS_EPOCHS, CLS_THRESHOLD,
-                                    featurize, train_quality_classifier)
+from ..functions.classifier import (CLS_DIM, CLS_EPOCHS, CLS_THRESHOLD,
+                                    featurize, score_frame,
+                                    train_quality_classifier)
 from . import artifact
 
 CLASSIFIER_VERSION = 1
@@ -114,8 +116,7 @@ def score_with_model(spark: SparkSession, model_dir: str,
     """Score a documents frame with a committed classifier: the same
     map-only (doc_id, n_feats, score_sum, pred) projection as the
     oracle-paired query — literally the same builder
-    (operators/classifier.score_frame), generated from the ARTIFACT's
+    (functions/classifier.score_frame), generated from the ARTIFACT's
     constants."""
-    from ..operators.classifier import score_frame
     weights, bias, div_w, threshold = load_model(spark, model_dir)
     return score_frame(docs, weights, bias, div_w, threshold)

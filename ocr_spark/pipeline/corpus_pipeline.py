@@ -8,7 +8,7 @@
                ──curate────▶ quality / exact-dup / chunk-dup /
                              decontaminate / sample (pipeline/curate)
                ──pack──────▶ sequence-packing placement over the kept
-                             docs (quality.pack_placement_from)
+                             docs (functions/frames.pack_placement_from)
 
 Each stage writes its own artifact + manifest under the work dir, and the
 composed manifest chains the counts so the funnel is auditable end to
@@ -32,9 +32,9 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.hashing import md5_long
-from ..operators.corpus import lang_argmax_column, lang_hit_columns
-from ..operators.quality import PACK_SEQ_LEN, SMP_RATES, pack_placement_from
+from ..functions.frames import PACK_SEQ_LEN, pack_placement_from
+from ..functions.hashing import SMP_RATES, md5_long
+from ..functions.text import lang_argmax_column, lang_hit_columns
 from . import artifact
 from .curate import run_curation
 from .extract import run_extract_job

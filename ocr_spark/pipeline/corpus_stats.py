@@ -27,7 +27,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.quality import len_bucket_frame
+from ..functions.frames import len_bucket_frame
 from . import artifact
 
 STATS_VERSION = 1

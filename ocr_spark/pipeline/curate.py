@@ -1,6 +1,6 @@
 """End-to-end corpus curation pipeline: the pass a 100 TB pretraining
 corpus takes between extraction and training, composed from the
-operators/quality.py gates into ONE DataFrame plan:
+functions/ gate primitives into ONE DataFrame plan:
 
     documents → quality gate (token floor + Gopher repetition caps)
               → learned classifier gate (hashed-feature linear score)
@@ -29,21 +29,15 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from ..functions.hashing import md5_long, smp_threshold_u64
-from ..functions.text import TOKENS_EXPR
-from ..operators.classifier import CLS_THRESHOLD, classifier_score_expr
-from ..operators.curation import MAX_SHARED_CHUNK_BP
-from ..operators.quality import (BENCH_MOD, CHUNK_TOKENS, CONTAM_NGRAM,
-                                 MAX_DUP_BIGRAM_BP, MAX_TOP_TOKEN_BP,
-                                 MIN_TOKENS, SMP_RATES, token_shingle_expr,
+from ..functions.classifier import CLS_THRESHOLD, classifier_score_expr
+from ..functions.hashing import (SMP_RATES, content_md5, md5_long,
+                                 stratified_keep)
+from ..functions.quality import (BENCH_MOD, CONTAM_NGRAM, MAX_DUP_BIGRAM_BP,
+                                 MAX_SHARED_CHUNK_BP, MAX_TOP_TOKEN_BP,
+                                 MIN_TOKENS, gopher_fail,
                                  with_repetition_signals)
+from ..functions.text import TOKENS_EXPR, token_chunks_expr, token_shingle_expr
 from . import artifact
-
-# gate thresholds (documented defaults; callers override per corpus):
-# MIN_TOKENS / MAX_TOP_TOKEN_BP / MAX_DUP_BIGRAM_BP live in
-# operators/quality.py (txt_gate_agreement shares them) and
-# MAX_SHARED_CHUNK_BP in operators/curation.py (the funnel's oracle SQL
-# embeds it)
 
 # v2: learned hashed-feature classifier gate after the heuristic gate
 CURATOR_VERSION = "curate-v2"
@@ -55,7 +49,7 @@ def curation_flags(docs: DataFrame,
     NULL = kept. Priority: quality > classifier > exact_dup > chunk_dup
     > contaminated > sampled_out — each doc reports the FIRST gate that
     rejects it. `classifier` is the learned hashed-feature gate
-    (operators/classifier.py): a map-only integer score riding the same
+    (functions/classifier.py): a map-only integer score riding the same
     base scan as the Gopher signals, engine-exact by construction.
 
     sample_rates overrides the per-language keep rates (default
@@ -72,9 +66,7 @@ def curation_flags(docs: DataFrame,
     # exact dedup: first-wins inside each normalized-text hash group
     wdup = Window.partitionBy("text_hash").orderBy("doc_id")
     exact = (docs.select(
-        "doc_id",
-        F.md5(F.regexp_replace(F.lower(F.col("text")), r"[ \t\n\x0b\f\r]+", " "))
-        .alias("text_hash"))
+        "doc_id", content_md5(F.col("text")).alias("text_hash"))
         .withColumn("dup_rank", F.row_number().over(wdup))
         .select("doc_id", "dup_rank"))
 
@@ -87,12 +79,7 @@ def curation_flags(docs: DataFrame,
     chunks = (toks.join(exact.where(F.col("dup_rank") == 1)
                         .select("doc_id"), "doc_id")
               .selectExpr(
-                  "doc_id",
-                  f"explode(transform("
-                  f" sequence(0, cast(ceil(size(t) / {CHUNK_TOKENS}.0)"
-                  f" AS int) - 1),"
-                  f" i -> array_join(slice(t, i * {CHUNK_TOKENS} + 1,"
-                  f" {CHUNK_TOKENS}), ' '))) AS chunk")
+                  "doc_id", f"explode({token_chunks_expr('t')}) AS chunk")
               .select("doc_id", md5_long(F.col("chunk")).alias("chunk_hash")))
     cstats = (chunks.groupBy("chunk_hash")
               .agg(F.min("doc_id").alias("min_doc")))
@@ -117,35 +104,23 @@ def curation_flags(docs: DataFrame,
               .withColumn("contaminated", F.lit(True)))
 
     # stratified sampling decision (md5 bridge, engine-exact)
-    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":strat")))
-    sampled_in = F.lit(False)
-    for lang, rate in rates.items():
-        thr = smp_threshold_u64(rate) - 2**63
-        sampled_in = F.when(F.col("lang") == lang,
-                            h < F.lit(thr)).otherwise(sampled_in)
+    sampled_in = stratified_keep(rates)
 
     # Gopher repetition signals ride the base scan MAP-SIDE (sort-run
-    # fold per doc, quality.with_repetition_signals) — a per-doc stat
+    # fold per doc, with_repetition_signals) — a per-doc stat
     # needs no corpus shuffle and no join back
-    bp = lambda a, b: F.floor(F.col(a).cast("double") / F.col(b) * 10000)  # noqa: E731
     flagged = (with_repetition_signals(
                    docs.selectExpr("doc_id", "lang", "text",
                                    f"{TOKENS_EXPR} AS t"))
                .select("doc_id", "lang", "text",
                        sampled_in.alias("sampled_in"),
-                       F.col("n_tok"),
-                       bp("max_tok", "n_tok").alias("top_token_bp"),
-                       bp("dup_bg", "n_bg").alias("dup_bigram_bp"),
+                       gopher_fail().alias("quality_fail"),
                        F.expr(classifier_score_expr("t"))
                        .alias("cls_score"))
                .join(exact, "doc_id", "left")
                .join(share, "doc_id", "left")
                .join(contam, "doc_id", "left"))
-    quality_fail = (F.col("n_tok").isNull()
-                    | (F.col("n_tok") < MIN_TOKENS)
-                    | (F.col("top_token_bp") > MAX_TOP_TOKEN_BP)
-                    | (F.col("dup_bigram_bp") > MAX_DUP_BIGRAM_BP))
-    reason = (F.when(quality_fail, "quality")
+    reason = (F.when(F.col("quality_fail"), "quality")
               .when(F.col("cls_score") <= CLS_THRESHOLD, "classifier")
               .when(F.col("dup_rank") > 1, "exact_dup")
               .when(F.coalesce(F.col("shared_bp"), F.lit(0))

@@ -39,16 +39,15 @@ import time
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from ..functions.hashing import md5_long, smp_threshold_u64
+from ..functions.frames import min_label_components
+from ..functions.hashing import content_md5, md5_long, smp_threshold_u64
 from ..functions.minhash import (lsh_candidate_pairs, minhash_bands,
                                  minhash_sig_stage)
-from ..functions.text import TOKENS_EXPR
-from ..operators.corpus import min_label_components
-from ..operators.curation import (CONV_BENCH_RATE, CONV_KEEP_RATE,
-                                  MIN_CONV_CHARS)
-from ..operators.extraction import DEGEN_DUP_BP, DEGEN_MIN_TOKENS
-from ..operators.quality import (CONTAM_NGRAM, token_shingle_expr,
+from ..functions.quality import (CONTAM_NGRAM, CONV_BENCH_RATE,
+                                 CONV_KEEP_RATE, DEGEN_DUP_BP,
+                                 DEGEN_MIN_TOKENS, MIN_CONV_CHARS,
                                  with_repetition_signals)
+from ..functions.text import TOKENS_EXPR, token_shingle_expr
 from . import artifact
 
 CONV_CURATOR_VERSION = "curate-convs-v3"
@@ -87,9 +86,7 @@ def conv_curation_flags(t: DataFrame,
         _track.append(conv)
     quality_fail = ((F.col("n_user") < 1)
                     | (F.col("total_chars") < MIN_CONV_CHARS))
-    wdup = Window.partitionBy(
-        F.md5(F.regexp_replace(F.lower(F.col("doc")), r"[ \t\n\x0b\f\r]+", " "))
-    ).orderBy("conv_id")
+    wdup = Window.partitionBy(content_md5(F.col("doc"))).orderBy("conv_id")
     # persisted: the near-dup signature stage, the two ids joins, and
     # the final flag projection all branch from flags0 — uncached, each
     # re-runs the exact-dup window shuffle (caller action releases it;

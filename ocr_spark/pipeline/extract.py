@@ -367,6 +367,10 @@ def run_extract_job(spark: SparkSession, transcripts: DataFrame,
 
     Resume: with resume=True, buckets already recorded in the manifest are
     skipped (anti-join on the stable bucket id) and new output is appended.
+    Without resume, a run_id that already has manifest rows raises
+    ValueError before any Spark job, so a run catalog never sums two runs
+    under one id. Both manifest reads use pyarrow, not Spark
+    (artifact.read_part_column); an unreadable part raises, naming it.
     The manifest is committed *after* the data write succeeds — a crashed
     run leaves at worst orphan data files for incomplete buckets, which a
     re-run overwrites (dynamic partition overwrite), never a manifest entry
@@ -377,20 +381,19 @@ def run_extract_job(spark: SparkSession, transcripts: DataFrame,
     data_dir = os.path.join(output_dir, "extracted_turns")
     manifest_dir = os.path.join(output_dir, "_checkpoints")
 
-    done: list[int] = []
-    if resume and os.path.isdir(manifest_dir):
-        try:
-            done = [r.bucket for r in
-                    spark.read.parquet(manifest_dir).select("bucket")
-                    .distinct().collect()]
-        except Exception:
-            done = []
+    done: set = set()
+    if resume:
+        done = artifact.read_part_column(manifest_dir, "bucket")
+    elif run_id in artifact.read_part_column(manifest_dir, "run_id"):
+        raise ValueError(f"run_id {run_id!r} already has manifest rows in "
+                         f"{manifest_dir}: pass a new run_id, or resume=True")
 
     pending = transcripts
     if done:
         # prefilter on the same stable bucket expression the output is
         # partitioned by — completed buckets never reach the Python stage
-        pending = transcripts.where(~bucket_expr(n_buckets).isin(done))
+        pending = transcripts.where(
+            ~bucket_expr(n_buckets).isin(sorted(done)))
 
     tally = spark.sparkContext.accumulator({}, BucketTally())
     extracted = extract_turns(pending, salt_partitions=salt_partitions,

@@ -29,7 +29,7 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.quality import N_TRAIN_SHARDS, shard_key_column
+from ..functions.hashing import N_TRAIN_SHARDS, shard_key_column
 from . import artifact
 
 SHARDS_VERSION = "shards-v1"

@@ -21,15 +21,72 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..functions.frames import spread_partitions
-from ..operators.corpus import train_bpe_merge_list
+from ..functions.frames import pack_placement_from, spread_partitions
 from . import artifact
 
 TOKENIZER_VERSION = 1
 
 _MANIFEST = "_tokenizer_manifest.json"
 _DATA = "merges"
+
+
+def train_bpe_merge_list(docs: DataFrame,
+                         n_merges: int) -> list[tuple[int, str, str, int]]:
+    """The bpe_train_merges training loop over an arbitrary documents
+    frame, returning the ordered merge list — shared by the registry
+    query and the persisted tokenizer artifact (pipeline/tokenizer.py);
+    two copies of the argmax/tie/rewrite rules would drift."""
+    vocab = (docs.select(F.explode(F.split(F.lower(
+                 F.coalesce(F.col("text"), F.lit(""))), r"[ \t\n\x0b\f\r]+")).alias("w"))
+             .where(F.col("w") != "")
+             .groupBy("w").agg(F.count("*").cast("long").alias("freq"))
+             .select(F.split("w", "").alias("syms"), "freq")
+             .localCheckpoint(eager=True))
+
+    merges = []
+    for rank in range(1, n_merges + 1):
+        lhs = F.slice(F.col("syms"), 1, F.size("syms") - 1)
+        rhs = F.slice(F.col("syms"), 2, F.size("syms") - 1)
+        best = (vocab.where(F.size("syms") >= 2)
+                .select("freq",
+                        F.explode(F.zip_with(
+                            lhs, rhs,
+                            lambda a, b: F.struct(a.alias("l"),
+                                                  b.alias("r")))).alias("p"))
+                .groupBy("p.l", "p.r")
+                .agg(F.sum("freq").alias("n"))
+                .orderBy(F.desc("n"), "l", "r")
+                .limit(1).collect())
+        if not best:
+            break
+        bl, br, bn = best[0]["l"], best[0]["r"], int(best[0]["n"])
+        merges.append((rank, bl, br, bn))
+
+        def _merge_batch(batches, bl=bl, br=br):
+            for pdf in batches:
+                out = []
+                for syms in pdf["syms"]:
+                    s = list(syms)
+                    i, acc = 0, []
+                    while i < len(s):
+                        if i + 1 < len(s) and s[i] == bl and s[i + 1] == br:
+                            acc.append(bl + br)
+                            i += 2
+                        else:
+                            acc.append(s[i])
+                            i += 1
+                    out.append(acc)
+                pdf = pdf.copy()
+                pdf["syms"] = out
+                yield pdf
+
+        vocab = (vocab.mapInPandas(_merge_batch, schema=vocab.schema)
+                 .localCheckpoint(eager=True))
+
+    return merges
+
 
 
 def train_tokenizer(spark: SparkSession, docs: DataFrame, output_dir: str,
@@ -157,7 +214,6 @@ def pack_with_tokenizer(spark: SparkSession, tok_dir: str,
     places every document in its (lang, source) shard's fixed-length
     sequence stream. Same output contract as smp_pack_sequences, with
     n_tokens_b now meaning BPE tokens."""
-    from ..operators.quality import pack_placement_from
     counted = apply_tokenizer(spark, tok_dir, docs,
                               passthrough=("lang", "source"), sort=False)
     return pack_placement_from(counted, token_col="n_bpe_tokens")

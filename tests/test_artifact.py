@@ -12,8 +12,9 @@ artifacts wherever a case applies:
   which invalidated it first) — never a truncated file.
 
 Plus the plain-manifest writers' rerun contract (shards), and the
-extraction job's per-run manifest part: a crash before its rename, and
-parts of both writers mixed in one `_checkpoints/`."""
+extraction job's per-run manifest part: a crash before its rename, parts
+of both writers mixed in one `_checkpoints/`, and the pyarrow
+manifest reads that refuse an unreadable part or a reused run id."""
 
 import json
 import os
@@ -297,3 +298,67 @@ def test_extract_manifest_mixes_spark_written_and_committed_parts(
         (m["buckets_written"], m["rows_in"], m["rows_out"])
     assert (runs[1].n_buckets, runs[1].rows_in, runs[1].rows_rejected) == \
         (2, 10, 2)
+
+
+def _jobs_in(spark, group, fn):
+    """Run fn under a fresh Spark job group; the group's job ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_extract_resume_raises_on_unreadable_manifest_part(spark, tmp_path):
+    """resume=True reads the committed buckets with pyarrow: a part it
+    cannot read raises an error naming the file instead of silently
+    redoing every bucket."""
+    from ocr_spark.pipeline.extract import run_extract_job
+    from ocr_spark.sources.synthetic import synthesize_transcripts
+    out = str(tmp_path / "extract")
+    mdir = os.path.join(out, "_checkpoints")
+    os.makedirs(mdir)
+    with open(os.path.join(mdir, "part-x.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    t = synthesize_transcripts(spark, 12, 4)
+
+    def resume():
+        with pytest.raises(ValueError, match="part-x.parquet"):
+            run_extract_job(spark, t, out, run_id="r2", resume=True,
+                            salt_partitions=2, n_buckets=4)
+
+    assert _jobs_in(spark, "resume-unreadable", resume) == []
+
+
+def test_extract_rejects_a_reused_run_id(spark, tmp_path):
+    """A non-resume run whose run_id already has manifest rows raises
+    before any Spark job; a resume keeps the id and still runs."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ocr_spark.pipeline import artifact
+    from ocr_spark.pipeline.extract import MANIFEST_SCHEMA, run_extract_job
+    from ocr_spark.sources.synthetic import synthesize_transcripts
+    out = str(tmp_path / "extract")
+    mdir = os.path.join(out, "_checkpoints")
+    artifact.commit_part(mdir, pa.Table.from_pylist(
+        [{"run_id": "r1", "source_snapshot_id": "", "bucket": 0,
+          "rows_in": 1, "rows_out": 1, "rows_rejected": 0,
+          "extractor_version": "0.0.9", "wall_ms": 1,
+          "committed_at": None}],
+        schema=to_arrow_schema(MANIFEST_SCHEMA)))
+    t = synthesize_transcripts(spark, 12, 4).where(
+        "conv_id != 'conv-000000'")
+
+    def rerun():
+        with pytest.raises(ValueError, match="r1"):
+            run_extract_job(spark, t, out, run_id="r1", salt_partitions=2,
+                            n_buckets=4)
+
+    assert _jobs_in(spark, "reused-run-id", rerun) == []
+    m = run_extract_job(spark, t, out, run_id="r1", resume=True,
+                        salt_partitions=2, n_buckets=4)
+    assert m["run_id"] == "r1" and m["buckets_skipped"] == 1
+

@@ -28,7 +28,7 @@ BATCH = [
 
 
 def test_build_check_no_false_negatives(spark, tmp_path):
-    from ocr_spark.operators.corpus import BLOOM_K
+    from ocr_spark.functions.hashing import BLOOM_K
     from ocr_spark.pipeline.bloom_filter import (build_bloom_filter,
                                                  check_batch, read_manifest)
     d = str(tmp_path / "bloom")
@@ -53,7 +53,7 @@ def test_null_text_never_false_negative(spark, tmp_path):
     """NULL text coalesces to '' on BOTH the build and probe paths (the
     shared bloom_probe_frame): a NULL-text doc folded in is found again,
     and no NULL position row ever pollutes the bits or the fill gauge."""
-    from ocr_spark.operators.corpus import BLOOM_K
+    from ocr_spark.functions.hashing import BLOOM_K
     from ocr_spark.pipeline.bloom_filter import (_DATA, build_bloom_filter,
                                                  check_batch)
     d = str(tmp_path / "bloom")
@@ -77,7 +77,7 @@ def test_missing_manifest_is_no_filter(spark, tmp_path):
 
 
 def test_append_makes_next_crawl_see_the_batch(spark, tmp_path):
-    from ocr_spark.operators.corpus import BLOOM_K
+    from ocr_spark.functions.hashing import BLOOM_K
     from ocr_spark.pipeline.bloom_filter import (append_batch,
                                                  build_bloom_filter,
                                                  check_batch)

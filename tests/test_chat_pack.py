@@ -57,7 +57,8 @@ def test_chat_pack_seqs_conserve_tokens_and_masks(spark):
     token of the placement, fills every non-tail sequence to
     PACK_SEQ_LEN, and its segment counts match a direct replay of the
     boundary structure."""
-    from ocr_spark.operators.quality import PACK_SEQ_LEN, smp_chat_pack_seqs
+    from ocr_spark.functions.frames import PACK_SEQ_LEN
+    from ocr_spark.operators.quality import smp_chat_pack_seqs
     turns = _placement(spark).collect()
     seqs = smp_chat_pack_seqs(spark, SF_DIR).collect()
 

@@ -1,4 +1,4 @@
-"""Learned hashed-feature quality classifier (operators/classifier.py):
+"""Learned hashed-feature quality classifier (functions/classifier.py):
 retrain determinism, out-of-vocab generalization, the three-surface
 differential (Spark expression == DuckDB oracle == Python twin) on
 planted adversarial docs incl. \\x0b whitespace, funnel-stage
@@ -24,7 +24,7 @@ def _spam_perm_doc() -> str:
     the 10-token spam vocabulary — 30 tokens, top-token 1000bp, zero
     repeated bigrams, so it passes EVERY Gopher cap; only the learned
     vocabulary gate can reject it."""
-    from ocr_spark.operators.classifier import _SPAM_TOKENS
+    from ocr_spark.functions.classifier import _SPAM_TOKENS
     p1 = list(_SPAM_TOKENS)
     p2 = [_SPAM_TOKENS[i] for i in (0, 2, 4, 6, 8, 1, 3, 5, 7, 9)]
     p3 = list(reversed(_SPAM_TOKENS))
@@ -40,7 +40,7 @@ def test_retrain_reproduces_shipped_model():
     """Deterministic training: retraining on the in-module corpus
     reproduces the shipped integer weights bit for bit, and the shipped
     model separates its own corpus perfectly."""
-    from ocr_spark.operators import classifier as C
+    from ocr_spark.functions import classifier as C
     w, b, wd = C.train_quality_classifier(C.training_corpus())
     assert (w, b, wd) == (C.CLS_WEIGHTS, C.CLS_BIAS, C.CLS_DIV_W)
     corpus = C.training_corpus()
@@ -53,7 +53,7 @@ def test_generalizes_out_of_vocabulary():
     spam vocabulary), never memorized vocabulary: clean text over words
     the trainer NEVER saw scores positive; junk shapes score negative —
     including the structurally-clean spam the Gopher gates pass."""
-    from ocr_spark.operators.classifier import score_text
+    from ocr_spark.functions.classifier import score_text
     assert score_text(_OOV_CLEAN) > 0
     # German-register unseen vocabulary
     assert score_text(
@@ -75,8 +75,8 @@ def test_three_surface_differential_planted(spark, tmp_path):
     — the Java-\\s class both engines now spell out), NBSP staying
     INSIDE a token, CJK utf-8 md5 buckets, empty text, NULL text
     (NULL score on both engines), floods and clean text."""
+    from ocr_spark.functions.classifier import featurize, score_text
     from ocr_spark.operators.classifier import (_txt_classifier_sql,
-                                                featurize, score_text,
                                                 txt_classifier_score)
     texts = [
         _OOV_CLEAN,

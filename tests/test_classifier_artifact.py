@@ -17,7 +17,7 @@ pytestmark = pytest.mark.skipif(
 
 
 def _builtin_labeled(spark, partitions):
-    from ocr_spark.operators.classifier import training_corpus
+    from ocr_spark.functions.classifier import training_corpus
     return (spark.createDataFrame(training_corpus(),
                                   "text string, label int")
             .repartition(partitions))
@@ -43,7 +43,7 @@ def test_score_with_model_matches_python_twin(spark, tmp_path):
     """The artifact's generated expression scores EXACTLY like a
     driver-side replay on the loaded integer constants — over the full
     sf0.001 documents table."""
-    from ocr_spark.operators.classifier import featurize
+    from ocr_spark.functions.classifier import featurize
     from ocr_spark.pipeline.classifier import (load_model, score_with_model,
                                                train_classifier)
     mdir = str(tmp_path / "m")
@@ -68,7 +68,7 @@ def test_inverted_labels_flip_the_gate(spark, tmp_path):
     model (the perceptron's updates mirror), so clean text gates OUT and
     floods gate IN — proof the scoring path reads the committed weights
     and nothing else."""
-    from ocr_spark.operators.classifier import (CLS_THRESHOLD, score_text,
+    from ocr_spark.functions.classifier import (CLS_THRESHOLD, score_text,
                                                 training_corpus)
     from ocr_spark.pipeline.classifier import score_with_model, train_classifier
     inverted = [(t, 1 - y) for t, y in training_corpus()]

@@ -169,7 +169,7 @@ def test_conv_contamination_gate_planted(spark, tmp_path):
     import hashlib
 
     from ocr_spark.functions.hashing import smp_threshold_u64
-    from ocr_spark.operators.curation import CONV_BENCH_RATE
+    from ocr_spark.functions.quality import CONV_BENCH_RATE
     from ocr_spark.pipeline.curate_convs import conv_curation_flags
     from ocr_spark.sources.synthetic import agent_transcripts
 
@@ -302,7 +302,7 @@ def test_conv_neardup_cluster_first_wins_not_one_hop(spark):
     import hashlib
 
     from ocr_spark.functions.hashing import smp_threshold_u64
-    from ocr_spark.operators.curation import CONV_BENCH_RATE
+    from ocr_spark.functions.quality import CONV_BENCH_RATE
     from ocr_spark.pipeline.curate_convs import conv_curation_flags
 
     c_text = " ".join(f"tok{i}" for i in range(40))

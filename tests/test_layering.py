@@ -3,11 +3,11 @@ order.
 
 Layers, lowest first: kernels/, functions/ and sources/ are shared homes
 and import nothing from the query or engine layers; operators/ is the
-query registry; pipeline/, streaming/ and jobs/ compose public operator
-builders but never reach into the registry's private helpers, and
-streaming/ imports nothing from operators/ at all. The registry itself
-is assembled in operators/__init__.py alone, so its order cannot depend
-on which module a process imports first.
+query registry; pipeline/, streaming/ and jobs/ compose the shared homes
+and import nothing from operators/, at module level or in a function
+body. The registry itself is assembled in operators/__init__.py alone,
+so its order cannot depend on which module a process imports first, and
+every registered query has a measured cost in __spark_entry__.py.
 
 Every top-level def in ocr_spark/ is reached from non-test code, except
 the short list of kept names below, each with its reason.
@@ -115,24 +115,25 @@ def test_leaf_layers_import_no_upper_layer():
                        "query or engine layers:\n" + "\n".join(found))
 
 
-def test_streaming_imports_no_operators():
+def test_engine_layers_import_no_operators():
     found = []
     for path in _scanned_files():
         mod = _module_name(path)
-        if not _in_layer(mod, ("streaming",)):
+        if not (_in_layer(mod, ("pipeline", "streaming"))
+                or mod.startswith("jobs.")):
             continue
-        for target, name, _node in _imports(path):
+        for target, name, node in _imports(path):
             full = target if name is None else f"{target}.{name}"
             if _in_layer(target, ("operators",)) or _in_layer(
                     full, ("operators",)):
-                found.append(f"{mod} -> {full}")
-    assert not found, ("streaming/ must not import the query layer:\n"
-                       + "\n".join(found))
+                found.append(f"{mod}:{node.lineno} -> {full}")
+    assert not found, ("pipeline/, streaming/ and jobs/ must not import "
+                       "the query layer:\n" + "\n".join(found))
 
 
 # Top-level defs no non-test code reaches, kept on purpose.
 KEPT_UNREACHED = {
-    "ocr_spark.operators.classifier.score_text":
+    "ocr_spark.functions.classifier.score_text":
         "Python reference twin the classifier tests compare the Spark "
         "expression and the DuckDB oracle against",
     "ocr_spark.kernels.readability._text_of":
@@ -327,3 +328,9 @@ def test_registry_order_independent_of_import_order():
     assert names[-2:] == ["curate_funnel", "conv_curate_funnel"]
     for first, run in runs.items():
         assert run["names"] == names, first
+
+
+def test_every_query_has_a_measured_cost():
+    import __spark_entry__
+    from ocr_spark.operators import ALL_QUERIES
+    assert set(ALL_QUERIES) == set(__spark_entry__._MEASURED_COST)

@@ -220,6 +220,7 @@ def test_dup_clusters_match_union_find(spark):
     """dd_dup_clusters (iterative min-label propagation) must produce the
     same components as a driver-side union-find over the same edge set —
     planted duplicate groups included."""
+    from ocr_spark.functions import frames
     from ocr_spark.operators import corpus as C
 
     rows = []
@@ -242,12 +243,12 @@ def test_dup_clusters_match_union_find(spark):
         clusters = C.dd_dup_clusters(spark, d).collect()
         # force the distributed min-label loop and require the identical
         # result: both paths must converge to the same fixpoint
-        small = C.SMALL_GRAPH_MAX_PAIRS
-        C.SMALL_GRAPH_MAX_PAIRS = -1
+        small = frames.SMALL_GRAPH_MAX_PAIRS
+        frames.SMALL_GRAPH_MAX_PAIRS = -1
         try:
             clusters_dist = C.dd_dup_clusters(spark, d).collect()
         finally:
-            C.SMALL_GRAPH_MAX_PAIRS = small
+            frames.SMALL_GRAPH_MAX_PAIRS = small
         assert sorted(map(tuple, clusters)) == sorted(map(tuple,
                                                           clusters_dist))
         lsh = C.dd_minhash_lsh(spark, d).collect()
@@ -477,15 +478,16 @@ def test_lsh_topk_recall_and_lift(spark):
     case): recall must clear 0.5 AND beat random sampling of the same
     probed fraction by >= 1.3x — the evidence it exploits angular
     structure rather than just reading 34% of the corpus."""
+    from ocr_spark.functions.frames import N_LSH_MULTIPROBE, N_LSH_TOPK_PLANES
     from ocr_spark.operators import corpus as C
     bf = {(r.query_id, r.cand_id)
           for r in C.sim_cosine_topk(spark, SF_DIR).collect()}
     lsh = {(r.query_id, r.cand_id)
            for r in C.sim_lsh_topk(spark, SF_DIR).collect()}
     recall = len(bf & lsh) / len(bf)
-    n_buckets = 1 << C.N_LSH_TOPK_PLANES
+    n_buckets = 1 << N_LSH_TOPK_PLANES
     probed = sum(1 for m in range(n_buckets)
-                 if bin(m).count("1") <= C.N_LSH_MULTIPROBE) / n_buckets
+                 if bin(m).count("1") <= N_LSH_MULTIPROBE) / n_buckets
     assert recall >= 0.5, f"LSH recall {recall:.2f} below floor"
     assert recall >= 1.3 * probed, \
         f"no lift over random: recall {recall:.2f} vs probed {probed:.2f}"

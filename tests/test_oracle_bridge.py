@@ -286,9 +286,9 @@ def test_classifier_sql_matches_python(texts):
     adversarial docs: every Java-\\s whitespace separator (incl. \\x0b),
     leading/trailing empty tokens, case folding, CJK bytes in the md5
     bucket fold, and the empty document."""
-    from ocr_spark.operators.classifier import (CLS_THRESHOLD, featurize,
-                                                _txt_classifier_sql,
+    from ocr_spark.functions.classifier import (CLS_THRESHOLD, featurize,
                                                 score_text)
+    from ocr_spark.operators.classifier import _txt_classifier_sql
     got = _con(texts).execute(_txt_classifier_sql()).fetchall()
     expected = []
     for doc_id, t in enumerate(texts):

@@ -346,7 +346,7 @@ def test_training_shards_deterministic_ordered_balanced(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from ocr_spark.operators.quality import N_TRAIN_SHARDS
+    from ocr_spark.functions.hashing import N_TRAIN_SHARDS
     from ocr_spark.pipeline.shards import write_training_shards
 
     docs = spark.createDataFrame(

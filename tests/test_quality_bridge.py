@@ -12,9 +12,9 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ocr_spark.operators.quality import (CHUNK_TOKENS, DD_CHUNK_SQL,
-                                         SMP_BUDGET_SQL, SMP_TOKEN_BUDGET,
-                                         TXT_REPETITION_SQL)
+from ocr_spark.functions.text import CHUNK_TOKENS
+from ocr_spark.operators.quality import (DD_CHUNK_SQL, SMP_BUDGET_SQL,
+                                         SMP_TOKEN_BUDGET, TXT_REPETITION_SQL)
 
 _WORD = st.text(
     alphabet="abcdefghij0123456789汉字表", min_size=1, max_size=4)

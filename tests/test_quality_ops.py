@@ -213,7 +213,7 @@ def test_run_fold_matches_counter_reference(spark):
     import random
     from collections import Counter
 
-    from ocr_spark.operators.quality import with_repetition_signals
+    from ocr_spark.functions.quality import with_repetition_signals
 
     rng = random.Random(7)
     docs = [
@@ -246,7 +246,8 @@ def test_pack_sequences_placement_invariants(spark, tmp_path):
     and be invariant to input partitioning."""
     import os
 
-    from ocr_spark.operators.quality import PACK_SEQ_LEN, smp_pack_sequences
+    from ocr_spark.functions.frames import PACK_SEQ_LEN
+    from ocr_spark.operators.quality import smp_pack_sequences
 
     docs = [(i, " ".join(f"w{j}" for j in range(37 * (i % 9 + 1))),
              ["en", "de"][i % 2], "s", 0) for i in range(60)]
@@ -281,7 +282,8 @@ def test_pack_assembly_tiles_exactly(spark, tmp_path):
     PACK_SEQ_LEN."""
     import os
 
-    from ocr_spark.operators.quality import PACK_SEQ_LEN, smp_pack_assembly
+    from ocr_spark.functions.frames import PACK_SEQ_LEN
+    from ocr_spark.operators.quality import smp_pack_assembly
 
     docs = [(i, " ".join(f"w{j}" for j in range(41 * (i % 7 + 1))),
              ["en", "de"][i % 2], "s", 0) for i in range(50)]
@@ -316,7 +318,7 @@ def test_pack_two_level_scan_matches_naive_window(spark):
     from pyspark.sql.window import Window as W
 
     from ocr_spark.functions.text import TOKENS_EXPR
-    from ocr_spark.operators.quality import PACK_SEQ_LEN, pack_placement_from
+    from ocr_spark.functions.frames import PACK_SEQ_LEN, pack_placement_from
 
     def naive(docs):
         d = docs.selectExpr(
@@ -526,8 +528,8 @@ def test_chunk_dedup_strip_semantics(spark, tmp_path):
     """Planted shared chunks: the globally-first occurrence survives, all
     later occurrences strip, a fully-duplicated doc disappears, and the
     reassembled text preserves within-doc chunk order."""
-    from ocr_spark.operators.quality import (
-        dd_chunk_dedup_strip, CHUNK_TOKENS)
+    from ocr_spark.functions.text import CHUNK_TOKENS
+    from ocr_spark.operators.quality import dd_chunk_dedup_strip
     shared = " ".join(f"s{i}" for i in range(CHUNK_TOKENS))
     uniq_a = " ".join(f"a{i}" for i in range(CHUNK_TOKENS))
     uniq_b = " ".join(f"b{i}" for i in range(CHUNK_TOKENS))
@@ -582,7 +584,7 @@ def test_gate_agreement_off_diagonal_cells(spark, tmp_path):
 
     import duckdb
 
-    from ocr_spark.operators.classifier import _SPAM_TOKENS
+    from ocr_spark.functions.classifier import _SPAM_TOKENS
     from ocr_spark.operators.quality import (_txt_gate_agreement_sql,
                                              txt_gate_agreement)
 
@@ -616,7 +618,7 @@ def _keyed_repetition(spark, sf_dir):
     """Independent keyed explode+groupBy construction of the repetition
     signals — the differential reference for the map-only sort-run fold
     that txt_repetition / curation_flags share
-    (operators/quality.with_repetition_signals). Kept in the test so the
+    (functions/quality.with_repetition_signals). Kept in the test so the
     two algorithms keep checking each other."""
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .where(F.col("doc_id").isNotNull())

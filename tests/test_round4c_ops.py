@@ -164,9 +164,8 @@ def test_degenerate_scan_randomized_differential(spark, tmp_path):
     import re
     from collections import Counter
 
-    from ocr_spark.operators.extraction import (DEGEN_DUP_BP,
-                                                DEGEN_MIN_TOKENS,
-                                                conv_degenerate_scan)
+    from ocr_spark.functions.quality import DEGEN_DUP_BP, DEGEN_MIN_TOKENS
+    from ocr_spark.operators.extraction import conv_degenerate_scan
 
     rng = random.Random(42)
     vocab = ["a", "b", "ab", "ba", "x"]

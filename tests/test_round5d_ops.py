@@ -44,7 +44,7 @@ def test_bloom_no_false_negatives_and_both_branches(spark):
     assert any(r.exact_dup for r in rows)
     assert any(not r.exact_dup for r in rows)
     # n_hits is bounded by the hash-function count
-    from ocr_spark.operators.corpus import BLOOM_K
+    from ocr_spark.functions.hashing import BLOOM_K
     assert all(0 <= r.n_hits <= BLOOM_K for r in rows)
 
 
@@ -65,9 +65,8 @@ def test_bloom_python_twin_arithmetic(spark):
     """Independent Python implementation of the Bloom arithmetic (m
     sizing, md5-long positions, sign-safe mod) over DuckDB-computed
     content hashes must reproduce Spark's n_hits exactly."""
-    from ocr_spark.operators.corpus import (BLOOM_EXTRA_BITS, BLOOM_K,
-                                            INCR_BATCH_RESIDUE,
-                                            dd_bloom_check)
+    from ocr_spark.functions.hashing import BLOOM_EXTRA_BITS, BLOOM_K
+    from ocr_spark.operators.corpus import INCR_BATCH_RESIDUE, dd_bloom_check
     con = _duck_docs_con()
     norm = ("md5(regexp_replace(lower({t}), '[ \\t\\n\\x0b\\f\\r]+',"
             " ' ', 'g'))")
@@ -494,9 +493,8 @@ def test_cosine_hist_python_twin(spark):
     """Independent pair generation + binning over the SAME coded frame:
     collect codes and vectors, enumerate equal-code pairs in Python with
     the sequential dot fold, and compare the histogram exactly."""
-    from ocr_spark.operators.corpus import (EMB_HIST_BINS, _emb,
-                                            emb_cosine_hist,
-                                            lsh_code_frame)
+    from ocr_spark.functions.frames import lsh_code_frame
+    from ocr_spark.operators.corpus import EMB_HIST_BINS, _emb, emb_cosine_hist
     import math
     coded = lsh_code_frame(_emb(spark, SF_DIR)).collect()
     by_code = defaultdict(list)

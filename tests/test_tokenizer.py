@@ -111,7 +111,7 @@ def test_pack_with_tokenizer_places_at_bpe_granularity(spark, tmp_path):
     exclusive prefix / sequence arithmetic exact."""
     from pyspark.sql import functions as F
 
-    from ocr_spark.operators.quality import PACK_SEQ_LEN
+    from ocr_spark.functions.frames import PACK_SEQ_LEN
     from ocr_spark.pipeline.tokenizer import (load_merges,
                                               pack_with_tokenizer,
                                               segment_word, train_tokenizer)
